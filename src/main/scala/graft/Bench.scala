@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times the headline queries at SPARK_GRAFT_SF_DIR
   * and prints one JSON line. Warm-up is REGISTRATION ONLY (r16-opt):
@@ -15,19 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // chmod-fork-free local FS (r17-opt: programmatic install,
-      // replacing the classpath core-site.xml — see FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.FastLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.fs.FastLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // default: the headline set (the driver's contract); explicit args
     // select any catalog entries for ad-hoc measurement
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.headline

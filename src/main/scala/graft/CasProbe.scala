@@ -38,16 +38,8 @@ object CasProbe {
   private val Appends = 10
   private val Merges = 3
 
-  private def session(tag: String): SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      // chmod-fork-free local FS (r17-opt: programmatic install,
-      // replacing the classpath core-site.xml — see FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.FastLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.fs.FastLocalFs")
-      .appName(s"cas-probe-$tag").getOrCreate()
+  private def session(): SparkSession = {
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -67,7 +59,7 @@ object CasProbe {
   }
 
   def worker(dir: String, id: Int, appends: Int, merges: Int): Unit = {
-    val spark = session(s"w$id")
+    val spark = session()
     for (b <- 0 until appends)
       retrying(s"append w$id b$b") {
         SnapshotOps.commitAppend(spark, dir,
@@ -109,7 +101,7 @@ object CasProbe {
     }
     val dir = java.nio.file.Files.createTempDirectory("cas_probe")
       .toString + "/t"
-    val spark = session("driver")
+    val spark = session()
     SnapshotOps.commitAppend(spark, dir,
       spark.range(1).select(lit(-1).as("worker"), lit(-1).as("batch"),
         col("id").as("i"), lit(0L).as("v")))                       // v1

@@ -251,17 +251,7 @@ object GoldSuite {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // chmod-fork-free local FS (r17-opt: programmatic install,
-      // replacing the classpath core-site.xml — see FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.FastLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.fs.FastLocalFs")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val casing = args.contains("--casing")
     val normalized = args.contains("--normalized")

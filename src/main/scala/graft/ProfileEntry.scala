@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Ad-hoc per-entry job profiler (optimization tooling — NOT part of
@@ -16,19 +15,7 @@ object ProfileEntry {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileEntry <entry> [entry ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // chmod-fork-free local FS (r17-opt: programmatic install,
-      // replacing the classpath core-site.xml — see FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.FastLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.fs.FastLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     Queries.prep(spark, sfDir)
     Tables.names.foreach(n => spark.table(n).count())
     val qs = SparkEntry.queries

@@ -137,31 +137,41 @@ object DuckRewriter {
   /** P12: a SELECT-list alias referenced in WHERE (DuckDB lateral alias)
     * is inlined — Spark resolves lateral aliases in SELECT, not WHERE.
     * Conservative: only function/bracket expressions aliased to a name
-    * that is not a real column of the FROM table. */
-  private val selectFromRe: Regex =
-    """(?is)\ASELECT\s+(.*?)\s+FROM\s+([A-Za-z_][\w.]*)\s+WHERE\s+(.+)\z""".r
+    * that is not a real column of the FROM table, and only when SELECT,
+    * FROM and WHERE are clauses of the same (outermost) query over a
+    * bare table name — a derived table's or a subquery's select list is
+    * another scope, and its aliases must not leak into this WHERE. */
+  private val selectRe: Regex = """(?is)\ASELECT\s+""".r
+  private val bareTableRe: Regex = """(?s)\A\s*([A-Za-z_][\w.]*)\s*\z""".r
   private val aliasItemRe: Regex =
     """(?is)(.+?[)\]])\s+(?:AS\s+)?([A-Za-z_]\w*)\z""".r
   private def lateralAliases(s: String,
-      schemaOf: String => Option[Seq[String]]): String = s match {
-    case selectFromRe(sel, tbl, where) =>
-      val realCols = schemaOf(tbl).getOrElse(Seq.empty)
-        .map(_.toLowerCase).toSet
-      var newWhere = where
-      splitTopLevel(sel).foreach { item =>
-        item.trim match {
-          case aliasItemRe(expr, alias)
-              if !realCols(alias.toLowerCase) &&
-                expr.exists(c => c == '(' || c == '[') =>
-            newWhere = ("""(?i)\b""" + Regex.quote(alias) + """\b""").r
-              .replaceAllIn(newWhere,
-                Regex.quoteReplacement(s"($expr)"))
-          case _ =>
+      schemaOf: String => Option[Seq[String]]): String = {
+    val fi = topLevelKeyword(s, "FROM")
+    val wi = if (fi < 0) -1 else topLevelKeyword(s, "WHERE", fi)
+    if (wi < 0 || selectRe.findPrefixOf(s).isEmpty) return s
+    val sel = selectRe.replaceFirstIn(s.substring(0, fi), "").trim
+    val where = s.substring(wi + "WHERE".length).trim
+    s.substring(fi + "FROM".length, wi) match {
+      case bareTableRe(tbl) if sel.nonEmpty && where.nonEmpty =>
+        val realCols = schemaOf(tbl).getOrElse(Seq.empty)
+          .map(_.toLowerCase).toSet
+        var newWhere = where
+        splitTopLevel(sel).foreach { item =>
+          item.trim match {
+            case aliasItemRe(expr, alias)
+                if !realCols(alias.toLowerCase) &&
+                  expr.exists(c => c == '(' || c == '[') =>
+              newWhere = ("""(?i)\b""" + Regex.quote(alias) + """\b""").r
+                .replaceAllIn(newWhere,
+                  Regex.quoteReplacement(s"($expr)"))
+            case _ =>
+          }
         }
-      }
-      if (newWhere == where) s
-      else s"SELECT $sel FROM $tbl WHERE $newWhere"
-    case _ => s
+        if (newWhere == where) s
+        else s"SELECT $sel FROM $tbl WHERE $newWhere"
+      case _ => s
+    }
   }
 
   /** Index of the first DEPTH-0 occurrence of word `kw` in masked text

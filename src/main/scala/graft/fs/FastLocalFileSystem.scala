@@ -27,8 +27,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * the same net permissions for a single-user engine, minus the fork.
   *
   * Installed PROGRAMMATICALLY via `spark.hadoop.fs.file.impl` in the
-  * engine's own SparkSession builders (Bench, Verify, GoldSuite,
-  * ProfileEntry/ExplainEntry, probes, test fixtures) — r17-opt,
+  * engine's one session builder, `graft.GraftSession.local` (every
+  * main and the test fixture build their session there) — r17-opt,
   * replacing the r16 classpath `core-site.xml`: a resource named
   * core-site.xml inside the jar can shadow (or be shadowed by) a
   * deployment's real HADOOP_CONF_DIR core-site.xml depending on
@@ -60,7 +60,7 @@ final class FastLocalFileSystem
   * a DelegateToFileSystem(RawLocalFileSystem), with the no-chmod raw
   * FS swapped in. Installed via
   * `spark.hadoop.fs.AbstractFileSystem.file.impl` alongside the
-  * FileSystem-side conf in the same session builders. */
+  * FileSystem-side conf in `graft.GraftSession.local`. */
 final class FastRawLocalFs(uri: java.net.URI,
     conf: org.apache.hadoop.conf.Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(

@@ -9,15 +9,20 @@ import org.apache.spark.sql.classic.ClassicConversions
   * registry so they resolve from SQL text (and via
   * `functions.call_function` from the DataFrame API).
   *
-  * Registration is per-session and idempotent. We register into the
-  * existing session (rather than requiring `spark.sql.extensions` at
-  * build time) so the driver-owned Verify/Bench entry points work with any
-  * session they hand us; `GraftExtensions` offers the declarative route
-  * for users who do control session construction.
+  * [[register]] is the only way these names get into a session. It
+  * works on any existing session (no `spark.sql.extensions` at build
+  * time), so callers that bring their own session, and those built by
+  * `graft.GraftSession`, go through the same path. Registration is
+  * per-session and idempotent: a name already bound to a graft function
+  * is left alone, so repeated calls (every `Engine` and every
+  * `Queries.prep`) do not re-register it.
   */
 object GraftFunctions {
 
   type Builder = Seq[Expression] => Expression
+
+  /** `ExpressionInfo` class name that marks a graft registration. */
+  private val Origin = "graft.functions"
 
   private val all: Seq[(String, Int, Builder)] = Seq(
     ("duck_index", 2, args => DuckIndex(args(0), args(1))),
@@ -118,9 +123,13 @@ object GraftFunctions {
     val registry =
       ClassicConversions.castToImpl(spark).sessionState.functionRegistry
     all.foreach { case (name, arity, builder) =>
-      registry.registerFunction(
+      // re-binding a name that is already ours only logs Spark's
+      // "replaced a previously registered function" WARN
+      val ours = registry.lookupFunction(FunctionIdentifier(name))
+        .exists(_.getClassName == Origin)
+      if (!ours) registry.registerFunction(
         FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
+        new ExpressionInfo(Origin, name),
         (args: Seq[Expression]) => {
           require(args.length == arity,
             s"$name expects $arity argument(s), got ${args.length}")

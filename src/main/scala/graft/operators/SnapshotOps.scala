@@ -501,7 +501,7 @@ object SnapshotOps {
     *    a literal per-file `NOT IN` filter (one whole-stage-codegen
     *    pipeline, no broadcast build), the common selective-delete
     *    case;
-    *  - `files` — the literal tier additionally caps how many DV'd
+    *  - [[DvLiteralFiles]] — the literal tier also caps how many DV'd
     *    FILES it will split into per-file scans (each single-file
     *    frame pays its own listing/planning constant; a 1-file 2k-DV
     *    wins literal 321 vs 419 ms, an all-8-files DV loses 2-6x —
@@ -509,30 +509,26 @@ object SnapshotOps {
     *  - `bcast` — above this many positions the anti-join stops
     *    broadcasting and falls back to a shuffle join (a DV that
     *    large is compaction debt, not a broadcast candidate). */
-  private final case class DvTiers(literal: Long, bcast: Long, files: Int)
+  private final case class DvTiers(literal: Long, bcast: Long)
 
-  /** Thread-confined tier overrides (spec/probe scaffolding —
+  /** Thread-confined row-threshold overrides (spec scaffolding —
     * production never overrides). A DynamicVariable, NOT a global var:
     * plan construction reads the boundaries on the calling thread, so
     * a concurrent reader in the same JVM can never plan its DV
-    * application with a probe's foreign thresholds (the r12 global-var
+    * application with a spec's foreign thresholds (the r12 global-var
     * data race the advisor flagged). */
   private val dvTiers =
-    new scala.util.DynamicVariable[DvTiers](DvTiers(1L << 16, 1L << 20, 4))
+    new scala.util.DynamicVariable[DvTiers](DvTiers(1L << 16, 1L << 20))
 
   private[graft] def DvLiteralRows: Long = dvTiers.value.literal
   private[graft] def DvBroadcastRows: Long = dvTiers.value.bcast
-  private[graft] def DvLiteralFiles: Int = dvTiers.value.files
+  private[graft] val DvLiteralFiles: Int = 4
 
-  /** Run `body` with the DV tier boundaries overridden ON THIS THREAD
-    * (restored on exit; invisible to concurrent work). `files`
-    * defaults to the current cap so row-threshold-only callers keep
-    * production file-cap behavior; DvScaleProbe lifts it explicitly
-    * when forcing the literal tier on an all-files DV. */
-  private[graft] def withDvThresholds[T](literal: Long, bcast: Long,
-      files: Int = -1)(body: => T): T =
-    dvTiers.withValue(DvTiers(literal, bcast,
-      if (files >= 0) files else dvTiers.value.files))(body)
+  /** Run `body` with the DV row thresholds overridden ON THIS THREAD
+    * (restored on exit; invisible to concurrent work). */
+  private[graft] def withDvThresholds[T](literal: Long, bcast: Long)(
+      body: => T): T =
+    dvTiers.withValue(DvTiers(literal, bcast))(body)
 
   /** Driver cache of small DVs' collected positions, keyed by the
     * (immutable) DV file list — repeated reads of a snapshot pay the

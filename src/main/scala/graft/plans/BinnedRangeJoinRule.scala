@@ -34,8 +34,8 @@ import org.apache.spark.sql.types._
   *
   * Opt-in via `spark.graft.rangeJoin.binWidth` (positive number, in the
   * units of the point column; seconds for timestamps). Unset = rule is
-  * inert. Registered by [[graft.GraftExtensions]]; on an existing
-  * session call [[BinnedRangeJoinRule.install]].
+  * inert. [[BinnedRangeJoinRule.install]] is the one way the rule gets
+  * into a session.
   *
   * A width far below the typical interval length would explode each
   * interval onto a huge bin array (ultimately hitting Spark's array
@@ -175,8 +175,7 @@ object BinnedRangeJoinRule {
   val MaxBinsConf = "spark.graft.rangeJoin.maxBinsPerInterval"
   val DefaultMaxBins = 4096L
 
-  /** Adds the rule to an already-built session (the builder path is
-    * `spark.sql.extensions=graft.GraftExtensions`). Idempotent. */
+  /** Adds the rule to an already-built session. Idempotent. */
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[BinnedRangeJoinRule]))

@@ -1,11 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.classic.ClassicConversions
 import graft.dialect.DuckRewriter
 
-/** Pure string-level tests of the DuckDB→Spark dialect front-end
-  * (SURVEY.md §4 item 1). */
-class DuckRewriterSpec extends AnyFunSuite {
+/** String-level tests of the DuckDB→Spark dialect front-end
+  * (SURVEY.md §4 item 1). Only the window-filter shapes at the end touch
+  * Spark: their output must parse and return the rows of a hand-written
+  * Spark query. */
+class DuckRewriterSpec extends SparkSpecBase {
 
   private val schema: String => Option[Seq[String]] = {
     case "customer" =>
@@ -165,5 +167,55 @@ class DuckRewriterSpec extends AnyFunSuite {
       "QUALIFY rank() OVER (ORDER BY a) <= 3 LIMIT 5")
     assert(out == "SELECT a FROM (SELECT a, (rank() OVER (ORDER BY a) <= 3)" +
       " AS __qualify FROM t) __q WHERE __qualify LIMIT 5")
+  }
+
+  // A window filter over a query with its own WHERE: the outer SELECT
+  // and the inner WHERE are different scopes, so the lateral alias pass
+  // must not inline `rn` across the derived table (that leaves an
+  // unbalanced WHERE). `None`: the rewrite leaves the text as it is.
+  private val windowFilters = Seq(
+    "QUALIFY on an alias + WHERE" ->
+      ("SELECT a, row_number() OVER (PARTITION BY a ORDER BY b) AS rn " +
+        "FROM t WHERE b > 0 QUALIFY rn <= 2",
+       Some("SELECT a, rn FROM (SELECT a, row_number() OVER (PARTITION BY" +
+        " a ORDER BY b) AS rn FROM t WHERE b > 0) __q WHERE rn <= 2")),
+    "QUALIFY on a direct window call + WHERE" ->
+      ("SELECT a, b FROM t WHERE b > 0 " +
+        "QUALIFY row_number() OVER (PARTITION BY a ORDER BY b) <= 2",
+       Some("SELECT a, b FROM (SELECT a, b, (row_number() OVER (PARTITION" +
+        " BY a ORDER BY b) <= 2) AS __qualify FROM t WHERE b > 0) __q" +
+        " WHERE __qualify")),
+    "outer WHERE over an aliased windowed derived table" ->
+      ("SELECT a, rn FROM (SELECT a, row_number() OVER (PARTITION BY a " +
+        "ORDER BY b) AS rn FROM t WHERE b > 0) s WHERE rn <= 2", None),
+    "outer WHERE over an unaliased windowed derived table" ->
+      ("SELECT a, rn FROM (SELECT a, row_number() OVER (PARTITION BY a " +
+        "ORDER BY b) AS rn FROM t WHERE b > 0) WHERE rn <= 2", None))
+
+  windowFilters.foreach { case (shape, (in, expected)) =>
+    test(s"window filter, $shape: rewrite is valid Spark SQL") {
+      val out = rw(in)
+      assert(out == expected.getOrElse(in))
+      ClassicConversions.castToImpl(spark).sessionState.sqlParser
+        .parsePlan(out)
+    }
+  }
+
+  test("window filters over a WHERE return the rows Spark's own form does") {
+    import spark.implicits._
+    Seq((1, 5, 0), (1, 3, 0), (1, 4, 0), (1, -1, 0), (2, 7, 0), (2, 0, 0),
+      (3, 2, 0)).toDF("a", "b", "c").createOrReplaceTempView("t")
+    try {
+      val ranked = "SELECT a, b, row_number() OVER (PARTITION BY a " +
+        "ORDER BY b) AS rn FROM t WHERE b > 0"
+      def rows(q: String) = spark.sql(q).collect().toSet
+      val rankRows = rows(s"SELECT a, rn FROM ($ranked) x WHERE rn <= 2")
+      val keptRows = rows(s"SELECT a, b FROM ($ranked) x WHERE rn <= 2")
+      assert(rankRows.size == 4 && keptRows.size == 4)
+      windowFilters.foreach { case (shape, (in, _)) =>
+        val want = if (shape.contains("direct")) keptRows else rankRows
+        assert(rows(rw(in)) == want, shape)
+      }
+    } finally spark.catalog.dropTempView("t")
   }
 }

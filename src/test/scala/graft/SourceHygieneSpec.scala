@@ -7,13 +7,18 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-hygiene gates that protect oracle agreement from invisible
-  * edits: a raw U+00A0/U+2003 inside a string literal (q163's Unicode
-  * whitespace-collapse exercise) is indistinguishable from a space in
-  * most editors, so any whitespace-normalizing pass would silently
-  * desynchronize the Spark literal from the DuckDB oracle's
+/** Source-hygiene gates.
+  *
+  * Invisible edits: a raw U+00A0/U+2003 inside a string literal (q163's
+  * Unicode whitespace-collapse exercise) is indistinguishable from a
+  * space in most editors, so any whitespace-normalizing pass would
+  * silently desynchronize the Spark literal from the DuckDB oracle's
   * chr(160)||chr(8195). Such characters must appear as visible \\u
-  * escapes only. */
+  * escapes only.
+  *
+  * One session builder: sessions are built in `GraftSession.scala` and
+  * nowhere else, so a session conf (the fast local FS keys above all)
+  * is set in one place. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val invisibleWhitespace: Set[Int] =
@@ -25,21 +30,39 @@ class SourceHygieneSpec extends AnyFunSuite {
       .filter(p => p.toString.endsWith(".scala"))
       .toSeq
 
+  /** (file, 1-based line number, line) for every Scala source line. */
+  private lazy val sourceLines: Seq[(Path, Int, String)] =
+    (scalaSources("src/main/scala") ++ scalaSources("src/test/scala"))
+      .flatMap { p =>
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+          .linesIterator.zipWithIndex.map { case (l, i) => (p, i + 1, l) }
+      }
+
   test("no raw invisible non-ASCII whitespace bytes in any Scala source") {
-    val offenders =
-      (scalaSources("src/main/scala") ++ scalaSources("src/test/scala"))
-        .flatMap { p =>
-          val text =
-            new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          text.linesIterator.zipWithIndex.collect {
-            case (line, i) if line.exists(c =>
-                invisibleWhitespace.contains(c.toInt)) =>
-              val codes = line.filter(c =>
-                invisibleWhitespace.contains(c.toInt))
-                .map(c => f"U+${c.toInt}%04X").mkString(",")
-              s"$p:${i + 1}: $codes"
-          }
-        }
+    val offenders = sourceLines.collect {
+      case (p, n, line) if line.exists(c =>
+          invisibleWhitespace.contains(c.toInt)) =>
+        val codes = line.filter(c => invisibleWhitespace.contains(c.toInt))
+          .map(c => f"U+${c.toInt}%04X").mkString(",")
+        s"$p:$n: $codes"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("sessions are built only in GraftSession") {
+    // spelled in pieces so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val fsKey = "spark.hadoop" + ".fs.file.impl"
+    // FastLocalFileSystem's scaladoc may still name the key it documents
+    def docOfFs(p: Path, line: String) =
+      p.getFileName.toString == "FastLocalFileSystem.scala" &&
+        line.trim.startsWith("*")
+    val offenders = sourceLines.collect {
+      case (p, n, line) if p.getFileName.toString != "GraftSession.scala" &&
+          (line.contains(builder) ||
+            (line.contains(fsKey) && !docOfFs(p, line))) =>
+        s"$p:$n: ${line.trim}"
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

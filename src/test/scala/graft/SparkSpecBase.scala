@@ -6,22 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole test run (Spark startup is ~5 s;
   * per-suite sessions would dominate test time). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // chmod-fork-free local FS (r17-opt: programmatic install,
-      // replacing the classpath core-site.xml — see FastLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.FastLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.fs.FastLocalFs")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

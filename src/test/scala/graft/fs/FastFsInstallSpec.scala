@@ -6,8 +6,8 @@ import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem}
 import graft.SparkSpecBase
 
 /** r17-opt: the chmod-fork-free local FS is installed PROGRAMMATICALLY
-  * (spark.hadoop.fs.file.impl + fs.AbstractFileSystem.file.impl in the
-  * engine's session builders), not via a classpath core-site.xml. Two
+  * (both Hadoop FS keys set by `graft.GraftSession.local`, the engine's
+  * one session builder), not via a classpath core-site.xml. Two
   * properties pinned here:
   *  1. a session that opts in resolves BOTH Hadoop FS APIs to the fast
   *     variants — FileSystem (data/manifest writes) AND
