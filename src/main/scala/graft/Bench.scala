@@ -106,7 +106,7 @@ object Bench {
     }
     val hot = results.collect {
       case (k, mn, _, true) if floors.get(k).exists(f => mn > 2.5 * f) =>
-        "\"" + k + "\""
+        Json.str(k)
     }.mkString("[", ",", "]")
     // floors_loaded makes an empty hot list self-describing: 0 means
     // "no floors found (cwd/env), nothing was adjudicated", not
@@ -121,13 +121,13 @@ object Bench {
     // (observed 5-60x on this host), so a polluted min is flagged in the
     // artifact rather than discovered by cross-referencing later
     val qjson = results.map { case (k, mn, _, ok) =>
-      "\"" + k + "\":" + (if (ok) mn else -1) }
+      Json.str(k) + ":" + (if (ok) mn else -1) }
       .mkString("{", ",", "}")
     val qmax = results.map { case (k, _, mx, ok) =>
-      "\"" + k + "\":" + (if (ok) mx else -1) }
+      Json.str(k) + ":" + (if (ok) mx else -1) }
       .mkString("{", ",", "}")
     val noisy = results.collect {
-      case (k, mn, mx, true) if mn > 0 && mx / mn > 4 => "\"" + k + "\"" }
+      case (k, mn, mx, true) if mn > 0 && mx / mn > 4 => Json.str(k) }
       .mkString("[", ",", "]")
     // the spike-heal retry samples, emitted SEPARATELY so the artifact
     // distinguishes 2-sample from 3-sample mins (the advisor's r12
@@ -136,40 +136,16 @@ object Bench {
     // alone, and sees exactly which entries got the third sample
     val retryJson = names.zipWithIndex.flatMap { case (name, i) =>
       retried.get(i).collect { case (t, true) =>
-        "\"" + name + "\":" + t }
+        Json.str(name) + ":" + t }
     }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, _, false) => Json.str(k) }
       .mkString("[", ",", "]")
     val total = results.collect { case (_, mn, _, true) => mn }.sum
     val nOk = results.count(_._4)
-    // run-level noise flag (r9): a UNIFORMLY loaded host inflates every
-    // min by a similar factor, producing a clean per-entry `noisy: []`
-    // story around numbers that are all 2-4x steady state (exactly the
-    // r8 q42/q178/q193 confusion). Per-entry spread can't see that; a
-    // comparison against the recorded quiet-host floor for the default
-    // headline set (BASELINE.md carries the measurement history) can.
-    // Only emitted for the full default set at the driver's sf — an
-    // args-selected subset has no recorded floor.
-    // floor re-measured whenever the headline set changes; r10
-    // 90-entry set (q211/q226/q227 + q234-q255 promoted): r9's 65-entry
-    // floor 44.9 s + 32.4 s best-of-pass sum for the first 23 additions
-    // + 1.9 s q254 + 2.8 s q255 (scoped interleaved runs, BASELINE.md
-    // Round-10) ≈ 82 s; rounded down to 81.0. r11 95-entry set adds
-    // q256 2.6 s + q257 6.5 s + q258 4.2 s + q259 2.9 s + q260 2.9 s
-    // (commit-latency lifecycle entries, scoped quiet runs, BASELINE.md
-    // Round-11) → 100.0. r12 96-entry set adds q262 5.0 s (three
-    // streaming drains + commits, scoped quiet run) → 105.0; r12
-    // 97-entry set adds q263 5.9 s (four change-feed drains + a MOR +
-    // a COW commit, scoped quiet run) → 110.0; r12 98-entry set adds
-    // q264 5.4 s (4-DML lifecycle + 4-span table_changes read,
-    // scoped quiet run) → 115.0; r13 100-entry set adds q265 3.0 s +
-    // q266 3.7 s and makes q257 (expire + retention read) and q264
-    // (timestamp pin) heavier — two full quiet runs measured 138.8 s
-    // (run 2, run_noisy false) and best-of-both 136.3 s → 130.0;
-    // r14 102-entry set adds q267 1.2 s + q268 2.0 s — two full quiet
-    // runs 125.9/133.4 s, best-of-both per-entry sum 121.4 s → 118.0
-    // (the set also got FASTER: the near-dup drain parallelization and
-    // the count-gate removal outweigh the two additions)
+    // run-level noise flag (r9): total > 1.3x the recorded quiet-host
+    // floor of the full default set at sf0.1 (a subset has none). Why,
+    // and how each floor was measured: BASELINE.md, "Bench quiet-floor
+    // history".
     val quietFloorSec: Option[Double] =
       if (args.isEmpty && sfDir.endsWith("sf0.1")) Some(118.0) else None
     val runNoisy = quietFloorSec.map { floor =>
@@ -186,10 +162,10 @@ object Bench {
     def goldGate(key: String)(run: => Seq[GoldSuite.EntryResult]): String =
       try {
         val checked = run.filterNot(_.skipped)
-        s""","$key":"${checked.count(_.ok)}/${checked.length}""""
+        s""","$key":${Json.str(s"${checked.count(_.ok)}/${checked.length}")}"""
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $key replay failed: ${e.getMessage}")
-        s""","$key":"error""""
+        s""","$key":${Json.str("error")}"""
       }
     val goldCasing =
       if (args.nonEmpty) ""
@@ -207,9 +183,10 @@ object Bench {
     // for the 95-entry set), queries_max second (spike visibility), and
     // the FINAL line is the SHORT summary — small enough that no tail
     // window can split it, so the driver's parse always gets a total.
-    val summary = s"""{"metric":"total","value":$total,"unit":"sec","ok":$nOk,"n_queries":${results.size},"noisy":$noisy,"hot":$hot,"floors_loaded":$floorsLoaded,"failed":$failed$runNoisy$goldCasing,"sf":"$sfDir"}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","ok":$nOk,"n_queries":${results.size},"queries":$qjson,"noisy":$noisy,"hot":$hot,"floors_loaded":$floorsLoaded,"failed":$failed$runNoisy,"sf":"$sfDir"}""")
-    println(s"""{"metric":"detail_max","value":$total,"unit":"sec","queries_max":$qmax,"queries_retry":$retryJson,"sf":"$sfDir"}""")
+    val sf = Json.str(sfDir)
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","ok":$nOk,"n_queries":${results.size},"noisy":$noisy,"hot":$hot,"floors_loaded":$floorsLoaded,"failed":$failed$runNoisy$goldCasing,"sf":$sf}"""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","ok":$nOk,"n_queries":${results.size},"queries":$qjson,"noisy":$noisy,"hot":$hot,"floors_loaded":$floorsLoaded,"failed":$failed$runNoisy,"sf":$sf}""")
+    println(s"""{"metric":"detail_max","value":$total,"unit":"sec","queries_max":$qmax,"queries_retry":$retryJson,"sf":$sf}""")
     println(summary)
     spark.stop()
   }

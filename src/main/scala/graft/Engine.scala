@@ -379,6 +379,11 @@ class Engine(val spark: SparkSession) {
   def snapshotDir(name: String): Option[String] =
     snapshotDirs.get(norm(name))
 
+  /** [[snapshotDir]] for a history verb, which fails without one. */
+  private def historyDir(verb: String, name: String): String =
+    snapshotDir(name).getOrElse(throw new IllegalArgumentException(
+      s"$verb: '$name' has no committed snapshot history"))
+
   /** Parquet cannot hold these — such tables stay on the lazy path. */
   private def snapshotable(df: DataFrame): Boolean = {
     import org.apache.spark.sql.types._
@@ -1700,8 +1705,7 @@ class Engine(val spark: SparkSession) {
       // chain alone — version, commit millis, data files, data rows,
       // DV positions, visible rows (data − DV)
       import spark.implicits._
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"table_snapshots: '$name' has no committed snapshot history"))
+      val dir = historyDir("table_snapshots", name)
       import graft.operators.SnapshotOps
       // surviving versions only: expire_snapshots may have dropped a
       // prefix of the chain
@@ -1724,8 +1728,7 @@ class Engine(val spark: SparkSession) {
       // manifest chain up front — a half-open read past the current
       // version must fail loudly, not return a silent partial feed.
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"table_changes: '$name' has no committed snapshot history"))
+      val dir = historyDir("table_changes", name)
       val (from, to) = (fromS.toInt, toS.toInt)
       val cur = SnapshotOps.currentVersion(dir)
       require(from >= 1 && from <= to && to <= cur,
@@ -1785,8 +1788,7 @@ class Engine(val spark: SparkSession) {
       // metadata — commitRestore writes no data file), preserving
       // history and rebinding the table to the restored snapshot
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"restore_table: '$name' has no committed snapshot history"))
+      val dir = historyDir("restore_table", name)
       lastCommit(norm(name)) = SnapshotOps.commitRestore(dir, verS.toInt)
       registerSnapshot(name, dir)
       empty()
@@ -1801,8 +1803,7 @@ class Engine(val spark: SparkSession) {
       // AS-OF resolution enumerate only surviving manifests.
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"expire_snapshots: '$name' has no committed snapshot history"))
+      val dir = historyDir("expire_snapshots", name)
       val (m, f) = SnapshotOps.vacuum(dir, keepVersions = keepS.toInt,
         graceMs = 0L)
       Seq((m.toLong, f.toLong)).toDF("manifests_dropped", "files_deleted")
@@ -1814,8 +1815,7 @@ class Engine(val spark: SparkSession) {
       // loudly, never silently re-resolve
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"expire_snapshots: '$name' has no committed snapshot history"))
+      val dir = historyDir("expire_snapshots", name)
       val zone = java.time.ZoneId.of(
         spark.conf.get("spark.sql.session.timeZone",
           java.util.TimeZone.getDefault.getID))
@@ -1830,8 +1830,7 @@ class Engine(val spark: SparkSession) {
       // only files no manifest references — lost CAS races' leftovers
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"vacuum: '$name' has no committed snapshot history"))
+      val dir = historyDir("vacuum", name)
       val keep = math.max(1,
         SnapshotOps.availableVersions(dir).size)
       val (m, f) = SnapshotOps.vacuum(dir, keepVersions = keep,
@@ -1843,8 +1842,7 @@ class Engine(val spark: SparkSession) {
       // from the manifest only — zero data files opened
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"table_partitions: '$name' has no committed snapshot history"))
+      val dir = historyDir("table_partitions", name)
       SnapshotOps.partitionValues(dir, SnapshotOps.currentVersion(dir))
         .toDF("transform", "value", "files", "rows")
     case PragmaMaintenance(name) =>
@@ -1855,8 +1853,7 @@ class Engine(val spark: SparkSession) {
       // statement (SET auto_compact = true).
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(throw new IllegalArgumentException(
-        s"table_maintenance: '$name' has no committed snapshot history"))
+      val dir = historyDir("table_maintenance", name)
       val live = SnapshotOps.maintenanceDebt(dir,
         SnapshotOps.currentVersion(dir))
       val d = maintenanceFlags.get(norm(name))
@@ -1890,9 +1887,7 @@ class Engine(val spark: SparkSession) {
     case PragmaDropTag(name, tag) =>
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(
-        throw new IllegalArgumentException(
-          s"drop_tag: '$name' has no committed snapshot history"))
+      val dir = historyDir("drop_tag", name)
       Seq(SnapshotOps.dropTag(dir, tag)).toDF("dropped")
     case PragmaCreateBranch(name, br) =>
       import graft.operators.SnapshotOps
@@ -1907,17 +1902,13 @@ class Engine(val spark: SparkSession) {
     case PragmaDropBranch(name, br) =>
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(
-        throw new IllegalArgumentException(
-          s"drop_branch: '$name' has no committed snapshot history"))
+      val dir = historyDir("drop_branch", name)
       unbindBranch(name, br)
       Seq(SnapshotOps.dropBranchFork(dir, br)).toDF("dropped")
     case PragmaFastForward(name, br) =>
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(
-        throw new IllegalArgumentException(
-          s"fast_forward: '$name' has no committed snapshot history"))
+      val dir = historyDir("fast_forward", name)
       val c = SnapshotOps.fastForward(dir, br)
       lastCommit(norm(name)) = c
       unbindBranch(name, br) // the fork is consumed
@@ -1927,9 +1918,7 @@ class Engine(val spark: SparkSession) {
     case PragmaTableRefs(name) =>
       import spark.implicits._
       import graft.operators.SnapshotOps
-      val dir = snapshotDir(name).getOrElse(
-        throw new IllegalArgumentException(
-          s"table_refs: '$name' has no committed snapshot history"))
+      val dir = historyDir("table_refs", name)
       val tags = SnapshotOps.listTags(dir)
         .map { case (n, v) => (n, "tag", v.toLong) }
       val brs = SnapshotOps.listBranchForks(dir).map { b =>

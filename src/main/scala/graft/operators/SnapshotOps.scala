@@ -181,6 +181,11 @@ object SnapshotOps {
     "@" + FileEntry(gp.toString, bounds, blooms).line
   }
 
+  /** A commit's new files as its one group line (none for no files). */
+  private def groupLines(tableDir: String,
+      entries: Seq[FileEntry]): Seq[String] =
+    if (entries.nonEmpty) Seq(groupLine(tableDir, entries)) else Nil
+
   /** One non-meta manifest line: a flat file entry or a group
     * reference. `ref` is the line's own stats (the file's, or the
     * group's aggregated envelope); `entries` expands to the per-file
@@ -907,63 +912,60 @@ object SnapshotOps {
       .map(_._2.map(localPath).toSet)
 
   def commitDelete(spark: SparkSession, tableDir: String, cond: Column,
-      maxRetries: Int = 5,
-      candidates: (Int, Seq[String]) = null): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+      candidates: (Int, Seq[String]) = null): Committed =
+    casCommit("commitDelete", tableDir, RescanBudget) { (base, conflicts) =>
       val units = dataUnits(tableDir, base)
       val entries = units.flatMap(_.entries)
       require(entries.nonEmpty, s"commitDelete on empty table $tableDir")
-      val dvs = deleteEntries(tableDir, base)
-      val dir = newDataDir(tableDir)
+      val noMatch = Skip(Committed(base, entries.size, 0, conflicts,
+        skipped = true))
       // manifest-pruned position discovery (r14, the commitRewrite
       // discipline): scan only files whose bounds may match; stale-
       // version hints are dropped, never trusted
       val candSet = candidateKeep(candidates, base)
-      if (candSet.exists(_.isEmpty)) // proof of no matches at `base`
-        return Committed(base, entries.size, 0, conflicts, skipped = true)
-      val mapping = columnMapping(tableDir, base)
-      lazy val fullSchema = org.apache.spark.sql.types.StructType(
-        readUnitsVisible(spark, tableDir, units, dvs,
-          eqDeleteUnits(tableDir, base),
-          mergeSchema = mapping.nonEmpty).schema)
-      // DV size tracks matched rows — a few output files is plenty of
-      // write parallelism, and keeps the manifest line count bounded.
-      // The match scans VISIBLE rows only (eq-deletes applied), so a
-      // DV never re-names a row an equality delete already removed.
-      // `cond` references LOGICAL names — evaluate on the mapped view
-      // (identity for never-evolved tables).
-      logicalView(readUnitsVisible(spark, tableDir, units, dvs,
-          eqDeleteUnits(tableDir, base), tagged = true,
-          mergeSchema = mapping.nonEmpty,
-          anchor = if (candSet.isDefined && mapping.nonEmpty)
-            fullSchema else null,
-          keep = candSet.map(cs => (e: FileEntry) =>
-            cs.contains(localPath(e.path)))
-            .getOrElse((_: FileEntry) => true)),
-          mapping, extra = Seq("__file", "__pos"))
-        .where(cond)
-        .select(col("__file").as(DvFileCol), col("__pos").as(DvPosCol))
-        .coalesce(4)
-        .write.parquet(dir)
-      // the `~_file` bloom scopes future reads' anti-join to the files
-      // this DV actually names — see readFilesDv
-      val written = entriesFor(spark, parquetFilesIn(dir), Seq(DvPosCol),
-        bloomCols = Seq(DvFileCol))
-        .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
-      if (written.isEmpty) // nothing matched: no version burned
-        return Committed(base, entries.size, 0, conflicts, skipped = true)
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        snapshotUnits(tableDir, base).map(_.raw) ++
-        written.map("!" + _.line)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, entries.size, 0, conflicts)
-      conflicts += 1
+      if (candSet.exists(_.isEmpty)) noMatch // proof of no matches at `base`
+      else {
+        val dvs = deleteEntries(tableDir, base)
+        val dir = newDataDir(tableDir)
+        val mapping = columnMapping(tableDir, base)
+        lazy val fullSchema = org.apache.spark.sql.types.StructType(
+          readUnitsVisible(spark, tableDir, units, dvs,
+            eqDeleteUnits(tableDir, base),
+            mergeSchema = mapping.nonEmpty).schema)
+        // DV size tracks matched rows — a few output files is plenty of
+        // write parallelism, and keeps the manifest line count bounded.
+        // The match scans VISIBLE rows only (eq-deletes applied), so a
+        // DV never re-names a row an equality delete already removed.
+        // `cond` references LOGICAL names — evaluate on the mapped view
+        // (identity for never-evolved tables).
+        logicalView(readUnitsVisible(spark, tableDir, units, dvs,
+            eqDeleteUnits(tableDir, base), tagged = true,
+            mergeSchema = mapping.nonEmpty,
+            anchor = if (candSet.isDefined && mapping.nonEmpty)
+              fullSchema else null,
+            keep = candSet.map(cs => (e: FileEntry) =>
+              cs.contains(localPath(e.path)))
+              .getOrElse((_: FileEntry) => true)),
+            mapping, extra = Seq("__file", "__pos"))
+          .where(cond)
+          .select(col("__file").as(DvFileCol), col("__pos").as(DvPosCol))
+          .coalesce(4)
+          .write.parquet(dir)
+        val written = dvEntries(spark, dir)
+        if (written.isEmpty) noMatch // nothing matched: no version burned
+        else Publish(metaLines(snapshotMeta(tableDir, base)) ++
+          snapshotUnits(tableDir, base).map(_.raw) ++
+          written.map("!" + _.line), entries.size, 0)
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitDelete lost $maxRetries version races on $tableDir")
-  }
+
+  /** Entries of the DV files written into `dir`, empty ones dropped;
+    * the `~_file` bloom scopes future reads' anti-join to the files
+    * each DV actually names — see readFilesDv. */
+  private def dvEntries(spark: SparkSession, dir: String): Seq[FileEntry] =
+    entriesFor(spark, parquetFilesIn(dir), Seq(DvPosCol),
+      bloomCols = Seq(DvFileCol))
+      .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
 
   /** Survivor re-wrap for partial rewrites: untouched entries of
     * BROKEN units re-group PER ORIGINAL UNIT, each new group line
@@ -980,6 +982,27 @@ object SnapshotOps {
       else Some(u.seqNo.fold(groupLine(tableDir, surv))(s =>
         groupLine(tableDir, surv) + s"\t$SeqKey=$s..$s"))
     }
+
+  /** The manifest of a partial copy-on-write commit over `base` (data
+    * `units`, DVs `dvs`) that replaced the files in `rewritten` (local
+    * paths) with `written`: base meta (plus the txn watermark), the
+    * units none of whose files was rewritten carried verbatim, broken
+    * units' survivors re-wrapped, the new files as one group, the DVs
+    * consolidated, and the `=` lines carried (they still apply to every
+    * file the rewrite didn't touch). */
+  private def cowLines(spark: SparkSession, tableDir: String, base: Int,
+      units: Seq[ManifestUnit], dvs: Seq[FileEntry], rewritten: Set[String],
+      written: Seq[FileEntry],
+      txn: Option[(String, Long)] = None): Seq[String] = {
+    val kept = (e: FileEntry) => !rewritten.contains(localPath(e.path))
+    val (intact, broken) = units.partition(_.entries.forall(kept))
+    metaLines(withTxn(snapshotMeta(tableDir, base), txn)) ++
+      intact.map(_.raw) ++
+      survivorGroupLines(tableDir, broken, kept) ++
+      groupLines(tableDir, written) ++
+      consolidateDvLines(spark, tableDir, dvs, rewritten) ++
+      snapshotUnits(tableDir, base).filter(_.isEqDelete).map(_.raw)
+  }
 
   /** Transactional EQUALITY DELETE — Iceberg v2's second delete shape,
     * the one [[commitDelete]]'s positional DVs can't give you: DELETE
@@ -1000,7 +1023,7 @@ object SnapshotOps {
     * stats+blooms on its columns land on the line for future
     * metadata-level scoping. Empty keys ⇒ skipped, no version burned. */
   def commitDeleteByKey(spark: SparkSession, tableDir: String,
-      keys: DataFrame, maxRetries: Int = 5): Committed = {
+      keys: DataFrame): Committed = {
     require(keys.columns.nonEmpty, "commitDeleteByKey needs key columns")
     val pre = currentVersion(tableDir)
     require(pre >= 1, s"commitDeleteByKey on empty table $tableDir")
@@ -1028,21 +1051,13 @@ object SnapshotOps {
     val written = entriesFor(spark, parquetFilesIn(dir), numericKeys,
       bloomCols = physKeys.columns.toSeq)
       .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
-    if (written.isEmpty)
-      return Committed(pre, 0, 0, 0, skipped = true)
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
+    if (written.isEmpty) Committed(pre, 0, 0, 0, skipped = true)
+    else casCommit("commitDeleteByKey", tableDir, RescanBudget) { (base, _) =>
+      Publish(metaLines(snapshotMeta(tableDir, base)) ++
         snapshotUnits(tableDir, base).map(_.raw) ++
-        written.map("=" + _.line)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, dataUnits(tableDir, base)
-          .flatMap(_.entries).size, 0, conflicts)
-      conflicts += 1
+        written.map("=" + _.line),
+        dataUnits(tableDir, base).flatMap(_.entries).size, 0)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitDeleteByKey lost $maxRetries version races on $tableDir")
   }
 
   /** Transactional MERGE-ON-READ update — the Iceberg-v2 MOR update
@@ -1053,71 +1068,63 @@ object SnapshotOps {
     * [[commitDelete]], with [[commitRewrite]] as the COW alternative
     * when a file's updated fraction makes rewriting it worthwhile. */
   def commitUpdateMoR(spark: SparkSession, tableDir: String, cond: Column,
-      update: DataFrame => DataFrame, maxRetries: Int = 5,
-      candidates: (Int, Seq[String]) = null): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+      update: DataFrame => DataFrame,
+      candidates: (Int, Seq[String]) = null): Committed =
+    casCommit("commitUpdateMoR", tableDir, RescanBudget) { (base, conflicts) =>
       val units = dataUnits(tableDir, base)
       val entries = units.flatMap(_.entries)
       require(entries.nonEmpty, s"commitUpdateMoR on empty table $tableDir")
-      val dvs = deleteEntries(tableDir, base)
-      val mapping = columnMapping(tableDir, base)
+      val noMatch = Skip(Committed(base, entries.size, 0, conflicts,
+        skipped = true))
       // manifest-pruned match discovery (r14, the commitRewrite
       // discipline): scan only files whose bounds may match; a stale-
       // version hint is dropped, an empty current-version hint is a
       // proof of no matches
       val candSet = candidateKeep(candidates, base)
-      if (candSet.exists(_.isEmpty))
-        return Committed(base, entries.size, 0, conflicts, skipped = true)
-      lazy val fullSchema = org.apache.spark.sql.types.StructType(
-        readUnitsVisible(spark, tableDir, units, dvs,
-          eqDeleteUnits(tableDir, base),
-          mergeSchema = mapping.nonEmpty).schema)
-      // matched VISIBLE rows (eq-deletes applied — an update must
-      // never resurrect an equality-deleted row as new data), read
-      // once; the checkpoint's blocks release before every exit.
-      // cond and `update` see the LOGICAL view (identity un-evolved).
-      val hits = logicalView(readUnitsVisible(spark, tableDir, units,
-          dvs, eqDeleteUnits(tableDir, base), tagged = true,
-          mergeSchema = mapping.nonEmpty,
-          anchor = if (candSet.isDefined && mapping.nonEmpty)
-            fullSchema else null,
-          keep = candSet.map(cs => (e: FileEntry) =>
-            cs.contains(localPath(e.path)))
-            .getOrElse((_: FileEntry) => true)),
-          mapping, extra = Seq("__file", "__pos"))
-        .where(cond).localCheckpoint()
-      val (dvWritten, written) = try {
-        val dvDir = newDataDir(tableDir)
-        hits.select(col("__file").as(DvFileCol),
-          col("__pos").as(DvPosCol))
-          .coalesce(4).write.parquet(dvDir)
-        val dvW = entriesFor(spark, parquetFilesIn(dvDir),
-          Seq(DvPosCol), bloomCols = Seq(DvFileCol))
-          .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
-        if (dvW.isEmpty) (dvW, Seq.empty[FileEntry])
-        else {
-          val dataDir = newDataDir(tableDir)
-          toPhysical(update(hits.drop("__file", "__pos")), mapping)
-            .write.parquet(dataDir)
-          (dvW, entriesFor(spark, parquetFilesIn(dataDir),
-            statsColsOf(entries), bloomColsOf(entries)))
-        }
-      } finally releaseCheckpoint(hits)
-      if (dvWritten.isEmpty) // nothing matched: no version burned
-        return Committed(base, entries.size, 0, conflicts, skipped = true)
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        snapshotUnits(tableDir, base).map(_.raw) ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil) ++
-        dvWritten.map("!" + _.line)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, entries.size, written.size, conflicts)
-      conflicts += 1
+      if (candSet.exists(_.isEmpty)) noMatch
+      else {
+        val dvs = deleteEntries(tableDir, base)
+        val mapping = columnMapping(tableDir, base)
+        lazy val fullSchema = org.apache.spark.sql.types.StructType(
+          readUnitsVisible(spark, tableDir, units, dvs,
+            eqDeleteUnits(tableDir, base),
+            mergeSchema = mapping.nonEmpty).schema)
+        // matched VISIBLE rows (eq-deletes applied — an update must
+        // never resurrect an equality-deleted row as new data), read
+        // once; the checkpoint's blocks release before every exit.
+        // cond and `update` see the LOGICAL view (identity un-evolved).
+        val hits = logicalView(readUnitsVisible(spark, tableDir, units,
+            dvs, eqDeleteUnits(tableDir, base), tagged = true,
+            mergeSchema = mapping.nonEmpty,
+            anchor = if (candSet.isDefined && mapping.nonEmpty)
+              fullSchema else null,
+            keep = candSet.map(cs => (e: FileEntry) =>
+              cs.contains(localPath(e.path)))
+              .getOrElse((_: FileEntry) => true)),
+            mapping, extra = Seq("__file", "__pos"))
+          .where(cond).localCheckpoint()
+        val (dvWritten, written) = try {
+          val dvDir = newDataDir(tableDir)
+          hits.select(col("__file").as(DvFileCol),
+            col("__pos").as(DvPosCol))
+            .coalesce(4).write.parquet(dvDir)
+          val dvW = dvEntries(spark, dvDir)
+          if (dvW.isEmpty) (dvW, Seq.empty[FileEntry])
+          else {
+            val dataDir = newDataDir(tableDir)
+            toPhysical(update(hits.drop("__file", "__pos")), mapping)
+              .write.parquet(dataDir)
+            (dvW, entriesFor(spark, parquetFilesIn(dataDir),
+              statsColsOf(entries), bloomColsOf(entries)))
+          }
+        } finally releaseCheckpoint(hits)
+        if (dvWritten.isEmpty) noMatch // nothing matched: no version burned
+        else Publish(metaLines(snapshotMeta(tableDir, base)) ++
+          snapshotUnits(tableDir, base).map(_.raw) ++
+          groupLines(tableDir, written) ++
+          dvWritten.map("!" + _.line), entries.size, written.size)
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitUpdateMoR lost $maxRetries version races on $tableDir")
-  }
 
   /** DV maintenance run by every rewrite-class commit: positions
     * naming a file in `rewritten` are dropped (that rewrite reads
@@ -1138,10 +1145,7 @@ object SnapshotOps {
     val keep = dv.where(!col(DvFileCol).isin(drop.toSeq: _*))
     val dir = newDataDir(tableDir)
     keep.coalesce(4).write.parquet(dir)
-    entriesFor(spark, parquetFilesIn(dir), Seq(DvPosCol),
-      bloomCols = Seq(DvFileCol))
-      .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
-      .map("!" + _.line)
+    dvEntries(spark, dir).map("!" + _.line)
   }
 
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
@@ -1212,6 +1216,69 @@ object SnapshotOps {
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
     finally Files.deleteIfExists(tmp)
   }
+
+  /** What one commit attempt asks [[casCommit]] to do with its base. */
+  private[graft] sealed trait Outcome
+  /** CAS-publish `lines` as `base + 1`; `reused`/`written` are the
+    * data-file counts the [[Committed]] reports. */
+  private[graft] final case class Publish(lines: Seq[String], reused: Int,
+      written: Int) extends Outcome
+  /** Nothing to publish against this base (an idempotent replay, an
+    * empty match): `committed` is returned as is and no version burns. */
+  private[graft] final case class Skip(committed: Committed) extends Outcome
+
+  private val RelistBudget = 20
+  private val RescanBudget = 5
+
+  /** The one optimistic commit loop every commit verb runs (the Delta
+    * Lake log protocol): read the current version `base`, run the
+    * verb's `attempt(base, conflicts)` against it, and on [[Publish]]
+    * CAS-publish `base + 1` ([[tryPublishLines]]: of two writers
+    * targeting one slot exactly one wins). A lost slot counts a
+    * conflict and re-runs the attempt against the new head, so every
+    * retry rebases — its reads, checks and mapping all re-derive from
+    * the base it publishes over; nothing computed against an older
+    * base is republished. [[Skip]] returns without publishing. When
+    * the last of its `budget` retries loses too, the verb fails with a
+    * ConcurrentModificationException naming it.
+    *
+    * Two budgets: append, overwrite and branch publish write their data
+    * once, before the loop, so a retry only re-lists the base's lines
+    * and is cheap — they get [[RelistBudget]] (20). Every other verb
+    * re-reads its base on each retry, and the data verbs re-scan and
+    * re-write data, so under contention they give up sooner, after
+    * [[RescanBudget]] (5) retries. */
+  private[graft] def casCommit(verb: String, tableDir: String, budget: Int)(
+      attempt: (Int, Int) => Outcome): Committed = {
+    @scala.annotation.tailrec
+    def run(conflicts: Int): Committed =
+      if (conflicts > budget)
+        throw new java.util.ConcurrentModificationException(
+          s"$verb lost $budget version races on $tableDir")
+      else {
+        val base = currentVersion(tableDir)
+        attempt(base, conflicts) match {
+          case Skip(committed) => committed
+          case Publish(lines, reused, written) =>
+            if (tryPublishLines(tableDir, base + 1, lines))
+              Committed(base + 1, reused, written, conflicts)
+            else run(conflicts + 1)
+        }
+      }
+    run(0)
+  }
+
+  /** A streaming batch's txn watermark check: has stream `sid` already
+    * committed batch `bid` (or a later one) into this meta? */
+  private def alreadyIn(txn: Option[(String, Long)],
+      meta: Map[String, String]): Boolean = txn.exists { case (sid, bid) =>
+    meta.get(s"txn.$sid").exists(_.toLong >= bid)
+  }
+
+  /** `meta` with stream `sid`'s watermark advanced to `bid`. */
+  private def withTxn(meta: Map[String, String],
+      txn: Option[(String, Long)]): Map[String, String] =
+    txn.fold(meta) { case (sid, bid) => meta + (s"txn.$sid" -> bid.toString) }
 
   /** Reserved meta key: the commit's wall-clock millis. Every commit
     * path funnels through here, so each version carries its own stamp
@@ -1809,11 +1876,9 @@ object SnapshotOps {
     * written by LATER commits only; nothing is rewritten. An empty
     * spec un-partitions. Works on an empty table (the CREATE …
     * PARTITIONED BY seed: version 1 is then pure metadata). */
-  def commitSetPartitionSpec(tableDir: String, spec: Seq[PartField],
-      maxRetries: Int = 5): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+  def commitSetPartitionSpec(tableDir: String,
+      spec: Seq[PartField]): Committed =
+    casCommit("commitSetPartitionSpec", tableDir, RescanBudget) { (base, _) =>
       val meta = snapshotMeta(tableDir, base)
       // history accumulates every transform ever in force (deduped by
       // key) so read-side pruning can keep serving files written
@@ -1827,16 +1892,9 @@ object SnapshotOps {
       val newMeta =
         if (spec.isEmpty) withHist - PartKey
         else withHist + (PartKey -> spec.mkString(","))
-      val lines = metaLines(newMeta) ++
-        snapshotUnits(tableDir, base).map(_.raw)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1,
-          dataUnits(tableDir, base).flatMap(_.entries).size, 0, conflicts)
-      conflicts += 1
+      Publish(metaLines(newMeta) ++ snapshotUnits(tableDir, base).map(_.raw),
+        dataUnits(tableDir, base).flatMap(_.entries).size, 0)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitSetPartitionSpec lost $maxRetries version races on $tableDir")
-  }
 
   private val MicrosPerDay = 86400000000L
 
@@ -2038,9 +2096,8 @@ object SnapshotOps {
   }
 
   /** Transactional append: write `df` once as immutable files, then
-    * CAS-commit "current manifest + my files" — rebasing (re-reading
-    * the new current manifest) and retrying on version conflicts. The
-    * data write never repeats; only the manifest union does.
+    * commit "current manifest + my files" ([[casCommit]]). The data
+    * write never repeats; only the manifest union rebases.
     *
     * `statsCols` names columns (numeric, string, date/timestamp or
     * boolean — see [[encodeBound]]) whose per-file min/max land in
@@ -2053,77 +2110,75 @@ object SnapshotOps {
     * batchId as `#txn.<streamId>:<id>` metadata, and a replay of an
     * already-committed batch (a restarted streaming query re-offering
     * its last epoch) returns `skipped = true` without writing a byte.
-    * The check re-runs inside the CAS loop, so of two racing attempts
-    * of the SAME batch one wins and the other skips on rebase — the
-    * exactly-once foreachBatch sink contract. */
+    * Every attempt re-checks, so of two racing attempts of the SAME
+    * batch one wins and the other skips — the exactly-once
+    * foreachBatch sink contract. */
   def commitAppend(spark: SparkSession, tableDir: String, df: DataFrame,
-      maxRetries: Int = 20, statsCols: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None,
-      bloomCols: Seq[String] = Nil): Committed = {
-    def alreadyIn(meta: Map[String, String]): Boolean = txn.exists {
-      case (sid, bid) => meta.get(s"txn.$sid").exists(_.toLong >= bid)
-    }
+      bloomCols: Seq[String] = Nil): Committed =
+    writeAndCommit("commitAppend", spark, tableDir, df, statsCols,
+      bloomCols, txn, carryBase = true)
+
+  /** The body of [[commitAppend]] and [[commitOverwrite]]: write `df`
+    * once under the spec and column mapping in force at the pre-write
+    * version, then CAS-commit one group line of its files — after the
+    * base's units when `carryBase`, alone (replacing them) otherwise.
+    * Manifest meta carries forward with the extended mapping and the
+    * txn watermark. */
+  private def writeAndCommit(verb: String, spark: SparkSession,
+      tableDir: String, df: DataFrame, statsCols: Seq[String],
+      bloomCols: Seq[String], txn: Option[(String, Long)],
+      carryBase: Boolean): Committed = {
     val pre = currentVersion(tableDir)
-    if (alreadyIn(snapshotMeta(tableDir, pre)))
-      return Committed(pre, 0, 0, 0, skipped = true)
-    // column-mapped tables: the frame arrives under LOGICAL names —
-    // write its files under the frozen physical names, minting fresh
-    // ids/physical names for columns the mapping has never seen
-    val (physDf, newMapping) = appendPhysical(tableDir, pre, df)
-    val toPhysName: String => String = newMapping match {
-      case None => identity
-      case Some(m) =>
-        val byLogical = m.filter(_.live)
-          .map(c => c.logical -> c.physical).toMap
-        n => byLogical.getOrElse(n, n)
-    }
-    val dir = newDataDir(tableDir)
-    // hidden partitioning (r15): a spec in force splits the append by
-    // its derived transform values — range-cluster, then a hive-style
-    // partitionBy over TEMPORARY derived columns (auto-excluded from
-    // the data files), so each file holds exactly ONE partition tuple
-    // — and records per-file derived bounds alongside the column
-    // stats. The user never sees the derived columns: hidden
-    // partitioning's whole point.
-    val (written, derived) =
-      writeUnderSpec(spark, tableDir, pre, physDf, dir, toPhysName)
-    val mine = entriesFor(spark, written,
-      statsCols.map(toPhysName), bloomCols.map(toPhysName), derived)
-    // the group file is rebase-invariant: written once, reused across
-    // CAS retries (only the manifest line list rebases)
-    val mineLines =
-      if (mine.nonEmpty) Seq(groupLine(tableDir, mine)) else Nil
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      val meta = snapshotMeta(tableDir, base)
-      if (alreadyIn(meta)) // lost the race to a twin of the same batch
-        return Committed(base, 0, 0, conflicts, skipped = true)
-      // the files were written under `pre`'s mapping — a concurrent
-      // rename/drop would silently misfile them, so fail loudly rather
-      // than publish under a mapping the data doesn't match
-      require(meta.get(ColsKey) ==
-        snapshotMeta(tableDir, pre).get(ColsKey) ||
-        base == pre,
-        s"commitAppend on $tableDir raced a column-evolution commit — " +
-          "retry the append against the new schema")
-      val metaWithCols = newMapping.fold(meta)(m =>
-        meta + (ColsKey -> colsValue(m)))
-      val newMeta = txn.fold(metaWithCols) { case (sid, bid) =>
-        metaWithCols + (s"txn.$sid" -> bid.toString)
+    val preMeta = snapshotMeta(tableDir, pre)
+    if (alreadyIn(txn, preMeta)) Committed(pre, 0, 0, 0, skipped = true)
+    else {
+      // column-mapped tables: the frame arrives under LOGICAL names —
+      // write its files under the frozen physical names, minting fresh
+      // ids/physical names for columns the mapping has never seen
+      val (physDf, newMapping) = appendPhysical(tableDir, pre, df)
+      val toPhysName: String => String = newMapping match {
+        case None => identity
+        case Some(m) =>
+          val byLogical = m.filter(_.live)
+            .map(c => c.logical -> c.physical).toMap
+          n => byLogical.getOrElse(n, n)
       }
-      // append never parses the base manifest's entries: its lines
-      // (group refs or legacy flat entries) carry forward VERBATIM and
-      // the new files arrive as ONE group line — commit metadata cost
-      // tracks this commit's files, not the table's
-      val lines = metaLines(newMeta) ++
-        snapshotUnits(tableDir, base).map(_.raw) ++ mineLines
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, 0, mine.size, conflicts)
-      conflicts += 1
+      // hidden partitioning (r15): a spec in force splits the write by
+      // its derived transform values — range-cluster, then a hive-style
+      // partitionBy over TEMPORARY derived columns (auto-excluded from
+      // the data files), so each file holds exactly ONE partition tuple
+      // — and records per-file derived bounds alongside the column
+      // stats. The user never sees the derived columns: hidden
+      // partitioning's whole point.
+      val (written, derived) = writeUnderSpec(spark, tableDir, pre, physDf,
+        newDataDir(tableDir), toPhysName)
+      val mine = entriesFor(spark, written,
+        statsCols.map(toPhysName), bloomCols.map(toPhysName), derived)
+      val mineLines = groupLines(tableDir, mine)
+      casCommit(verb, tableDir, RelistBudget) { (base, conflicts) =>
+        val meta = snapshotMeta(tableDir, base)
+        if (alreadyIn(txn, meta)) // lost the race to a twin of the same batch
+          Skip(Committed(base, 0, 0, conflicts, skipped = true))
+        else {
+          // the files were written under `pre`'s mapping — a concurrent
+          // rename/drop would silently misfile them, so fail loudly
+          // rather than publish under a mapping the data doesn't match
+          require(base == pre || meta.get(ColsKey) == preMeta.get(ColsKey),
+            s"$verb on $tableDir raced a column-evolution commit — " +
+              "retry against the new schema")
+          val newMeta = withTxn(newMapping.fold(meta)(m =>
+            meta + (ColsKey -> colsValue(m))), txn)
+          // carried base lines (group refs or legacy flat entries) are
+          // never parsed: commit metadata cost tracks this commit's
+          // files, not the table's
+          val carried =
+            if (carryBase) snapshotUnits(tableDir, base).map(_.raw) else Nil
+          Publish(metaLines(newMeta) ++ carried ++ mineLines, 0, mine.size)
+        }
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitAppend lost $maxRetries version races on $tableDir")
   }
 
   /** SaveMode.Overwrite / INSERT OVERWRITE as ONE committed version:
@@ -2137,56 +2192,12 @@ object SnapshotOps {
     * frame lands through the same spec-clustered write as append
     * (hidden partitioning stays in force). */
   def commitOverwrite(spark: SparkSession, tableDir: String,
-      df: DataFrame, maxRetries: Int = 20,
+      df: DataFrame,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None): Committed = {
-    def alreadyIn(meta: Map[String, String]): Boolean = txn.exists {
-      case (sid, bid) => meta.get(s"txn.$sid").exists(_.toLong >= bid)
-    }
-    val pre = currentVersion(tableDir)
-    if (alreadyIn(snapshotMeta(tableDir, pre)))
-      return Committed(pre, 0, 0, 0, skipped = true)
-    val (physDf, newMapping) = appendPhysical(tableDir, pre, df)
-    val toPhysName: String => String = newMapping match {
-      case None => identity
-      case Some(m) =>
-        val byLogical = m.filter(_.live)
-          .map(c => c.logical -> c.physical).toMap
-        n => byLogical.getOrElse(n, n)
-    }
-    val dir = newDataDir(tableDir)
-    val (written, derived) =
-      writeUnderSpec(spark, tableDir, pre, physDf, dir, toPhysName)
-    val mine = entriesFor(spark, written,
-      statsCols.map(toPhysName), bloomCols.map(toPhysName), derived)
-    val mineLines =
-      if (mine.nonEmpty) Seq(groupLine(tableDir, mine)) else Nil
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      val meta = snapshotMeta(tableDir, base)
-      if (alreadyIn(meta)) // lost the race to a twin of the same batch
-        return Committed(base, 0, 0, conflicts, skipped = true)
-      require(meta.get(ColsKey) ==
-        snapshotMeta(tableDir, pre).get(ColsKey) ||
-        base == pre,
-        s"commitOverwrite on $tableDir raced a column-evolution " +
-          "commit — retry against the new schema")
-      val metaWithCols = newMapping.fold(meta)(m =>
-        meta + (ColsKey -> colsValue(m)))
-      val newMeta = txn.fold(metaWithCols) { case (sid, bid) =>
-        metaWithCols + (s"txn.$sid" -> bid.toString)
-      }
-      // no carry-forward: the overwrite's group line is the snapshot
-      val lines = metaLines(newMeta) ++ mineLines
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, 0, mine.size, conflicts)
-      conflicts += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"commitOverwrite lost $maxRetries version races on $tableDir")
-  }
+      txn: Option[(String, Long)] = None): Committed =
+    writeAndCommit("commitOverwrite", spark, tableDir, df, statsCols,
+      bloomCols, txn, carryBase = false)
 
   /** Delta RESTORE / Iceberg rollback-to-snapshot: a NEW committed
     * version whose content is exactly `toVersion`'s — the restored
@@ -2202,12 +2213,11 @@ object SnapshotOps {
     * shape: an append-mode subscriber refuses a restore that dropped
     * units (rewrite-class, correctly), the change feed emits it as
     * row-level deltas. */
-  def commitRestore(tableDir: String, toVersion: Int,
-      maxRetries: Int = 5): Committed = {
+  def commitRestore(tableDir: String, toVersion: Int): Committed = {
     // Validate BEFORE touching the manifest: an out-of-range target
     // must surface as the contract's IllegalArgumentException, not a
-    // NoSuchFileException from snapshotUnits (the loop re-checks
-    // against a fresh base for CAS races).
+    // NoSuchFileException from snapshotUnits (each attempt re-checks
+    // against its own base).
     val initialBase = currentVersion(tableDir)
     require(toVersion >= 1 && toVersion <= initialBase,
       s"commitRestore: version $toVersion outside committed " +
@@ -2219,19 +2229,13 @@ object SnapshotOps {
         "(its manifest was dropped by retention) — cannot restore " +
         "past the retention horizon")
     val restored = snapshotUnits(tableDir, toVersion).map(_.raw)
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+    casCommit("commitRestore", tableDir, RescanBudget) { (base, _) =>
       require(toVersion >= 1 && toVersion <= base,
         s"commitRestore: version $toVersion outside committed " +
           s"versions [1, $base] of $tableDir")
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++ restored
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, restored.size, 0, conflicts)
-      conflicts += 1
+      Publish(metaLines(snapshotMeta(tableDir, base)) ++ restored,
+        restored.size, 0)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitRestore lost $maxRetries version races on $tableDir")
   }
 
   // ---------------------------------------------------------------
@@ -2357,59 +2361,50 @@ object SnapshotOps {
     }
 
   /** Publish a metadata-only commit carrying every base line verbatim
-    * with the `_cols` meta replaced — the shared shape of rename/drop
-    * (zero data files written, copied or listed). */
-  private def commitColsMeta(tableDir: String, base: Int,
-      mapping: Seq[ColMap], maxRetries: Int): Committed = {
-    var conflicts = 0
-    var at = base
-    while (conflicts <= maxRetries) {
-      val lines = metaLines(snapshotMeta(tableDir, at) +
-        (ColsKey -> colsValue(mapping))) ++
-        snapshotUnits(tableDir, at).map(_.raw)
-      if (tryPublishLines(tableDir, at + 1, lines))
-        return Committed(at + 1,
-          dataUnits(tableDir, at).flatMap(_.entries).size, 0, conflicts)
-      conflicts += 1
-      at = currentVersion(tableDir)
+    * with the `_cols` meta replaced by `edit` of the base's mapping —
+    * the shared shape of rename/drop (zero data files written, copied
+    * or listed). `edit` runs (and checks) against every attempt's own
+    * base, so a retry never republishes a mapping another commit has
+    * since changed. */
+  private def commitColsMeta(spark: SparkSession, tableDir: String)(
+      edit: Seq[ColMap] => Seq[ColMap]): Committed =
+    casCommit("column-evolution commit", tableDir, RescanBudget) {
+      (base, _) =>
+        val mapping = edit(mappingOrIdentity(spark, tableDir, base))
+        Publish(metaLines(snapshotMeta(tableDir, base) +
+          (ColsKey -> colsValue(mapping))) ++
+          snapshotUnits(tableDir, base).map(_.raw),
+          dataUnits(tableDir, base).flatMap(_.entries).size, 0)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"column-evolution commit lost $maxRetries version races on $tableDir")
-  }
 
   /** `ALTER TABLE … RENAME COLUMN from TO to` at the snapshot layer:
     * pure metadata (the physical name stays frozen in every file). */
   def commitRenameColumn(spark: SparkSession, tableDir: String,
-      from: String, to: String, maxRetries: Int = 5): Committed = {
+      from: String, to: String): Committed = {
     requireMappable(to)
-    val base = currentVersion(tableDir)
-    val m = mappingOrIdentity(spark, tableDir, base)
-    require(m.exists(c => c.live && c.logical == from),
-      s"RENAME COLUMN: no live column '$from' in $tableDir")
-    require(!m.exists(c => c.live && c.logical == to),
-      s"RENAME COLUMN: target name '$to' already exists in $tableDir")
-    commitColsMeta(tableDir, base,
+    commitColsMeta(spark, tableDir) { m =>
+      require(m.exists(c => c.live && c.logical == from),
+        s"RENAME COLUMN: no live column '$from' in $tableDir")
+      require(!m.exists(c => c.live && c.logical == to),
+        s"RENAME COLUMN: target name '$to' already exists in $tableDir")
       m.map(c => if (c.live && c.logical == from) c.copy(logical = to)
-                 else c),
-      maxRetries)
+                 else c)
+    }
   }
 
   /** `ALTER TABLE … DROP COLUMN name`: the id becomes a tombstone —
     * zero rewrite, data stays in files for time travel, and the
     * reserved physical name keeps a later re-add from resurrecting it. */
   def commitDropColumn(spark: SparkSession, tableDir: String,
-      name: String, maxRetries: Int = 5): Committed = {
-    val base = currentVersion(tableDir)
-    val m = mappingOrIdentity(spark, tableDir, base)
-    require(m.exists(c => c.live && c.logical == name),
-      s"DROP COLUMN: no live column '$name' in $tableDir")
-    require(m.count(_.live) > 1,
-      s"DROP COLUMN: '$name' is the last live column of $tableDir")
-    commitColsMeta(tableDir, base,
+      name: String): Committed =
+    commitColsMeta(spark, tableDir) { m =>
+      require(m.exists(c => c.live && c.logical == name),
+        s"DROP COLUMN: no live column '$name' in $tableDir")
+      require(m.count(_.live) > 1,
+        s"DROP COLUMN: '$name' is the last live column of $tableDir")
       m.map(c => if (c.live && c.logical == name) c.copy(logical = "-")
-                 else c),
-      maxRetries)
-  }
+                 else c)
+    }
 
   /** commitAppend's mapping step: rename `df` to physical names,
     * extending the mapping with FRESH ids/physical names for columns
@@ -2447,20 +2442,14 @@ object SnapshotOps {
 
   /** Transactional copy-on-write update: rows of the current snapshot
     * matching `cond` are replaced by `update` applied to them; files
-    * with NO matching row are reused byte-for-byte. An intervening
-    * commit fails the CAS, and since the rewrite's inputs are stale at
-    * that point the whole plan (find + rewrite) rebases and re-runs —
-    * the strict serializable behaviour, not blind-retry. A lost
-    * attempt's data files become unreferenced orphans: never visible
-    * to any reader (no manifest names them), reclaimed by maintenance
-    * GC in a real deployment. */
+    * with NO matching row are reused byte-for-byte. A lost attempt's
+    * data files become unreferenced orphans: never visible to any
+    * reader (no manifest names them), reclaimed by [[vacuum]]. */
   def commitRewrite(spark: SparkSession, tableDir: String, cond: Column,
-      update: DataFrame => DataFrame, maxRetries: Int = 5,
+      update: DataFrame => DataFrame,
       mergeSchema: Boolean = false,
-      candidates: (Int, Seq[String]) = null): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+      candidates: (Int, Seq[String]) = null): Committed =
+    casCommit("commitRewrite", tableDir, RescanBudget) { (base, _) =>
       val units = dataUnits(tableDir, base)
       val dvs = deleteEntries(tableDir, base)
       val eqs = eqDeleteUnits(tableDir, base)
@@ -2470,8 +2459,8 @@ object SnapshotOps {
       // from bounds, against a SPECIFIC version — that only these
       // files can hold matching rows, job 1 scans only them. Deletes
       // only remove rows, so visible matches ⊆ raw matches ⊆ the
-      // bound-matching files. A CAS retry against a NEWER base drops
-      // the hint (it was proved for another manifest), never reuses it.
+      // bound-matching files. A retry against a NEWER base drops the
+      // hint (it was proved for another manifest), never reuses it.
       val candSet = candidateKeep(candidates, base)
       // job 1: which files contain matching VISIBLE rows (file-
       // granularity pruning via the scan's position identity — one
@@ -2503,16 +2492,8 @@ object SnapshotOps {
           keep = e => cs.contains(localPath(e.path))))
         case None => findTouched(snap)
       }
-      // copy-on-write at GROUP granularity: a unit none of whose files
-      // matches carries forward as its one unparsed line; only broken
-      // groups' survivors re-wrap
-      val (intact, broken) = units.partition(
-        _.entries.forall(e => !touched.contains(localPath(e.path))))
-      val survivorLines = survivorGroupLines(tableDir, broken,
-        e => !touched.contains(localPath(e.path)))
-      val toRewrite = broken.flatMap(_.entries).map(_.path)
-        .filter(f => touched.contains(localPath(f)))
-      val written = if (toRewrite.isEmpty) Seq.empty[FileEntry] else {
+      val rewritten = entries.count(e => touched.contains(localPath(e.path)))
+      val written = if (rewritten == 0) Seq.empty[FileEntry] else {
         // job 2: rewrite ONLY the touched files; non-matching rows in
         // them ride through unchanged; their bounds recompute so
         // data skipping survives the update. Under mergeSchema the
@@ -2527,11 +2508,10 @@ object SnapshotOps {
         // (per-unit seq-aware): the new files carry THIS commit's
         // sequence, so the carried `=` lines no longer apply to them —
         // only to the files the rewrite didn't touch
-        val rewriteSet = toRewrite.map(localPath).toSet
         val in = logicalView(readUnitsVisible(spark, tableDir, units,
           dvs, eqs,
           anchor = if (merge) dataSchema else null,
-          keep = e => rewriteSet.contains(localPath(e.path))), mapping)
+          keep = e => touched.contains(localPath(e.path))), mapping)
         val phys = toPhysical(
           update(in.where(cond)).unionByName(in.where(!coalesce(cond,
             lit(false)))), mapping)
@@ -2542,20 +2522,9 @@ object SnapshotOps {
         entriesFor(spark, files, statsColsOf(entries),
           bloomColsOf(entries), derived)
       }
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        intact.map(_.raw) ++
-        survivorLines ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil) ++
-        consolidateDvLines(spark, tableDir, dvs, touched) ++
-        snapshotUnits(tableDir, base).filter(_.isEqDelete).map(_.raw)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, entries.size - toRewrite.size,
-          written.size, conflicts)
-      conflicts += 1
+      Publish(cowLines(spark, tableDir, base, units, dvs, touched, written),
+        entries.size - rewritten, written.size)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitRewrite lost $maxRetries version races on $tableDir")
-  }
 
   /** Committed compaction — q196's maintenance verb as a TRANSACTION:
     * the current snapshot's files rewrite into `nFiles` coalesced
@@ -2564,10 +2533,8 @@ object SnapshotOps {
     * Content is untouched (the q237 oracle pins it); prior snapshots
     * keep reading the OLD files, so time travel spans maintenance. */
   def commitCompact(spark: SparkSession, tableDir: String,
-      nFiles: Int, maxRetries: Int = 5): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+      nFiles: Int): Committed =
+    casCommit("commitCompact", tableDir, RescanBudget) { (base, _) =>
       val entries = snapshotEntries(tableDir, base)
       val files = entries.map(_.path)
       require(files.nonEmpty, s"commitCompact on empty table $tableDir")
@@ -2586,15 +2553,9 @@ object SnapshotOps {
         plainShape = _.coalesce(nFiles))
       val written = entriesFor(spark, outFiles,
         statsColsOf(entries), bloomColsOf(entries), derived)
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, 0, written.size, conflicts)
-      conflicts += 1
+      Publish(metaLines(snapshotMeta(tableDir, base)) ++
+        groupLines(tableDir, written), 0, written.size)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitCompact lost $maxRetries version races on $tableDir")
-  }
 
   /** Orphan GC: drop every manifest older than the last
     * `keepVersions`, then delete data files no RETAINED manifest
@@ -3044,10 +3005,8 @@ object SnapshotOps {
     * two-sided predicates from the manifest alone. Content untouched;
     * prior snapshots keep their layout — time travel spans clustering. */
   def commitCluster(spark: SparkSession, tableDir: String,
-      colA: String, colB: String, nFiles: Int, bits: Int = -1,
-      maxRetries: Int = 5): Committed =
-    commitClusterN(spark, tableDir, Seq(colA, colB), nFiles, bits,
-      maxRetries)
+      colA: String, colB: String, nFiles: Int, bits: Int = -1): Committed =
+    commitClusterN(spark, tableDir, Seq(colA, colB), nFiles, bits)
 
   /** n-dimensional committed OPTIMIZE ZORDER ([[LayoutOps.zOrderN]]):
     * the manifest records per-file bounds on EVERY clustered dimension
@@ -3057,11 +3016,8 @@ object SnapshotOps {
     * `bits ≤ 0` (the default) auto-sizes to min(21, 63/k) so the
     * interleave always fits one long at any dimension count. */
   def commitClusterN(spark: SparkSession, tableDir: String,
-      sortCols: Seq[String], nFiles: Int, bits: Int = -1,
-      maxRetries: Int = 5): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
+      sortCols: Seq[String], nFiles: Int, bits: Int = -1): Committed =
+    casCommit("commitCluster", tableDir, RescanBudget) { (base, _) =>
       val entries = snapshotEntries(tableDir, base)
       require(entries.nonEmpty, s"commitCluster on empty table $tableDir")
       val dir = newDataDir(tableDir)
@@ -3074,15 +3030,9 @@ object SnapshotOps {
       val written = entriesFor(spark, parquetFilesIn(dir),
         (statsColsOf(entries) ++ physSort).distinct.sorted,
         bloomColsOf(entries))
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, 0, written.size, conflicts)
-      conflicts += 1
+      Publish(metaLines(snapshotMeta(tableDir, base)) ++
+        groupLines(tableDir, written), 0, written.size)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitCluster lost $maxRetries version races on $tableDir")
-  }
 
   /** Generalized manifest skipping for SQL scans (r14): files whose
     * bounds intersect every (column, lo?, hi?) constraint — each side
@@ -3226,21 +3176,16 @@ object SnapshotOps {
   }
 
   /** PUBLISH: the staged files join the main line as one atomic
-    * version (manifest union onto the CURRENT main — rebases over
-    * commits that landed since staging, the commitAppend discipline),
-    * then the branch pointer deletes. Zero data movement: publish is
+    * version (manifest union onto the CURRENT main, the commitAppend
+    * discipline), then the branch pointer deletes. Zero data movement: publish is
     * pure metadata. `txn` carries the same per-stream batch watermark
     * as [[commitAppend]], making an audit-gated streaming sink's
     * publish idempotent under replay (skipped = already published). */
   def publishBranch(tableDir: String, branch: String,
-      maxRetries: Int = 20,
       txn: Option[(String, Long)] = None): Committed = {
-    def alreadyIn(meta: Map[String, String]): Boolean = txn.exists {
-      case (sid, bid) => meta.get(s"txn.$sid").exists(_.toLong >= bid)
-    }
     val bp = branchPath(tableDir, branch)
     val pre = currentVersion(tableDir)
-    if (alreadyIn(snapshotMeta(tableDir, pre))) {
+    if (alreadyIn(txn, snapshotMeta(tableDir, pre))) {
       Files.deleteIfExists(bp) // replayed branch content is stale
       return Committed(pre, 0, 0, 0, skipped = true)
     }
@@ -3258,34 +3203,22 @@ object SnapshotOps {
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(stagedLines.mkString("\n").getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    // rebase-invariant: the group file is written once across retries
-    val stagedGroup =
-      if (stagedLines.nonEmpty)
-        Seq(groupLine(tableDir, stagedLines.map(parseEntry))) else Nil
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      val meta = snapshotMeta(tableDir, base)
-      if (alreadyIn(meta) || meta.get(s"publish.$branch").contains(fp)) {
-        Files.deleteIfExists(bp)
-        return Committed(base, 0, 0, conflicts, skipped = true)
-      }
-      val newMeta = txn.fold(meta) { case (sid, bid) =>
-        meta + (s"txn.$sid" -> bid.toString)
-      } + (s"publish.$branch" -> fp)
-      // base lines carry forward verbatim; the staged file entries
-      // publish as one group line — publish stays a pure-metadata
-      // operation whose cost tracks the batch, not the table
-      val lines = metaLines(newMeta) ++
-        snapshotUnits(tableDir, base).map(_.raw) ++ stagedGroup
-      if (tryPublishLines(tableDir, base + 1, lines)) {
-        Files.deleteIfExists(bp)
-        return Committed(base + 1, 0, stagedLines.size, conflicts)
-      }
-      conflicts += 1
+    val stagedGroup = groupLines(tableDir, stagedLines.map(parseEntry))
+    val c = casCommit("publishBranch", tableDir, RelistBudget) {
+      (base, conflicts) =>
+        val meta = snapshotMeta(tableDir, base)
+        if (alreadyIn(txn, meta) || meta.get(s"publish.$branch").contains(fp))
+          Skip(Committed(base, 0, 0, conflicts, skipped = true))
+        // base lines carry forward verbatim; the staged file entries
+        // publish as one group line — publish stays a pure-metadata
+        // operation whose cost tracks the batch, not the table
+        else Publish(
+          metaLines(withTxn(meta, txn) + (s"publish.$branch" -> fp)) ++
+            snapshotUnits(tableDir, base).map(_.raw) ++ stagedGroup,
+          0, stagedLines.size)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"publishBranch lost $maxRetries version races on $tableDir")
+    Files.deleteIfExists(bp) // published, or already in main
+    c
   }
 
   /** REJECT: drop the branch pointer; its files become unreferenced
@@ -3577,7 +3510,6 @@ object SnapshotOps {
     * would make the merge order-dependent). */
   def commitMerge(spark: SparkSession, tableDir: String,
       source: DataFrame, keyCols: Seq[String],
-      maxRetries: Int = 5,
       txn: Option[(String, Long)] = None,
       sourceVerified: Boolean = false,
       deleteKeys: DataFrame = null): Committed = {
@@ -3585,11 +3517,8 @@ object SnapshotOps {
     // same per-stream watermark as commitAppend: a replayed upsert
     // batch (the streaming CDC-apply sink's at-least-once retry) must
     // skip BEFORE reading or writing a byte
-    def alreadyIn(meta: Map[String, String]): Boolean = txn.exists {
-      case (sid, bid) => meta.get(s"txn.$sid").exists(_.toLong >= bid)
-    }
     val pre = currentVersion(tableDir)
-    if (alreadyIn(snapshotMeta(tableDir, pre)))
+    if (alreadyIn(txn, snapshotMeta(tableDir, pre)))
       return Committed(pre, 0, 0, 0, skipped = true)
     val src = source.localCheckpoint() // read once, reused four times
     // MERGE's matched-DELETE arm (r15): key tuples whose target rows
@@ -3605,173 +3534,149 @@ object SnapshotOps {
     if (!sourceVerified)
       require(src.groupBy(keys: _*).count().where(col("count") > 1)
         .isEmpty, s"commitMerge source not unique on $keyCols")
-    try {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      if (alreadyIn(snapshotMeta(tableDir, base))) // twin won the race
-        return Committed(base, 0, 0, conflicts, skipped = true)
-      val units = dataUnits(tableDir, base)
-      val dvs = deleteEntries(tableDir, base)
-      val eqs = eqDeleteUnits(tableDir, base)
-      val entries = units.flatMap(_.entries)
-      require(entries.nonEmpty, s"commitMerge on empty table $tableDir")
-      // VISIBLE rows only: an upsert must treat an eq-deleted key as
-      // absent (insert), never as a match to resurrect-and-replace.
-      // source/keyCols are LOGICAL — snapshot frames read as the
-      // mapped view (identity for never-evolved tables), the final
-      // write translates back to the frozen physical names.
-      val mapping = columnMapping(tableDir, base)
-      val snapPhys = readUnitsVisible(spark, tableDir, units,
-        dvs, eqs, tagged = true, mergeSchema = mapping.nonEmpty)
-      // the rewrite reads a file SUBSET — anchor it to the full
-      // physical snapshot schema so files predating an evolved append
-      // surface the newer columns (as null) instead of failing the
-      // logical projection
-      val physSchema = org.apache.spark.sql.types.StructType(
-        snapPhys.schema.filterNot(f =>
-          f.name == "__file" || f.name == "__pos"))
-      // manifest-pruned probe (r14): when the target records bounds on
-      // merge keys, the SOURCE's key range (one tiny agg over the
-      // already-checkpointed source) prunes both the match probe AND
-      // the insert anti-join to the bound-intersecting files — a row
-      // matching a source key must carry that key's value, so it can
-      // only live in a file whose bounds intersect the source range.
-      // Unsupported key types or an empty source decline (full scan).
-      val candSet: Option[Set[String]] = {
-        // the probe must span the DELETE keys too: a file holding only
-        // deleted keys must not prune away
-        val probe = delk.fold(src.select(keys: _*))(d =>
-          src.select(keys: _*).unionByName(d))
-        val boundsPreds: Seq[(String,
-            Seq[(Option[BigDecimal], Option[BigDecimal])])] = {
-          val physKeys = keyCols.map(physName(tableDir, base, _))
-            .filter(c => entries.exists(_.bounds.contains(c)))
-          if (physKeys.isEmpty) Seq.empty
-          else scala.util.Try {
-            val aggs = keyCols.flatMap(c =>
-              Seq(min(col(c)).as(s"_lo_$c"), max(col(c)).as(s"_hi_$c")))
-            val r = probe.agg(aggs.head, aggs.tail: _*).head()
-            val preds = keyCols.zip(keyCols.map(physName(tableDir, base, _)))
-              .flatMap { case (c, phys) =>
-                (Option(r.getAs[Any](s"_lo_$c")),
-                  Option(r.getAs[Any](s"_hi_$c"))) match {
-                  case (Some(lo), Some(hi)) => Some((phys,
-                    Seq((Option(encodeBound(lo)), Option(encodeBound(hi))))))
-                  case _ => None // all-null or empty source: no pruning
+    try casCommit("commitMerge", tableDir, RescanBudget) { (base, conflicts) =>
+      if (alreadyIn(txn, snapshotMeta(tableDir, base))) // twin won the race
+        Skip(Committed(base, 0, 0, conflicts, skipped = true))
+      else {
+        val units = dataUnits(tableDir, base)
+        val dvs = deleteEntries(tableDir, base)
+        val eqs = eqDeleteUnits(tableDir, base)
+        val entries = units.flatMap(_.entries)
+        require(entries.nonEmpty, s"commitMerge on empty table $tableDir")
+        // VISIBLE rows only: an upsert must treat an eq-deleted key as
+        // absent (insert), never as a match to resurrect-and-replace.
+        // source/keyCols are LOGICAL — snapshot frames read as the
+        // mapped view (identity for never-evolved tables), the final
+        // write translates back to the frozen physical names.
+        val mapping = columnMapping(tableDir, base)
+        val snapPhys = readUnitsVisible(spark, tableDir, units,
+          dvs, eqs, tagged = true, mergeSchema = mapping.nonEmpty)
+        // the rewrite reads a file SUBSET — anchor it to the full
+        // physical snapshot schema so files predating an evolved append
+        // surface the newer columns (as null) instead of failing the
+        // logical projection
+        val physSchema = org.apache.spark.sql.types.StructType(
+          snapPhys.schema.filterNot(f =>
+            f.name == "__file" || f.name == "__pos"))
+        // manifest-pruned probe (r14): when the target records bounds on
+        // merge keys, the SOURCE's key range (one tiny agg over the
+        // already-checkpointed source) prunes both the match probe AND
+        // the insert anti-join to the bound-intersecting files — a row
+        // matching a source key must carry that key's value, so it can
+        // only live in a file whose bounds intersect the source range.
+        // Unsupported key types or an empty source decline (full scan).
+        val candSet: Option[Set[String]] = {
+          // the probe must span the DELETE keys too: a file holding only
+          // deleted keys must not prune away
+          val probe = delk.fold(src.select(keys: _*))(d =>
+            src.select(keys: _*).unionByName(d))
+          val boundsPreds: Seq[(String,
+              Seq[(Option[BigDecimal], Option[BigDecimal])])] = {
+            val physKeys = keyCols.map(physName(tableDir, base, _))
+              .filter(c => entries.exists(_.bounds.contains(c)))
+            if (physKeys.isEmpty) Seq.empty
+            else scala.util.Try {
+              val aggs = keyCols.flatMap(c =>
+                Seq(min(col(c)).as(s"_lo_$c"), max(col(c)).as(s"_hi_$c")))
+              val r = probe.agg(aggs.head, aggs.tail: _*).head()
+              val preds = keyCols.zip(keyCols.map(physName(tableDir, base, _)))
+                .flatMap { case (c, phys) =>
+                  (Option(r.getAs[Any](s"_lo_$c")),
+                    Option(r.getAs[Any](s"_hi_$c"))) match {
+                    case (Some(lo), Some(hi)) => Some((phys,
+                      Seq((Option(encodeBound(lo)), Option(encodeBound(hi))))))
+                    case _ => None // all-null or empty source: no pruning
+                  }
                 }
-              }
-            if (preds.size != keyCols.size) Seq.empty else preds
-          }.getOrElse(Seq.empty)
-        }
-        // bucket-spec probes (r16, the r15 verdict's #7): a bucket
-        // transform on a merge key serves the same pruning
-        // STRUCTURALLY, with auto_stats off — files written under the
-        // spec record their derived `_p.` bucket value, and the
-        // probe's distinct bucket set (≤ n values by construction, one
-        // small agg through the SAME xxhash64 the write expression
-        // used) becomes exact point alternatives on that key. A merge
-        // keyed on the bucketed column then opens only the source
-        // keys' buckets; pre-spec files carry no `_p.` bound and are
-        // never skipped.
-        val bucketPreds: Seq[(String,
-            Seq[(Option[BigDecimal], Option[BigDecimal])])] =
-          partitionSpecAll(tableDir, base)
-            .filter(pf => pf.transform == "bucket" &&
-              keyCols.exists(_.equalsIgnoreCase(pf.col)))
-            .flatMap { pf =>
-              scala.util.Try {
-                partitionExprs(Seq(pf), probe).headOption.flatMap {
-                  case (key, e) =>
-                    val vals = probe.select(e.as("b"))
-                      .where(col("b").isNotNull).distinct()
-                      .collect().map(_.getLong(0)).sorted
-                    // all n buckets present ⇒ nothing skippable
-                    if (vals.isEmpty || vals.length >= pf.arg) None
-                    else Some((key, vals.toSeq.map(v =>
-                      (Option(BigDecimal(v)), Option(BigDecimal(v))))))
-                }
-              }.toOption.flatten
-            }
-        val cnf = boundsPreds ++ bucketPreds
-        if (cnf.isEmpty) None
-        else scala.util.Try(predFilesCnf(tableDir, base, cnf)
-          .map(localPath).toSet).toOption
-      }
-      val snap = candSet match {
-        case Some(cs) if cs.isEmpty => // no file can match: all inserts
-          logicalView(snapPhys, mapping, extra = Seq("__file")).limit(0)
-        case Some(cs) => logicalView(readUnitsVisible(spark, tableDir,
-          units, dvs, eqs, tagged = true,
-          mergeSchema = mapping.nonEmpty,
-          anchor = if (mapping.nonEmpty) physSchema else null,
-          keep = e => cs.contains(localPath(e.path))),
-          mapping, extra = Seq("__file"))
-        case None => logicalView(snapPhys, mapping, extra = Seq("__file"))
-      }
-      // discovery probes source keys ∪ delete keys; the rewrite's
-      // carry-forward anti-join uses the same union, so deleted keys'
-      // rows vanish without a replacement
-      val srcKeys = broadcast(delk
-        .fold(src.select(keys: _*))(d =>
-          src.select(keys: _*).unionByName(d)).distinct())
-      val touched = snap
-        .select(keys :+ col("__file").as("f"): _*)
-        .join(srcKeys, keyCols, "left_semi")
-        .select(col("f"))
-        .distinct().collect().map(r => localPath(r.getString(0))).toSet
-      // group-granular COW, as in commitRewrite; survivors keep their
-      // original unit's sequence (see survivorGroupLines)
-      val (intact, broken) = units.partition(
-        _.entries.forall(e => !touched.contains(localPath(e.path))))
-      val survivorLines = survivorGroupLines(tableDir, broken,
-        e => !touched.contains(localPath(e.path)))
-      val toRewrite = broken.flatMap(_.entries).map(_.path)
-        .filter(f => touched.contains(localPath(f)))
-      val statsCols = statsColsOf(entries)
-      val bloomCols = bloomColsOf(entries)
-      val written = {
-        val dir = newDataDir(tableDir)
-        val rewriteSet = toRewrite.map(localPath).toSet
-        def rewriteIn() = logicalView(readUnitsVisible(spark, tableDir,
-          units, dvs, eqs,
-          anchor = if (mapping.nonEmpty) physSchema else null,
-          keep = e => rewriteSet.contains(localPath(e.path))), mapping)
-        val matchedKeys =
-          if (toRewrite.isEmpty) null
-          else rewriteIn().select(keys: _*).distinct()
-        val replaced =
-          if (toRewrite.isEmpty) src.limit(0)
-          else {
-            val in = rewriteIn()
-            in.join(srcKeys, keyCols, "left_anti")
-              .unionByName(src.join(broadcast(matchedKeys), keyCols,
-                "left_semi"))
+              if (preds.size != keyCols.size) Seq.empty else preds
+            }.getOrElse(Seq.empty)
           }
-        // inserts: source keys matched NOWHERE in the snapshot
-        val inserts = src.join(snap.select(keys: _*).distinct(),
-          keyCols, "left_anti")
-        toPhysical(replaced.unionByName(inserts), mapping)
-          .write.parquet(dir)
-        entriesFor(spark, parquetFilesIn(dir), statsCols, bloomCols)
+          // bucket-spec probes (r16, the r15 verdict's #7): a bucket
+          // transform on a merge key serves the same pruning
+          // STRUCTURALLY, with auto_stats off — files written under the
+          // spec record their derived `_p.` bucket value, and the
+          // probe's distinct bucket set (≤ n values by construction, one
+          // small agg through the SAME xxhash64 the write expression
+          // used) becomes exact point alternatives on that key. A merge
+          // keyed on the bucketed column then opens only the source
+          // keys' buckets; pre-spec files carry no `_p.` bound and are
+          // never skipped.
+          val bucketPreds: Seq[(String,
+              Seq[(Option[BigDecimal], Option[BigDecimal])])] =
+            partitionSpecAll(tableDir, base)
+              .filter(pf => pf.transform == "bucket" &&
+                keyCols.exists(_.equalsIgnoreCase(pf.col)))
+              .flatMap { pf =>
+                scala.util.Try {
+                  partitionExprs(Seq(pf), probe).headOption.flatMap {
+                    case (key, e) =>
+                      val vals = probe.select(e.as("b"))
+                        .where(col("b").isNotNull).distinct()
+                        .collect().map(_.getLong(0)).sorted
+                      // all n buckets present ⇒ nothing skippable
+                      if (vals.isEmpty || vals.length >= pf.arg) None
+                      else Some((key, vals.toSeq.map(v =>
+                        (Option(BigDecimal(v)), Option(BigDecimal(v))))))
+                  }
+                }.toOption.flatten
+              }
+          val cnf = boundsPreds ++ bucketPreds
+          if (cnf.isEmpty) None
+          else scala.util.Try(predFilesCnf(tableDir, base, cnf)
+            .map(localPath).toSet).toOption
+        }
+        val snap = candSet match {
+          case Some(cs) if cs.isEmpty => // no file can match: all inserts
+            logicalView(snapPhys, mapping, extra = Seq("__file")).limit(0)
+          case Some(cs) => logicalView(readUnitsVisible(spark, tableDir,
+            units, dvs, eqs, tagged = true,
+            mergeSchema = mapping.nonEmpty,
+            anchor = if (mapping.nonEmpty) physSchema else null,
+            keep = e => cs.contains(localPath(e.path))),
+            mapping, extra = Seq("__file"))
+          case None => logicalView(snapPhys, mapping, extra = Seq("__file"))
+        }
+        // discovery probes source keys ∪ delete keys; the rewrite's
+        // carry-forward anti-join uses the same union, so deleted keys'
+        // rows vanish without a replacement
+        val srcKeys = broadcast(delk
+          .fold(src.select(keys: _*))(d =>
+            src.select(keys: _*).unionByName(d)).distinct())
+        val touched = snap
+          .select(keys :+ col("__file").as("f"): _*)
+          .join(srcKeys, keyCols, "left_semi")
+          .select(col("f"))
+          .distinct().collect().map(r => localPath(r.getString(0))).toSet
+        // group-granular COW, as in commitRewrite (see cowLines)
+        val rewritten = entries.count(e => touched.contains(localPath(e.path)))
+        val written = {
+          val dir = newDataDir(tableDir)
+          def rewriteIn() = logicalView(readUnitsVisible(spark, tableDir,
+            units, dvs, eqs,
+            anchor = if (mapping.nonEmpty) physSchema else null,
+            keep = e => touched.contains(localPath(e.path))), mapping)
+          val matchedKeys =
+            if (rewritten == 0) null
+            else rewriteIn().select(keys: _*).distinct()
+          val replaced =
+            if (rewritten == 0) src.limit(0)
+            else {
+              val in = rewriteIn()
+              in.join(srcKeys, keyCols, "left_anti")
+                .unionByName(src.join(broadcast(matchedKeys), keyCols,
+                  "left_semi"))
+            }
+          // inserts: source keys matched NOWHERE in the snapshot
+          val inserts = src.join(snap.select(keys: _*).distinct(),
+            keyCols, "left_anti")
+          toPhysical(replaced.unionByName(inserts), mapping)
+            .write.parquet(dir)
+          entriesFor(spark, parquetFilesIn(dir), statsColsOf(entries),
+            bloomColsOf(entries))
+        }
+        Publish(cowLines(spark, tableDir, base, units, dvs, touched, written,
+          txn), entries.size - rewritten, written.size)
       }
-      val newMeta = txn.fold(snapshotMeta(tableDir, base)) {
-        case (sid, bid) =>
-          snapshotMeta(tableDir, base) + (s"txn.$sid" -> bid.toString)
-      }
-      val lines = metaLines(newMeta) ++
-        intact.map(_.raw) ++
-        survivorLines ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil) ++
-        consolidateDvLines(spark, tableDir, dvs, touched) ++
-        snapshotUnits(tableDir, base).filter(_.isEqDelete).map(_.raw)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, entries.size - toRewrite.size,
-          written.size, conflicts)
-      conflicts += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"commitMerge lost $maxRetries version races on $tableDir")
     } finally {
       releaseCheckpoint(src)
       delk.foreach(releaseCheckpoint)
@@ -3790,65 +3695,48 @@ object SnapshotOps {
     * when fewer than two small files exist (nothing to do — no commit
     * burned). */
   def commitCompactSmall(spark: SparkSession, tableDir: String,
-      targetBytes: Long, maxRetries: Int = 5): Committed = {
-    var conflicts = 0
-    while (conflicts <= maxRetries) {
-      val base = currentVersion(tableDir)
-      val units = dataUnits(tableDir, base)
-      val dvs = deleteEntries(tableDir, base)
-      val eqs = eqDeleteUnits(tableDir, base)
-      val entries = units.flatMap(_.entries)
-      require(entries.nonEmpty, s"commitCompactSmall on empty $tableDir")
-      def isSmall(e: FileEntry): Boolean =
-        new java.io.File(e.path).length() < targetBytes / 2
-      val small = entries.map(e => e -> new java.io.File(e.path).length())
-        .filter(_._2 < targetBytes / 2)
-      if (small.size <= 1)
-        return Committed(base, entries.size, 0, conflicts, skipped = true)
-      // group-granular COW: all-large groups carry forward unparsed;
-      // large files stranded in broken groups re-wrap, keeping their
-      // original unit's sequence (see survivorGroupLines)
-      val (intact, broken) = units.partition(_.entries.forall(!isSmall(_)))
-      val survivorLines = survivorGroupLines(tableDir, broken,
-        e => !isSmall(e))
-      // first-fit decreasing: stable, deterministic bin assignment
-      val bins = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, scala.collection.mutable.ArrayBuffer[FileEntry])]
-      small.sortBy { case (e, sz) => (-sz, e.path) }.foreach { case (e, sz) =>
-        bins.find(_._1 + sz <= targetBytes) match {
-          case Some(bin) =>
-            val i = bins.indexOf(bin)
-            bins(i) = (bin._1 + sz, bin._2 += e)
-          case None =>
-            bins += ((sz, scala.collection.mutable.ArrayBuffer(e)))
+      targetBytes: Long): Committed =
+    casCommit("commitCompactSmall", tableDir, RescanBudget) {
+      (base, conflicts) =>
+        val units = dataUnits(tableDir, base)
+        val dvs = deleteEntries(tableDir, base)
+        val entries = units.flatMap(_.entries)
+        require(entries.nonEmpty, s"commitCompactSmall on empty $tableDir")
+        val small = entries.map(e => e -> new java.io.File(e.path).length())
+          .filter(_._2 < targetBytes / 2)
+        if (small.size <= 1)
+          Skip(Committed(base, entries.size, 0, conflicts, skipped = true))
+        else {
+          // first-fit decreasing: stable, deterministic bin assignment
+          val bins = scala.collection.mutable.ArrayBuffer
+            .empty[(Long, scala.collection.mutable.ArrayBuffer[FileEntry])]
+          small.sortBy { case (e, sz) => (-sz, e.path) }.foreach {
+            case (e, sz) => bins.find(_._1 + sz <= targetBytes) match {
+              case Some(bin) =>
+                val i = bins.indexOf(bin)
+                bins(i) = (bin._1 + sz, bin._2 += e)
+              case None =>
+                bins += ((sz, scala.collection.mutable.ArrayBuffer(e)))
+            }
+          }
+          val statsCols = statsColsOf(entries)
+          val bloomCols = bloomColsOf(entries)
+          val written = bins.toSeq.flatMap { case (_, binEntries) =>
+            val dir = newDataDir(tableDir)
+            // a bin can mix files of different sequences: the visible read
+            // applies each member's applicable eq-deletes before baking
+            // (the rewritten bin gets THIS commit's sequence)
+            val binSet = binEntries.map(e => localPath(e.path)).toSet
+            maintenanceRead(spark, tableDir, base,
+              keep = e => binSet.contains(localPath(e.path)))
+              .coalesce(1).write.parquet(dir)
+            entriesFor(spark, parquetFilesIn(dir), statsCols, bloomCols)
+          }
+          // group-granular COW: all-large groups carry forward unparsed;
+          // large files stranded in broken groups re-wrap (see cowLines)
+          Publish(cowLines(spark, tableDir, base, units, dvs,
+            small.map(s => localPath(s._1.path)).toSet, written),
+            entries.size - small.size, written.size)
         }
-      }
-      val statsCols = statsColsOf(entries)
-      val bloomCols = bloomColsOf(entries)
-      val written = bins.toSeq.flatMap { case (_, binEntries) =>
-        val dir = newDataDir(tableDir)
-        // a bin can mix files of different sequences: the visible read
-        // applies each member's applicable eq-deletes before baking
-        // (the rewritten bin gets THIS commit's sequence)
-        val binSet = binEntries.map(e => localPath(e.path)).toSet
-        maintenanceRead(spark, tableDir, base,
-          keep = e => binSet.contains(localPath(e.path)))
-          .coalesce(1).write.parquet(dir)
-        entriesFor(spark, parquetFilesIn(dir), statsCols, bloomCols)
-      }
-      val lines = metaLines(snapshotMeta(tableDir, base)) ++
-        intact.map(_.raw) ++
-        survivorLines ++
-        (if (written.nonEmpty) Seq(groupLine(tableDir, written)) else Nil) ++
-        consolidateDvLines(spark, tableDir, dvs,
-          small.map(s => localPath(s._1.path)).toSet) ++
-        snapshotUnits(tableDir, base).filter(_.isEqDelete).map(_.raw)
-      if (tryPublishLines(tableDir, base + 1, lines))
-        return Committed(base + 1, entries.size - small.size,
-          written.size, conflicts)
-      conflicts += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"commitCompactSmall lost $maxRetries version races on $tableDir")
-  }
 }

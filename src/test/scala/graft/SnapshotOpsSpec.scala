@@ -23,6 +23,40 @@ class SnapshotOpsSpec extends SparkSpecBase {
       Seq("/a.parquet", "/b.parquet"))
   }
 
+  test("casCommit re-runs a lost attempt on the new head, fails after " +
+      "budget + 1 lost attempts, and a Skip burns no version") {
+    import SnapshotOps.{casCommit, tryPublish, Committed, Publish, Skip}
+    val t = freshTable()
+    assert(tryPublish(t, 1, Seq("/a.parquet")))
+    // a competitor takes the slot during the first attempt only
+    val bases = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val won = casCommit("someVerb", t, 3) { (base, conflicts) =>
+      bases += base
+      if (conflicts == 0)
+        assert(tryPublish(t, base + 1, Seq("/rival.parquet")))
+      Publish(Seq("/mine.parquet"), 7, 1)
+    }
+    assert(bases == Seq(1, 2))
+    assert(won == Committed(3, 7, 1, 1))
+    assert(SnapshotOps.snapshotFiles(t, 2) == Seq("/rival.parquet"))
+    assert(SnapshotOps.snapshotFiles(t, 3) == Seq("/mine.parquet"))
+    // an attempt that always loses: budget 3 ⇒ exactly 4 calls
+    var calls = 0
+    val e = intercept[java.util.ConcurrentModificationException](
+      casCommit("someVerb", t, 3) { (base, _) =>
+        calls += 1
+        assert(tryPublish(t, base + 1, Seq("/rival.parquet")))
+        Publish(Seq("/mine.parquet"), 0, 1)
+      })
+    assert(calls == 4)
+    assert(e.getMessage == s"someVerb lost 3 version races on $t")
+    val head = SnapshotOps.currentVersion(t)
+    assert(head == 7)
+    val noop = Committed(head, 0, 0, 0, skipped = true)
+    assert(casCommit("someVerb", t, 3)((_, _) => Skip(noop)) == noop)
+    assert(SnapshotOps.currentVersion(t) == head)
+  }
+
   test("two concurrent appends: both land, versions are consecutive, no " +
       "rows lost or duplicated") {
     import spark.implicits._
@@ -1519,6 +1553,63 @@ class SnapshotOpsSpec extends SparkSpecBase {
     SnapshotOps.commitAppend(spark, t2, Seq(1L).toDF("only"))
     intercept[IllegalArgumentException](
       SnapshotOps.commitDropColumn(spark, t2, "only"))
+  }
+
+  test("concurrent renames of two different columns both survive: a " +
+      "retried column-evolution commit re-derives its mapping") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val t = freshTable()
+    SnapshotOps.commitAppend(spark, t,
+      Seq((1L, "a", 2.0)).toDF("id", "s", "v"))                 // v1
+    val gate = new java.util.concurrent.CountDownLatch(2)
+    // both read v1 and infer its identity mapping (a Spark job each)
+    // before either publishes; the loser must rebase onto the winner
+    def rename(from: String, to: String) = Future {
+      gate.countDown(); gate.await()
+      SnapshotOps.commitRenameColumn(spark, t, from, to)
+    }
+    val (a, b) = (rename("s", "tag"), rename("v", "val"))
+    val versions = Set(Await.result(a, 2.minutes).version,
+      Await.result(b, 2.minutes).version)
+    assert(versions == Set(2, 3))
+    val now = SnapshotOps.readLatest(spark, t)
+    assert(now.columns.toSeq == Seq("id", "tag", "val"))
+    assert(now.collect().map(r => (r.getLong(0), r.getString(1),
+      r.getDouble(2))).toSeq == Seq((1L, "a", 2.0)))
+  }
+
+  test("a rename racing a drop of the same column never resurrects it: " +
+      "exactly one wins, the other fails its check on the new head") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.util.{Failure, Success, Try}
+    val t = freshTable()
+    SnapshotOps.commitAppend(spark, t,
+      Seq((1L, "a", 2.0)).toDF("id", "x", "v"))                 // v1
+    val gate = new java.util.concurrent.CountDownLatch(2)
+    def racer(commit: => SnapshotOps.Committed) = Future {
+      gate.countDown(); gate.await()
+      Try(commit)
+    }
+    val r = racer(SnapshotOps.commitRenameColumn(spark, t, "x", "y"))
+    val d = racer(SnapshotOps.commitDropColumn(spark, t, "x"))
+    val (renamed, dropped) = (Await.result(r, 2.minutes),
+      Await.result(d, 2.minutes))
+    val cols = SnapshotOps.readLatest(spark, t).columns.toSeq
+    (renamed, dropped) match {
+      case (Failure(_: IllegalArgumentException), Success(_)) =>
+        assert(cols == Seq("id", "v"))
+      case (Success(_), Failure(_: IllegalArgumentException)) =>
+        assert(cols == Seq("id", "y", "v"))
+      case other =>
+        fail(s"exactly one of rename/drop must commit: $other, now $cols")
+    }
+    assert(SnapshotOps.currentVersion(t) == 2)
   }
 
   test("post-evolution DML speaks the logical schema: COW update, MoR " +

@@ -18,7 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * One session builder: sessions are built in `GraftSession.scala` and
   * nowhere else, so a session conf (the fast local FS keys above all)
-  * is set in one place. */
+  * is set in one place.
+  *
+  * One commit loop: every snapshot commit verb runs
+  * `SnapshotOps.casCommit`, so the CAS protocol, its retry budgets and
+  * its conflict count live in one place. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val invisibleWhitespace: Set[Int] =
@@ -47,6 +51,35 @@ class SourceHygieneSpec extends AnyFunSuite {
         s"$p:$n: $codes"
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("snapshot commits retry only in SnapshotOps.casCommit") {
+    // spelled in pieces so this file does not match itself
+    val loop = "while (" + "conflicts"
+    val knob = "max" + "Retries"
+    val publish = "tryPublish" + "Lines("
+    val main = sourceLines.filter(_._1.toString.startsWith("src/main/scala"))
+    val hand = main.collect {
+      case (p, n, line) if line.contains(loop) || line.contains(knob) =>
+        s"$p:$n: ${line.trim}"
+    }
+    assert(hand.isEmpty, hand.mkString("\n"))
+    // the enclosing member of every CAS publish in SnapshotOps
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    val snap = main.filter(_._1.getFileName.toString == "SnapshotOps.scala")
+    val callers = snap.indices.collect {
+      case i if snap(i)._3.contains(publish) &&
+          !snap(i)._3.contains("def " + publish) =>
+        snap.take(i + 1).reverseIterator.map(_._3).collectFirst {
+          case member(name) => name
+        }.getOrElse(s"<top of file, line ${snap(i)._2}>")
+    }
+    assert(callers.nonEmpty)
+    val allowed = Set("casCommit", "tryPublish", "createBranchFork",
+      "fastForward")
+    assert(callers.toSet.subsetOf(allowed),
+      s"${publish.init} called outside the commit loop from: " +
+        callers.filterNot(allowed).mkString(", "))
   }
 
   test("sessions are built only in GraftSession") {
