@@ -546,7 +546,7 @@ object SnapshotOps {
     val key = dvs.map(_.path).sorted.mkString("\n")
     val cached = dvLiteralCache.get(key)
     if (cached != null) return cached
-    val m = spark.read.parquet(dvs.map(_.path): _*)
+    val m = readParquet(spark, dvs.map(_.path))
       .select(col(DvFileCol), col(DvPosCol))
       .collect().groupBy(_.getString(0))
       .map { case (f, rs) => f -> rs.map(_.getLong(1)).toSeq }
@@ -562,11 +562,51 @@ object SnapshotOps {
   private def normFileCol(c: org.apache.spark.sql.Column) =
     regexp_replace(c, "^file:/+", "/")
 
-  private def plainReader(spark: SparkSession, mergeSchema: Boolean,
-      anchor: org.apache.spark.sql.types.StructType) =
-    if (anchor != null) spark.read.schema(anchor)
-    else if (mergeSchema) spark.read.option("mergeSchema", "true")
-    else spark.read
+  /** The one parquet reader of table-owned files (data, DV and
+    * equality-delete files) in the metadata plane. It always hands
+    * Spark a schema, so planning the read never runs Spark's schema
+    * inference: a parquet read without one launches a footer-reading
+    * job (`mergeSchemasInParallel`) per relation, one job plus a driver
+    * gap for every DV, delete-key and data read a statement plans. The
+    * schema is the caller's `anchor` when given, else [[filesSchema]]'s:
+    * footers read on the driver and cached by path, which is safe
+    * because the engine never rewrites a file it published. */
+  private def readParquet(spark: SparkSession, files: Seq[String],
+      anchor: org.apache.spark.sql.types.StructType = null,
+      mergeSchema: Boolean = false): DataFrame =
+    spark.read.schema(
+      if (anchor != null) anchor else filesSchema(spark, files, mergeSchema))
+      .parquet(files: _*)
+
+  /** The schema Spark's inference would give a read of `files`, from
+    * cached footers. Without `mergeSchema` it is the footer of the
+    * lexicographically first file, as Spark's non-merge inference
+    * takes it. With `mergeSchema` it folds Spark's own `StructType.merge`
+    * over one footer per write directory, in path order: all files of
+    * one directory come from one write (every commit writes under a
+    * fresh `data/<uuid>/`, hive-style `k=v` partition directories
+    * below it), so they share a schema and the fold equals Spark's fold
+    * over every file. A manifest unit holds one commit's files, so this
+    * reads O(units) footers, each once per JVM — never O(files) per
+    * statement. Directories, not units, are the grouping because a
+    * small-file compaction groups several bins' files in one unit, and
+    * on a column-mapped table two bins can be written with different
+    * columns. */
+  private def filesSchema(spark: SparkSession, files: Seq[String],
+      mergeSchema: Boolean = false): org.apache.spark.sql.types.StructType = {
+    require(files.nonEmpty, "parquet read of no files needs an anchor schema")
+    if (!mergeSchema) footerSchema(spark, files.min)
+    else {
+      def writeDir(f: String) =
+        localPath(f).split('/').init.reverse.dropWhile(_.contains('='))
+          .reverse.mkString("/")
+      val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+      files.groupBy(writeDir).values.map(_.min).toSeq.sorted
+        .map(footerSchema(spark, _))
+        .reduceLeft(org.apache.spark.sql.graft.SchemaBridge
+          .merge(_, _, caseSensitive))
+    }
+  }
 
   /** A (file ordinal, position) pair packed into one long join/InSet
     * key: position occupies the low 40 bits (a single parquet file
@@ -593,7 +633,7 @@ object SnapshotOps {
   private def readTagged(spark: SparkSession, files: Seq[String],
       dvs: Seq[FileEntry], mergeSchema: Boolean = false,
       anchor: org.apache.spark.sql.types.StructType = null): DataFrame = {
-    val scan = plainReader(spark, mergeSchema, anchor).parquet(files: _*)
+    val scan = readParquet(spark, files, anchor, mergeSchema)
     if (dvs.isEmpty)
       scan.select(col("*"),
         normFileCol(col("_metadata.file_path")).as("__file"),
@@ -634,7 +674,7 @@ object SnapshotOps {
           // array identity) would rebuild per row
           val dvOrd = graft.functions.GraftFunctions
             .pathOrdinal(col(DvFileCol), ordPaths)
-          val dv = spark.read.parquet(dvs.map(_.path): _*)
+          val dv = readParquet(spark, dvs.map(_.path))
             .select(shiftleft(dvOrd.cast("long"), PosBits)
               .bitwiseOR(col(DvPosCol)).as("__dkey"),
               col(DvFileCol))
@@ -702,7 +742,7 @@ object SnapshotOps {
     def plainPart(fs: Seq[String]): DataFrame = prune match {
       case Some((dir, v)) if !mergeSchema && fs.nonEmpty =>
         graft.sources.GraftRelation.subsetFrame(spark, dir, v, fs, anchor)
-      case _ => plainReader(spark, mergeSchema, anchor).parquet(fs: _*)
+      case _ => readParquet(spark, fs, anchor, mergeSchema)
     }
     if (dvs.isEmpty) plainPart(files)
     else {
@@ -721,7 +761,7 @@ object SnapshotOps {
           val byFile = dvPositions(spark, dvs)
           Some(dvd.map { f =>
             val ps = byFile.getOrElse(localPath(f), Seq.empty)
-            val r = plainReader(spark, mergeSchema, anchor).parquet(f)
+            val r = readParquet(spark, Seq(f), anchor, mergeSchema)
             if (ps.isEmpty) r // bloom false positive
             else r.where(!graft.functions.GraftFunctions.inSortedLongs(
               col("_metadata.row_index"), ps))
@@ -735,31 +775,43 @@ object SnapshotOps {
     }
   }
 
-  /** Immutable key-file caches (r15): an eq-delete's key file is
-    * written once by [[commitDeleteByKey]] and never modified, so its
-    * schema (one footer read, no Spark relation — constructing a
-    * DataFrame per delete made read PLANNING O(delete commits) at
-    * ~100 ms each) and its collected rows (delete-sized by the commit
-    * contract, probed against file Blooms at plan time) both cache
-    * safely by path. Caps bound driver memory across tables/tests. */
-  private val keySchemaCache = new java.util.concurrent.ConcurrentHashMap[
+  /** Immutable-file caches (r15): a published parquet file is written
+    * once and never modified, so its footer schema (one driver footer
+    * read, no Spark relation — constructing a DataFrame per delete made
+    * read PLANNING O(delete commits) at ~100 ms each) and an eq-delete
+    * key file's collected rows (delete-sized by the commit contract,
+    * probed against file Blooms at plan time) both cache safely by
+    * path. Caps bound driver memory across tables/tests. */
+  private val footerSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
   private val keyRowsCache = new java.util.concurrent.ConcurrentHashMap[
     String, Array[org.apache.spark.sql.Row]]()
 
-  private[graft] def keyFileSchema(spark: SparkSession,
+  /** The Spark schema of one parquet file, as Spark's inference reads
+    * it from the footer: the schema the writer stored under
+    * `org.apache.spark.sql.parquet.row.metadata` when present (it keeps
+    * the types parquet cannot spell, e.g. intervals), else the parquet
+    * schema converted under the session's SQL conf. */
+  private[graft] def footerSchema(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
-    if (keySchemaCache.size > 4096) keySchemaCache.clear()
-    keySchemaCache.computeIfAbsent(path, p =>
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.types.{DataType, StructType}
+    if (footerSchemaCache.size > 4096) footerSchemaCache.clear()
+    footerSchemaCache.computeIfAbsent(path, p =>
       try {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             new org.apache.hadoop.fs.Path(p),
             spark.sessionState.newHadoopConf()))
-        try new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter()
-          .convert(reader.getFooter.getFileMetaData.getSchema)
-        finally reader.close()
+        val meta = try reader.getFooter.getFileMetaData
+          finally reader.close()
+        Option(meta.getKeyValueMetaData.get(
+            ParquetReadSupport.SPARK_METADATA_KEY))
+          .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+          .collect { case s: StructType => s }
+          .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+            .convert(meta.getSchema))
       } catch { case scala.util.control.NonFatal(_) =>
         spark.read.parquet(p).schema // odd layout: let Spark infer
       })
@@ -768,7 +820,7 @@ object SnapshotOps {
   private def keyFileRows(spark: SparkSession,
       path: String): Array[org.apache.spark.sql.Row] = {
     if (keyRowsCache.size > 1024) keyRowsCache.clear()
-    keyRowsCache.computeIfAbsent(path, p => spark.read.parquet(p).collect())
+    keyRowsCache.computeIfAbsent(path, p => readParquet(spark, Seq(p)).collect())
   }
 
   /** Distinct data-file paths a deletion vector names, memoized per DV
@@ -780,7 +832,7 @@ object SnapshotOps {
   private def dvFilesOf(spark: SparkSession, path: String): Set[String] = {
     if (dvFilesCache.size > 1024) dvFilesCache.clear()
     dvFilesCache.computeIfAbsent(path, p =>
-      spark.read.parquet(p).select(col(DvFileCol)).distinct()
+      readParquet(spark, Seq(p)).select(col(DvFileCol)).distinct()
         .collect().map(r => localPath(r.getString(0))).toSet)
   }
 
@@ -835,7 +887,7 @@ object SnapshotOps {
       // delete, so planning stays O(signatures) however many delete
       // commits stack up; the join sides below read each signature's
       // files as ONE multi-path relation
-      val keyFields = eqs.map(e => keyFileSchema(spark, e._1.path).fields)
+      val keyFields = eqs.map(e => footerSchema(spark, e._1.path).fields)
       // may file `en` hold ANY key of delete `i`? A missing bloom for
       // a key column keeps the file a candidate — absence never
       // skips, and a bloom-less table never collects keys at all.
@@ -876,8 +928,7 @@ object SnapshotOps {
                   // applying a delete to a file that lacks its keys is
                   // a no-op, so the coarse per-group union stays exact
                   val names = keyFields(is.head).map(_.name).toSeq
-                  val keys = spark.read
-                    .parquet(is.map(i => eqs(i)._1.path): _*)
+                  val keys = readParquet(spark, is.map(i => eqs(i)._1.path))
                     .select(names.map(col): _*)
                   d.join(broadcast(keys), names, "left_anti")
                 }
@@ -1135,7 +1186,7 @@ object SnapshotOps {
   private def consolidateDvLines(spark: SparkSession, tableDir: String,
       dvs: Seq[FileEntry], rewritten: Set[String]): Seq[String] = {
     if (dvs.isEmpty) return Nil
-    val dv = spark.read.parquet(dvs.map(_.path): _*)
+    val dv = readParquet(spark, dvs.map(_.path))
     // DV distinct-file list is bounded by the live-file count — a
     // manifest-sized driver collect, same scale as `touched`
     val dvFiles = dv.select(col(DvFileCol)).distinct()
@@ -1254,7 +1305,7 @@ object SnapshotOps {
     def run(conflicts: Int): Committed =
       if (conflicts > budget)
         throw new java.util.ConcurrentModificationException(
-          s"$verb lost $budget version races on $tableDir")
+          s"$verb lost $conflicts version races on $tableDir")
       else {
         val base = currentVersion(tableDir)
         attempt(base, conflicts) match {
@@ -1387,7 +1438,7 @@ object SnapshotOps {
       val mayHitBase = dvMaybeFiles(newDvs, baseFiles)
         .map(_.nonEmpty).getOrElse(true)
       if (mayHitBase) {
-        val named = spark.read.parquet(newDvs.map(_.path): _*)
+        val named = readParquet(spark, newDvs.map(_.path))
           .select(col(DvFileCol)).distinct()
           .collect().map(r => localPath(r.getString(0))).toSet
         val hit = named.intersect(baseFiles.map(localPath).toSet)
@@ -1722,7 +1773,7 @@ object SnapshotOps {
         toExpr(xxhash64(col(c))), Literal(1L << 12), Literal(1L << 15))
         .toAggregateExpression()).as(s"_bf_$c")) :+
       count(lit(1)).as("_nrows")
-    val stats = spark.read.parquet(written: _*)
+    val stats = readParquet(spark, written)
       .groupBy(col("_metadata.file_path").as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
@@ -2354,8 +2405,7 @@ object SnapshotOps {
       require(files.nonEmpty,
         s"column evolution on $tableDir needs a committed schema " +
           "(empty table — no physical columns to map)")
-      val phys = spark.read.option("mergeSchema", "true")
-        .parquet(files: _*).schema.fieldNames.toSeq
+      val phys = filesSchema(spark, files, mergeSchema = true).fieldNames.toSeq
       phys.foreach(requireMappable)
       phys.zipWithIndex.map { case (p, i) => ColMap(i + 1, p, p) }
     }
@@ -2856,7 +2906,7 @@ object SnapshotOps {
           // by contract, and the visible-read path already reads it
           // through these caches — a multi-span diff re-meeting the
           // same eq line no longer pays a job per span
-          val fields = keyFileSchema(spark, d.path).fields
+          val fields = footerSchema(spark, d.path).fields
           val keyRows = keyFileRows(spark, d.path)
           commonEntries.filter { e =>
             val filters = fields.map(f => f.name ->
@@ -2963,15 +3013,15 @@ object SnapshotOps {
     // across a snapshot in the common case, and expanding every group
     // just to read a schema would defeat group-level pruning. On a
     // schema-EVOLVED table the probed column may exist only in later-
-    // appended units: fall back to a mergeSchema read of one file per
-    // unit (O(units) footer reads, fallback path only).
+    // appended units: fall back to merging the cached footers of one
+    // file per unit (O(units) footer reads, fallback path only).
     val sample = units.headOption.map(_.entries.map(_.path)).getOrElse(Nil)
     require(sample.nonEmpty, s"pointFiles on empty $tableDir v$version")
-    val dt = spark.read.parquet(sample: _*).schema
+    val dt = filesSchema(spark, sample)
       .find(_.name == column).map(_.dataType).getOrElse {
         val onePerUnit = units.flatMap(_.entries.headOption.map(_.path))
-        spark.read.option("mergeSchema", "true").parquet(onePerUnit: _*)
-          .schema.apply(column).dataType
+        filesSchema(spark, onePerUnit, mergeSchema = true)
+          .apply(column).dataType
       }
     val h = probeHash(value, dt)
     // two-level prune: a group's UNION bloom missing the probe proves
@@ -3170,7 +3220,7 @@ object SnapshotOps {
       if (baseFiles.nonEmpty)
         Some(readFilesDv(spark, baseFiles, deleteEntries(tableDir, cur)))
       else None,
-      if (stagedFiles.nonEmpty) Some(spark.read.parquet(stagedFiles: _*))
+      if (stagedFiles.nonEmpty) Some(readParquet(spark, stagedFiles))
       else None).flatten
     sides.reduce(_.unionByName(_))
   }
@@ -3688,8 +3738,8 @@ object SnapshotOps {
     * `targetBytes / 2` are first-fit-decreasing bin-packed into
     * ~`targetBytes` bins and each bin rewrites into one file; files
     * already at target size are REUSED byte-for-byte (their stats
-    * lines carry forward untouched). Sizing is a driver stat of the
-    * manifest's files — a metadata operation. Each bin's rewrite is an
+    * lines carry forward untouched). Sizing reads the manifest's
+    * recorded `_bytes` — a metadata operation. Each bin's rewrite is an
     * independent job over only that bin's files, so maintenance cost
     * tracks the small-file mass, never the table; returns skipped=true
     * when fewer than two small files exist (nothing to do — no commit
@@ -3702,7 +3752,10 @@ object SnapshotOps {
         val dvs = deleteEntries(tableDir, base)
         val entries = units.flatMap(_.entries)
         require(entries.nonEmpty, s"commitCompactSmall on empty $tableDir")
-        val small = entries.map(e => e -> new java.io.File(e.path).length())
+        // sizes come from the manifest's recorded `_bytes`; only lines
+        // written before the stat existed ask the filesystem
+        val small = entries.map(e => e -> e.bounds.get(BytesKey)
+          .fold(new java.io.File(e.path).length())(_._1.toLong))
           .filter(_._2 < targetBytes / 2)
         if (small.size <= 1)
           Skip(Committed(base, entries.size, 0, conflicts, skipped = true))

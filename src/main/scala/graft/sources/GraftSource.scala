@@ -278,7 +278,7 @@ object GraftRelation {
     // a footer's REQUIRED fields must not surface as non-nullable
     // attributes — files may lie, and non-nullable scan output breaks
     // constraint propagation (Union.rewriteConstraints) upstream.
-    val schema = nullable(SnapshotOps.keyFileSchema(spark, files.head))
+    val schema = nullable(SnapshotOps.footerSchema(spark, files.head))
     HadoopFsRelation(
       location = new GraftFileIndex(spark, tableDir, version, schema),
       partitionSchema = StructType(Nil),
@@ -308,7 +308,7 @@ object GraftRelation {
     require(files.nonEmpty, "subsetFrame over an empty group")
     val schema = nullable(
       if (anchor != null) anchor
-      else SnapshotOps.keyFileSchema(spark, files.head))
+      else SnapshotOps.footerSchema(spark, files.head))
     spark.baseRelationToDataFrame(HadoopFsRelation(
       location = new GraftFileIndex(spark, tableDir, version, schema,
         Some(files)),

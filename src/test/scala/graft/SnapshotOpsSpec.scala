@@ -49,7 +49,7 @@ class SnapshotOpsSpec extends SparkSpecBase {
         Publish(Seq("/mine.parquet"), 0, 1)
       })
     assert(calls == 4)
-    assert(e.getMessage == s"someVerb lost 3 version races on $t")
+    assert(e.getMessage == s"someVerb lost 4 version races on $t")
     val head = SnapshotOps.currentVersion(t)
     assert(head == 7)
     val noop = Committed(head, 0, 0, 0, skipped = true)
@@ -353,6 +353,34 @@ class SnapshotOpsSpec extends SparkSpecBase {
     // second pass: one small (merged) file left -> nothing to do
     val c2 = SnapshotOps.commitCompactSmall(spark, t, target)
     assert(c2.skipped && SnapshotOps.currentVersion(t) == 3)
+  }
+
+  test("commitCompactSmall sizes a line without _bytes from the file " +
+      "and a line with it from the manifest") {
+    import spark.implicits._
+    val t = freshTable()
+    // six small files where the engine keeps data, published as plain
+    // path lines (the pre-_bytes manifest shape)
+    val dir = s"$t/data/legacy"
+    (1L to 60L).map(i => (i, i * 3)).toDF("id", "v").repartition(6)
+      .write.parquet(dir)
+    val files = new java.io.File(dir).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(files.size == 6)
+    val target = 1L << 20
+    // the first line records a target-size `_bytes`: the manifest, not
+    // the filesystem, decides it is at size, so it is reused
+    assert(SnapshotOps.tryPublish(t, 1,
+      s"${files.head}\t_bytes=$target..$target" +: files.tail))
+    val c = SnapshotOps.commitCompactSmall(spark, t, target)
+    assert(c.version == 2 && c.reused == 1 && c.written == 1, c.toString)
+    val v2 = SnapshotOps.snapshotFiles(t, 2)
+    assert(v2.contains(files.head) && files.tail.forall(!v2.contains(_)))
+    // the packed file holds exactly the five sized-by-file files' rows
+    assert(spark.read.parquet(v2.filterNot(_ == files.head): _*)
+      .as[(Long, Long)].collect().sorted.toSeq ==
+      spark.read.parquet(files.tail: _*).as[(Long, Long)].collect()
+        .sorted.toSeq)
   }
 
   test("commitMerge upserts copy-on-write: matched rows replace in only " +

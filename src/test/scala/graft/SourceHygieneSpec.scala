@@ -22,7 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * One commit loop: every snapshot commit verb runs
   * `SnapshotOps.casCommit`, so the CAS protocol, its retry budgets and
-  * its conflict count live in one place. */
+  * its conflict count live in one place.
+  *
+  * One parquet reader: the metadata plane and the snapshot sources read
+  * table-owned parquet files only through `SnapshotOps.readParquet`,
+  * which always supplies a schema, so no read plans a schema-inference
+  * job. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val invisibleWhitespace: Set[Int] =
@@ -53,6 +58,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  /** The `def` a 2-space-indented member of `lines` opens at or above
+    * index `i`. */
+  private def enclosingMember(lines: Seq[String], i: Int): String = {
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    lines.take(i + 1).reverseIterator.collectFirst {
+      case member(name) => name
+    }.getOrElse(s"<top of file, line ${i + 1}>")
+  }
+
   test("snapshot commits retry only in SnapshotOps.casCommit") {
     // spelled in pieces so this file does not match itself
     val loop = "while (" + "conflicts"
@@ -65,14 +79,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(hand.isEmpty, hand.mkString("\n"))
     // the enclosing member of every CAS publish in SnapshotOps
-    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
     val snap = main.filter(_._1.getFileName.toString == "SnapshotOps.scala")
+      .map(_._3)
     val callers = snap.indices.collect {
-      case i if snap(i)._3.contains(publish) &&
-          !snap(i)._3.contains("def " + publish) =>
-        snap.take(i + 1).reverseIterator.map(_._3).collectFirst {
-          case member(name) => name
-        }.getOrElse(s"<top of file, line ${snap(i)._2}>")
+      case i if snap(i).contains(publish) &&
+          !snap(i).contains("def " + publish) => enclosingMember(snap, i)
     }
     assert(callers.nonEmpty)
     val allowed = Set("casCommit", "tryPublish", "createBranchFork",
@@ -95,6 +106,34 @@ class SourceHygieneSpec extends AnyFunSuite {
           (line.contains(builder) ||
             (line.contains(fsKey) && !docOfFs(p, line))) =>
         s"$p:$n: ${line.trim}"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("table-owned parquet files are read only through " +
+      "SnapshotOps.readParquet") {
+    // spelled in pieces so this file does not match itself
+    val bare = ("""\.read\s*\.""" + "parquet" + """\(""").r
+    val merge = ("""option\(\s*"""" + "mergeSchema" + "\"").r
+    val scope = (scalaSources("src/main/scala/graft/sources") ++
+      Seq("graft/operators/SnapshotOps.scala",
+        "graft/streaming/SnapshotStream.scala",
+        "org/apache/spark/sql/graft/SnapshotStreamSource.scala",
+        "org/apache/spark/sql/graft/SnapshotStreamSink.scala")
+        .map(f => Paths.get("src/main/scala", f))).distinct
+    // footerSchema's fallback lets Spark infer a footer it cannot parse
+    val allowed = Set("SnapshotOps.scala" -> "footerSchema")
+    val offenders = scope.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      val lines = text.linesIterator.toSeq
+      (bare.findAllMatchIn(text).map(m => (m, true)) ++
+        merge.findAllMatchIn(text).map(m => (m, false))).flatMap {
+        case (m, isBare) =>
+          val i = text.substring(0, m.start).count(_ == '\n')
+          val owner = enclosingMember(lines, i)
+          if (isBare && allowed((p.getFileName.toString, owner))) None
+          else Some(s"$p:${i + 1} (in $owner): ${lines(i).trim}")
+      }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
