@@ -1360,14 +1360,15 @@ class Engine(val spark: SparkSession) {
       // duplicate target rows, as it does in any engine without the
       // cardinality check.
       //
-      // Routing: the UNCONDITIONAL single-action shapes — the classic
-      // upsert, the CDC delete-apply, insert-only, update-only —
-      // commit as ONE key-pruned commitMerge whose cost tracks the
-      // source batch; a conditional or BY SOURCE clause makes the
-      // outcome a per-target-row function of both sides, so a
-      // snapshot-backed table takes ONE atomic full commitRewrite
-      // (mirror-sync is O(table) in any engine) and a lazy table
-      // rematerializes.
+      // Routing: a key-shaped clause set without BY SOURCE — the
+      // upsert, the CDC delete-apply, conditional matched clauses —
+      // commits as ONE key-pruned merge whose clauses resolve inside
+      // the commit attempt and whose cost tracks the source batch (the
+      // key route below); a BY SOURCE clause, a non-key ON or a
+      // declined key route takes ONE atomic full commitRewrite on a
+      // snapshot-backed table (mirror-sync is O(table) in any engine),
+      // and a lazy table rematerializes. Every job the statement
+      // starts is labelled `MERGE <table>: <phase>`.
       val ls = Stmt.lexemes(c)
       val usingIdx = Stmt.findKw(ls, 2, "USING")
       val onIdx = Stmt.findKw(ls, usingIdx + 1, "ON")
@@ -1401,22 +1402,24 @@ class Engine(val spark: SparkSession) {
         txt.map(t => expr(DuckRewriter.rewrite(t, schemaOf)))
           .getOrElse(lit(true))
       // INSERT tail: (cols) VALUES (vals) — paren groups by lexeme;
-      // rows align to the target schema (absent columns null)
-      def insertRowsFor(cl: MergeClause, from: DataFrame): DataFrame = {
+      // the value of each named target column
+      def insertValues(
+          cl: MergeClause): Map[String, org.apache.spark.sql.Column] = {
         val (insCols, insVals) = cl.payload match {
           case MergeInsertTail(ic, iv) => (ic, iv)
           case _ => throw new IllegalArgumentException("MERGE: bad INSERT")
         }
-        val insertNames = insCols.split(",").map(n =>
-          norm(n.trim.stripPrefix(s"$tA.")))
-        val insertExprs = DuckRewriter.splitTop(insVals)
-          .map(v => expr(DuckRewriter.rewrite(v.trim, schemaOf)))
-        val named = from.select(insertExprs.zip(insertNames).map {
-          case (e, n) => e.as(n) }.toIndexedSeq: _*)
-        named.select(tgt.schema.fields.map { f =>
-          if (insertNames.contains(f.name.toLowerCase))
-            col(f.name).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
+        insCols.split(",").map(n => norm(n.trim.stripPrefix(s"$tA.")))
+          .zip(DuckRewriter.splitTop(insVals)
+            .map(v => expr(DuckRewriter.rewrite(v.trim, schemaOf))))
+          .toMap
+      }
+      // inserted rows align to the target schema (absent columns null)
+      def insertRowsFor(cl: MergeClause, from: DataFrame): DataFrame = {
+        val vals = insertValues(cl)
+        from.select(tgt.schema.fields.map { f =>
+          vals.get(f.name.toLowerCase).fold(lit(null).cast(f.dataType))(
+            _.cast(f.dataType)).as(f.name)
         }.toIndexedSeq: _*)
       }
       // row-level evaluator shared by the conditional/lazy paths:
@@ -1468,128 +1471,115 @@ class Engine(val spark: SparkSession) {
           }.foldLeft(keptRows)(_.unionByName(_))
         }
       }
-      // Snapshot route — any clause set WITHOUT a BY SOURCE arm maps
-      // onto the committed upsert (commitMerge) when the merge is
-      // key-shaped: ON is a pure equi-AND of target.col = source.col,
-      // the key is unique on both sides among touched rows (a fan-out
-      // merge is order-dependent in any engine), and no SET rewrites a
-      // key column. Without BY SOURCE the outcome is confined to rows
-      // holding SOURCE keys — unmatched target rows carry forward
-      // untouched — so the commit is key-prunable at file granularity
-      // exactly like the unconditional upsert (r16, the r15 ADVICE
-      // item: conditional matched-only merges no longer pay a
-      // full-table rewrite). Per matched row the FIRST true clause
-      // (statement order) wins: UPDATE winners become replacement
-      // rows, DELETE winners become deleteKeys, no-winner rows carry;
-      // unmatched source rows take the first true NOT MATCHED clause's
-      // INSERT. Only a BY SOURCE arm — whose outcome is a function of
-      // the target rows source does NOT hold — forces the O(table)
-      // full rewrite below.
+      // Key route — a clause set WITHOUT a BY SOURCE arm whose ON is a
+      // pure equi-AND of target.col = source.col, and whose SETs leave
+      // the key columns alone, commits as ONE key-pruned merge
+      // (SnapshotOps.commitMergeWith). Without BY SOURCE the outcome is
+      // confined to rows holding SOURCE keys — unmatched target rows
+      // carry forward untouched — so the commit rewrites only the files
+      // holding those keys, whatever the clauses' conditions. The
+      // clauses resolve INSIDE the commit attempt, against the base it
+      // publishes over (a retry re-resolves on the new base): one left
+      // join of the source with the key-pruned base, where per matched
+      // row the FIRST true MATCHED clause (statement order) wins —
+      // UPDATE winners write their replacement, DELETE winners delete,
+      // no-winner rows carry — and per unmatched source row the first
+      // true NOT MATCHED clause's INSERT writes. The attempt declines
+      // when a key it changes has a duplicate target row or a duplicate
+      // source row (a fan-out merge is order-dependent in any engine);
+      // the statement then takes the full rewrite below, as does any
+      // BY SOURCE arm — whose outcome is a function of the target rows
+      // the source does NOT hold.
       val mIdx = clauses.zipWithIndex.filter(_._1.kind == "m")
       val ntIdx = clauses.zipWithIndex.filter(_._1.kind == "nt")
       val noBySource = clauses.forall(_.kind != "ns")
       val allSets = mIdx.collect { case (cl, i) if cl.action == "update" =>
         (i, parseSets(cl.payload)) }
-      val keyPairs: Option[Seq[String]] = {
+      // (target key, source key) per ON conjunct
+      val keyPairs: Option[Seq[(String, String)]] = {
         val eq = """(?is)\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*""".r
         val conj = cond.split("(?i)\\s+AND\\s+").toSeq.map {
           case eq(a1, c1, a2, c2)
             if a1.equalsIgnoreCase(tA) && a2.equalsIgnoreCase(sA) =>
-              Some(norm(c1))
-          case eq(a1, _, a2, c2)
+              Some(norm(c1) -> c2)
+          case eq(a1, c1, a2, c2)
             if a1.equalsIgnoreCase(sA) && a2.equalsIgnoreCase(tA) =>
-              Some(norm(c2))
+              Some(norm(c2) -> c1)
           case _ => None
         }
         if (conj.forall(_.isDefined)) Some(conj.flatten) else None
       }
-      val routed = (if (noBySource) keyPairs else None).filterNot(ks =>
-        allSets.exists(_._2.keys.exists(ks.contains))).flatMap { ks =>
-        ensureSnapshot(tName).flatMap { dir =>
-          // matched rows with their winning clause: first-true in
-          // statement order, evaluated once per row on the inner join
-          val withAct = tgt.alias(tA).join(src.alias(sA), condE, "inner")
-            .withColumn("__act", mIdx.foldLeft(when(lit(false), -1)) {
-              case (acc, (cl, i)) => acc.when(clauseCond(cl.cond), i)
-            }.otherwise(-1))
-          val updIdxs = allSets.map(_._1)
-          val matchedRepl = if (updIdxs.isEmpty) tgt.limit(0)
-            else withAct.where(col("__act").isin(updIdxs: _*))
-              .select(tgt.schema.fields.map { f =>
-                val carried: org.apache.spark.sql.Column =
-                  col(s"$tA.${f.name}")
-                val relevant =
-                  allSets.filter(_._2.contains(f.name.toLowerCase))
-                val e =
-                  if (relevant.isEmpty) carried
-                  else relevant.foldLeft(
-                    Option.empty[org.apache.spark.sql.Column]) {
-                    case (acc, (i, s)) =>
-                      val v = s(f.name.toLowerCase).cast(f.dataType)
-                      Some(acc.fold(when(col("__act") === i, v))(
-                        _.when(col("__act") === i, v)))
-                  }.get.otherwise(carried)
-                e.as(f.name)
-              }.toIndexedSeq: _*)
-          // matched-DELETE winners: their target keys drop as part of
-          // the same key-pruned commit — the CDC delete-apply shape
-          val delIdxs = mIdx.collect {
-            case (cl, i) if cl.action == "delete" => i }
-          val deleteKeys = if (delIdxs.isEmpty) null
-            else withAct.where(col("__act").isin(delIdxs: _*))
-              .select(ks.map(k => col(s"$tA.$k").as(k)): _*)
-          // NOT MATCHED inserts: one anti-join, first-true clause wins
-          val insertRows = if (ntIdx.isEmpty) tgt.limit(0) else {
-            val withI = src.alias(sA).join(tgt.alias(tA), condE,
-              "left_anti").withColumn("__iact",
-                ntIdx.foldLeft(when(lit(false), -1)) {
-                  case (acc, (cl, i)) => acc.when(clauseCond(cl.cond), i)
-                }.otherwise(-1))
-            ntIdx.map { case (cl, i) =>
-              insertRowsFor(cl, withI.where(col("__iact") === i))
-            }.foldLeft(tgt.limit(0))(_.unionByName(_))
-          }
-          val upsert = matchedRepl.unionByName(insertRows).localCheckpoint()
-          val delK = Option(deleteKeys).map(_.localCheckpoint())
-          val kCols = ks.map(col)
-          def unique(df: DataFrame): Boolean = df.groupBy(kCols: _*)
-            .count().where(col("count") > 1).isEmpty
-          // target uniqueness only among keys the merge touches
-          // (upsert ∪ delete winners): unmatched duplicate-key target
-          // rows are untouched either way, so the eligibility gate
-          // scans the table once but shuffles only the touched slice.
-          // A duplicate touched target key falls back to the full
-          // rewrite (commitMerge's key replacement would clobber the
-          // carried duplicate — e.g. one dup wins a conditional
-          // UPDATE, the other wins nothing).
-          val touchedKeys = delK.foldLeft(
-            upsert.select(kCols: _*))(_.unionByName(_)).distinct()
-          val tgtTouchedUnique = unique(tgt.join(
-            broadcast(touchedKeys), ks, "left_semi"))
-          val routedOk =
-            if (tgtTouchedUnique && unique(upsert)) {
-              lastCommit(norm(tName)) = graft.operators.SnapshotOps
-                .commitMerge(spark, dir, upsert, ks,
-                  sourceVerified = true, deleteKeys = delK.orNull)
-              registerSnapshot(tName, dir)
-              Some(())
-            } else None
-          // the eligibility checkpoints' blocks die with the statement
-          graft.operators.SnapshotOps.releaseCheckpoint(upsert)
-          delK.foreach(graft.operators.SnapshotOps.releaseCheckpoint)
-          routedOk
-        }
+      val label = s"MERGE ${norm(tName)}"
+      def phase[T](p: String)(body: => T): T =
+        graft.operators.SnapshotOps.withJobLabel(spark, s"$label: $p")(body)
+      // the resolver: the clause outcome of every source row against
+      // the attempt's base (logical columns + __file), in the shape
+      // SnapshotOps.commitMergeWith documents
+      def resolveKeyed(base: DataFrame): DataFrame = {
+        import graft.operators.SnapshotOps.{MergeCarry, MergeDelete,
+          MergeKind, MergeWrite}
+        val fields = base.schema.fields.filter(_.name != "__file")
+        // NOT MATCHED clauses see the source alone (a name both sides
+        // carry means the source's, as in SQL): their winner and their
+        // per-column values evaluate before the join
+        val ins = ntIdx.map { case (cl, i) => (i, insertValues(cl)) }
+        val iact = ntIdx.foldLeft(when(lit(false), -1)) {
+          case (acc, (cl, i)) => acc.when(clauseCond(cl.cond), i)
+        }.otherwise(-1)
+        val srcIns = src.alias(sA).select(col("*") +: iact.as("__iact") +:
+          fields.toSeq.map { f =>
+            ins.filter(_._2.contains(f.name.toLowerCase))
+              .foldLeft(lit(null).cast(f.dataType)) { case (acc, (i, vs)) =>
+                when(col("__iact") === i,
+                  vs(f.name.toLowerCase).cast(f.dataType)).otherwise(acc)
+              }.as(s"__ins_${f.name}")
+          }: _*)
+        val j = srcIns.alias(sA).join(base.alias(tA), condE, "left_outer")
+        val matched = col(s"$tA.__file").isNotNull
+        // the winning clause, evaluated once per row
+        val act = mIdx.foldLeft(when(lit(false), -1)) {
+          case (acc, (cl, i)) => acc.when(matched && clauseCond(cl.cond), i)
+        }.when(!matched, col("__iact")).otherwise(-1)
+        val withAct = j.withColumn("__act", act)
+        val writeIdxs = allSets.map(_._1) ++ ntIdx.map(_._2)
+        val delIdxs = mIdx.collect {
+          case (cl, i) if cl.action == "delete" => i }
+        val kind = when(col("__act").isin(writeIdxs: _*), MergeWrite)
+          .when(col("__act").isin(delIdxs: _*), MergeDelete)
+          .when(matched, MergeCarry)
+        withAct.select(fields.toSeq.map { f =>
+          val carried = when(matched, col(s"$tA.${f.name}"))
+            .otherwise(col(s"__ins_${f.name}"))
+          allSets.filter(_._2.contains(f.name.toLowerCase))
+            .foldLeft(carried) { case (acc, (i, s)) =>
+              when(col("__act") === i,
+                s(f.name.toLowerCase).cast(f.dataType)).otherwise(acc)
+            }.as(f.name)
+        } ++ Seq(col(s"$tA.__file").as("__file"), kind.as(MergeKind)): _*)
+          .where(col(MergeKind).isNotNull)
       }
-      if (routed.isEmpty) ensureSnapshot(tName) match {
-        // BY SOURCE (or non-key-shaped / non-unique-key): per-target-
-        // row outcome over the whole table — one atomic full rewrite
-        // keeps the committed lifecycle (time travel spans the merge);
-        // the O(table) cost is inherent to row-conditional mirror-sync
-        // in any engine
+      val routed = (if (noBySource) keyPairs else None).filterNot(ks =>
+        allSets.exists(_._2.keys.exists(ks.map(_._1).contains)))
+        .flatMap { ks =>
+          phase("commit")(ensureSnapshot(tName)).flatMap { dir =>
+            val probe = src.select(ks.map { case (t, s) => col(s).as(t) }: _*)
+            graft.operators.SnapshotOps.commitMergeWith(spark, dir,
+              ks.map(_._1), probe, label)(resolveKeyed).map { c =>
+              lastCommit(norm(tName)) = c
+              phase("commit")(registerSnapshot(tName, dir))
+            }
+          }
+        }
+      if (routed.isEmpty) phase("commit")(ensureSnapshot(tName)) match {
+        // BY SOURCE (or non-key-shaped / a declined key route):
+        // per-target-row outcome over the whole table — one atomic full
+        // rewrite keeps the committed lifecycle (time travel spans the
+        // merge); the O(table) cost is inherent to row-conditional
+        // mirror-sync in any engine
         case Some(dir) =>
-          lastCommit(norm(tName)) = graft.operators.SnapshotOps
-            .commitRewrite(spark, dir, lit(true), fullContent)
-          registerSnapshot(tName, dir)
+          lastCommit(norm(tName)) = phase("rewrite")(graft.operators
+            .SnapshotOps.commitRewrite(spark, dir, lit(true), fullContent))
+          phase("commit")(registerSnapshot(tName, dir))
         case None => register(tName, fullContent(tgt))
       }
       empty()

@@ -541,9 +541,12 @@ object SnapshotOps {
   private val dvLiteralCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[Long]]]()
 
+  private def dvKey(dvs: Seq[FileEntry]): String =
+    dvs.map(_.path).sorted.mkString("\n")
+
   private def dvPositions(spark: SparkSession,
       dvs: Seq[FileEntry]): Map[String, Seq[Long]] = {
-    val key = dvs.map(_.path).sorted.mkString("\n")
+    val key = dvKey(dvs)
     val cached = dvLiteralCache.get(key)
     if (cached != null) return cached
     val m = readParquet(spark, dvs.map(_.path))
@@ -1188,15 +1191,28 @@ object SnapshotOps {
     if (dvs.isEmpty) return Nil
     val dv = readParquet(spark, dvs.map(_.path))
     // DV distinct-file list is bounded by the live-file count — a
-    // manifest-sized driver collect, same scale as `touched`
-    val dvFiles = dv.select(col(DvFileCol)).distinct()
-      .collect().map(_.getString(0))
+    // manifest-sized driver collect, same scale as `touched`. A small
+    // DV's comes from the positions the rewrite's own DV-filtered read
+    // collected (cached per DV list), with no job of its own.
+    val rows = dvs.flatMap(_.bounds.get(RowsKey)).map(_._1.toLong).sum
+    val positions =
+      if (rows > 0 && rows <= DvLiteralRows) Some(dvPositions(spark, dvs))
+      else None
+    val dvFiles = positions.fold(dv.select(col(DvFileCol)).distinct()
+      .collect().map(_.getString(0)).toSeq)(_.keys.toSeq)
     val drop = dvFiles.filter(v => rewritten.contains(localPath(v)))
     if (drop.isEmpty) return dvs.map("!" + _.line)
     val keep = dv.where(!col(DvFileCol).isin(drop.toSeq: _*))
     val dir = newDataDir(tableDir)
     keep.coalesce(4).write.parquet(dir)
-    dvEntries(spark, dir).map("!" + _.line)
+    val written = dvEntries(spark, dir)
+    // the survivors' positions are the old ones minus the dropped
+    // files: the next read of the new DV needs no collect job
+    positions.filter(_ => written.nonEmpty).foreach { p =>
+      if (dvLiteralCache.size > 256) dvLiteralCache.clear()
+      dvLiteralCache.put(dvKey(written), p -- drop)
+    }
+    written.map("!" + _.line)
   }
 
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
@@ -1346,6 +1362,17 @@ object SnapshotOps {
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(r => scala.util.Try(r.unpersist(false)))
+
+  /** Run `body` with every Spark job it starts described as `desc` (what
+    * a listener or the UI shows for the job), then restore the caller's
+    * description. */
+  private[graft] def withJobLabel[T](spark: SparkSession, desc: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
+  }
 
   private def metaLines(meta: Map[String, String]): Seq[String] =
     (meta - TsKey + (TsKey -> System.currentTimeMillis().toString))
@@ -3206,6 +3233,12 @@ object SnapshotOps {
       .split("\n").filter(_.nonEmpty).toSeq.map(parseEntry)
   }
 
+  /** Only the rows a branch has staged, through the footer-schema
+    * reader (no schema-inference job over the files just staged). */
+  def readStaged(spark: SparkSession, tableDir: String,
+      branch: String): DataFrame =
+    readParquet(spark, stagedEntries(tableDir, branch).map(_.path))
+
   /** The AUDIT view: current main plus the branch's staged rows — what
     * main WILL look like if the branch publishes. Constraint suites
     * (ConstraintOps) run against this, never against published data. */
@@ -3545,23 +3578,28 @@ object SnapshotOps {
     }
   }
 
-  /** Transactional MERGE (upsert): source rows REPLACE target rows
+  /** The outcome column of a resolved MERGE frame (see [[commitMergeWith]]):
+    * [[MergeWrite]] (the row lands in the new version: a matched row's
+    * replacement or an insert), [[MergeDelete]] (the matched target row
+    * drops and nothing replaces it) or [[MergeCarry]] (a matched target
+    * row no clause changes). */
+  private[graft] val MergeKind = "__kind"
+  private[graft] val MergeWrite = "write"
+  private[graft] val MergeDelete = "delete"
+  private[graft] val MergeCarry = "carry"
+
+  /** Transactional MERGE (upsert): source rows REPLACE the target rows
     * sharing their key (every copy, across files); source rows with no
-    * match APPEND. Copy-on-write at file granularity like
-    * [[commitRewrite]]: one pass finds the files holding matched keys
-    * (broadcast semi-join of the source's distinct keys), only those
-    * rewrite — matched target rows drop, each matched source row lands
-    * exactly once — while untouched files carry forward byte-for-byte
-    * with their stats lines; unmatched source rows write as fresh
-    * files. Cost: two snapshot scans (match + insert anti-join) plus a
-    * rewrite of only the touched data — the index-free MERGE shape; a
-    * bounds-pruned variant would consult [[rangeFiles]] on the key
-    * column first. The source must be key-unique (enforced — a dup
-    * would make the merge order-dependent). */
+    * match APPEND; target rows holding a `deleteKeys` tuple drop with
+    * no replacement. The degenerate resolver of [[commitMergeWith]]:
+    * every target row holding a source or delete key resolves to a
+    * delete, every source row to a write. The source must be key-unique
+    * (enforced — a duplicate would make the merge order-dependent). It
+    * is checkpointed once per call, so the key-range probe, the resolve
+    * and every retry read one copy of it (a streaming batch included). */
   def commitMerge(spark: SparkSession, tableDir: String,
       source: DataFrame, keyCols: Seq[String],
       txn: Option[(String, Long)] = None,
-      sourceVerified: Boolean = false,
       deleteKeys: DataFrame = null): Committed = {
     require(keyCols.nonEmpty, "commitMerge needs key columns")
     // same per-stream watermark as commitAppend: a replayed upsert
@@ -3570,21 +3608,59 @@ object SnapshotOps {
     val pre = currentVersion(tableDir)
     if (alreadyIn(txn, snapshotMeta(tableDir, pre)))
       return Committed(pre, 0, 0, 0, skipped = true)
-    val src = source.localCheckpoint() // read once, reused four times
-    // MERGE's matched-DELETE arm (r15): key tuples whose target rows
-    // drop — they join the touched-file discovery (a file holding a
-    // deleted key must rewrite) and the rewrite carries neither their
-    // rows nor a replacement. Disjoint from the source's keys by the
-    // caller's clause semantics (a key wins one action).
-    val delk = Option(deleteKeys)
-      .map(_.select(keyCols.map(col): _*).distinct().localCheckpoint())
     val keys = keyCols.map(col)
-    // sourceVerified: the caller already proved key uniqueness (the
-    // Engine's MERGE eligibility gate does) — don't re-shuffle for it
-    if (!sourceVerified)
-      require(src.groupBy(keys: _*).count().where(col("count") > 1)
-        .isEmpty, s"commitMerge source not unique on $keyCols")
-    try casCommit("commitMerge", tableDir, RescanBudget) { (base, conflicts) =>
+    val src = source.localCheckpoint()
+    val probe = Option(deleteKeys).foldLeft(src.select(keys: _*))(
+      (p, d) => p.unionByName(d.select(keys: _*)))
+    try commitMergeWith(spark, tableDir, keyCols, probe, s"MERGE $tableDir",
+        txn) { base =>
+      base.join(broadcast(probe), keyCols, "left_semi")
+        .withColumn(MergeKind, lit(MergeDelete))
+        .unionByName(src.withColumn("__file", lit(null).cast("string"))
+          .withColumn(MergeKind, lit(MergeWrite)))
+    }.getOrElse(throw new IllegalArgumentException(
+      s"commitMerge source not unique on $keyCols"))
+    finally releaseCheckpoint(src)
+  }
+
+  /** Transactional MERGE, copy-on-write at file granularity, resolved
+    * inside each commit attempt against the base it publishes over.
+    * The attempt:
+    *  1. reads the visible base once, file-tagged and pruned to the
+    *     files whose recorded key bounds (or bucket values) intersect
+    *     `probe`'s — the source's key tuples under the target's key
+    *     names; no recorded bounds, no pruning;
+    *  2. hands that frame (the logical columns plus `__file`) to
+    *     `resolve` and checkpoints what it returns: the same columns
+    *     with `__file` null on source-only rows, plus [[MergeKind]];
+    *  3. takes the verdict and the touched files from the checkpoint in
+    *     one aggregation. A key some row writes or deletes must have no
+    *     carried row (a duplicate target key: the rewrite drops every
+    *     row of a touched key) and at most one written row (a duplicate
+    *     source key). Otherwise the attempt declines: nothing is written
+    *     or published and the result is None;
+    *  4. rewrites the touched files — the files of the matched rows
+    *     that write or delete — in one read: their rows whose key such
+    *     a row holds drop and the written rows join them, while
+    *     untouched files carry forward byte-for-byte with their stats
+    *     lines.
+    * Cost: one read of the pruned base, one of the touched files, and
+    * jobs over the resolved rows only. A lost CAS re-runs the attempt,
+    * so every retry re-resolves on the new base: a concurrent commit's
+    * rows are never replaced by values computed from an older one.
+    * `probe` is read for the pruning bounds and `resolve` reads the
+    * source again, so both must be deterministic. Every job is labelled
+    * `"<label>: probe|resolve|rewrite|stats|commit"`. */
+  private[graft] def commitMergeWith(spark: SparkSession, tableDir: String,
+      keyCols: Seq[String], probe: DataFrame, label: String,
+      txn: Option[(String, Long)] = None)(
+      resolve: DataFrame => DataFrame): Option[Committed] = {
+    val keys = keyCols.map(col)
+    def phase[T](p: String)(body: => T): T =
+      withJobLabel(spark, s"$label: $p")(body)
+    var declined = false
+    val committed = casCommit("commitMerge", tableDir, RescanBudget) {
+        (base, conflicts) =>
       if (alreadyIn(txn, snapshotMeta(tableDir, base))) // twin won the race
         Skip(Committed(base, 0, 0, conflicts, skipped = true))
       else {
@@ -3593,33 +3669,28 @@ object SnapshotOps {
         val eqs = eqDeleteUnits(tableDir, base)
         val entries = units.flatMap(_.entries)
         require(entries.nonEmpty, s"commitMerge on empty table $tableDir")
-        // VISIBLE rows only: an upsert must treat an eq-deleted key as
+        // VISIBLE rows only: a merge must treat an eq-deleted key as
         // absent (insert), never as a match to resurrect-and-replace.
-        // source/keyCols are LOGICAL — snapshot frames read as the
-        // mapped view (identity for never-evolved tables), the final
-        // write translates back to the frozen physical names.
+        // keyCols and the resolved frame are LOGICAL — snapshot frames
+        // read as the mapped view (identity for never-evolved tables),
+        // the final write translates back to the frozen physical names.
         val mapping = columnMapping(tableDir, base)
         val snapPhys = readUnitsVisible(spark, tableDir, units,
           dvs, eqs, tagged = true, mergeSchema = mapping.nonEmpty)
-        // the rewrite reads a file SUBSET — anchor it to the full
+        // the pruned reads take a file SUBSET — anchor them to the full
         // physical snapshot schema so files predating an evolved append
         // surface the newer columns (as null) instead of failing the
         // logical projection
         val physSchema = org.apache.spark.sql.types.StructType(
           snapPhys.schema.filterNot(f =>
             f.name == "__file" || f.name == "__pos"))
-        // manifest-pruned probe (r14): when the target records bounds on
-        // merge keys, the SOURCE's key range (one tiny agg over the
-        // already-checkpointed source) prunes both the match probe AND
-        // the insert anti-join to the bound-intersecting files — a row
-        // matching a source key must carry that key's value, so it can
-        // only live in a file whose bounds intersect the source range.
-        // Unsupported key types or an empty source decline (full scan).
-        val candSet: Option[Set[String]] = {
-          // the probe must span the DELETE keys too: a file holding only
-          // deleted keys must not prune away
-          val probe = delk.fold(src.select(keys: _*))(d =>
-            src.select(keys: _*).unionByName(d))
+        // manifest-pruned base (r14): when the target records bounds on
+        // the merge keys, the probe's key range (one small agg) prunes
+        // the base to the bound-intersecting files — a row matching a
+        // source key must carry that key's value, so it can only live
+        // in a file whose bounds intersect the source range.
+        // Unsupported key types or an empty probe decline (full scan).
+        val candSet: Option[Set[String]] = phase("probe") {
           val boundsPreds: Seq[(String,
               Seq[(Option[BigDecimal], Option[BigDecimal])])] = {
             val physKeys = keyCols.map(physName(tableDir, base, _))
@@ -3641,16 +3712,14 @@ object SnapshotOps {
               if (preds.size != keyCols.size) Seq.empty else preds
             }.getOrElse(Seq.empty)
           }
-          // bucket-spec probes (r16, the r15 verdict's #7): a bucket
-          // transform on a merge key serves the same pruning
-          // STRUCTURALLY, with auto_stats off — files written under the
-          // spec record their derived `_p.` bucket value, and the
-          // probe's distinct bucket set (≤ n values by construction, one
-          // small agg through the SAME xxhash64 the write expression
-          // used) becomes exact point alternatives on that key. A merge
-          // keyed on the bucketed column then opens only the source
-          // keys' buckets; pre-spec files carry no `_p.` bound and are
-          // never skipped.
+          // bucket-spec probes (r16): a bucket transform on a merge key
+          // serves the same pruning STRUCTURALLY, with auto_stats off —
+          // files written under the spec record their derived `_p.`
+          // bucket value, and the probe's distinct bucket set (≤ n
+          // values by construction, one small agg through the SAME
+          // xxhash64 the write expression used) becomes exact point
+          // alternatives on that key. Pre-spec files carry no `_p.`
+          // bound and are never skipped.
           val bucketPreds: Seq[(String,
               Seq[(Option[BigDecimal], Option[BigDecimal])])] =
             partitionSpecAll(tableDir, base)
@@ -3686,51 +3755,68 @@ object SnapshotOps {
             mapping, extra = Seq("__file"))
           case None => logicalView(snapPhys, mapping, extra = Seq("__file"))
         }
-        // discovery probes source keys ∪ delete keys; the rewrite's
-        // carry-forward anti-join uses the same union, so deleted keys'
-        // rows vanish without a replacement
-        val srcKeys = broadcast(delk
-          .fold(src.select(keys: _*))(d =>
-            src.select(keys: _*).unionByName(d)).distinct())
-        val touched = snap
-          .select(keys :+ col("__file").as("f"): _*)
-          .join(srcKeys, keyCols, "left_semi")
-          .select(col("f"))
-          .distinct().collect().map(r => localPath(r.getString(0))).toSet
-        // group-granular COW, as in commitRewrite (see cowLines)
-        val rewritten = entries.count(e => touched.contains(localPath(e.path)))
-        val written = {
-          val dir = newDataDir(tableDir)
-          def rewriteIn() = logicalView(readUnitsVisible(spark, tableDir,
-            units, dvs, eqs,
-            anchor = if (mapping.nonEmpty) physSchema else null,
-            keep = e => touched.contains(localPath(e.path))), mapping)
-          val matchedKeys =
-            if (rewritten == 0) null
-            else rewriteIn().select(keys: _*).distinct()
-          val replaced =
-            if (rewritten == 0) src.limit(0)
-            else {
-              val in = rewriteIn()
-              in.join(srcKeys, keyCols, "left_anti")
-                .unionByName(src.join(broadcast(matchedKeys), keyCols,
-                  "left_semi"))
-            }
-          // inserts: source keys matched NOWHERE in the snapshot
-          val inserts = src.join(snap.select(keys: _*).distinct(),
-            keyCols, "left_anti")
-          toPhysical(replaced.unionByName(inserts), mapping)
-            .write.parquet(dir)
-          entriesFor(spark, parquetFilesIn(dir), statsColsOf(entries),
-            bloomColsOf(entries))
-        }
-        Publish(cowLines(spark, tableDir, base, units, dvs, touched, written,
-          txn), entries.size - rewritten, written.size)
+        val cols = snap.columns.filterNot(c => c == "__file" || c == "__pos")
+        val resolved = phase("resolve")(
+          resolve(snap.select((cols :+ "__file").map(col).toIndexedSeq: _*))
+            .localCheckpoint())
+        try {
+          val kind = col(MergeKind)
+          val changes = kind =!= MergeCarry
+          // per key: written and carried rows, and the files its
+          // changing rows name; then over the keys some row changes,
+          // whether any breaks the rule, whether any writes, and the
+          // touched files (a file-set-sized collect)
+          val verdict = phase("resolve")(resolved.groupBy(keys: _*)
+            .agg(sum(when(kind === MergeWrite, 1).otherwise(0)).as("w"),
+              sum(when(kind === MergeCarry, 1).otherwise(0)).as("c"),
+              max(when(changes, 1).otherwise(0)).as("t"),
+              collect_set(when(changes, col("__file"))).as("fs"))
+            .where(col("t") === 1)
+            .select((col("w") > 1 || col("c") > 0).cast("int").as("bad"),
+              (col("w") > 0).cast("int").as("wr"),
+              explode_outer(col("fs")).as("f"))
+            .agg(max(col("bad")), max(col("wr")), collect_set(col("f")))
+            .head())
+          if (!verdict.isNullAt(0) && verdict.getInt(0) == 1) {
+            declined = true
+            Skip(Committed(base, 0, 0, conflicts, skipped = true))
+          } else {
+            val anyWrite = !verdict.isNullAt(1) && verdict.getInt(1) == 1
+            val touched = verdict.getSeq[String](2).map(localPath).toSet
+            // group-granular COW, as in commitRewrite (see cowLines)
+            val rewritten =
+              entries.count(e => touched.contains(localPath(e.path)))
+            val writes = resolved.where(kind === MergeWrite)
+              .select(cols.map(col).toIndexedSeq: _*)
+            val written =
+              if (rewritten == 0 && !anyWrite) Seq.empty[FileEntry]
+              else {
+                val dir = newDataDir(tableDir)
+                phase("rewrite") {
+                  val out =
+                    if (rewritten == 0) writes
+                    else logicalView(readUnitsVisible(spark, tableDir,
+                      units, dvs, eqs,
+                      anchor = if (mapping.nonEmpty) physSchema else null,
+                      keep = e => touched.contains(localPath(e.path))),
+                      mapping)
+                      .join(broadcast(resolved
+                        .where(col("__file").isNotNull && changes)
+                        .select(keys: _*)), keyCols, "left_anti")
+                      .unionByName(writes)
+                  toPhysical(out, mapping).write.parquet(dir)
+                }
+                phase("stats")(entriesFor(spark, parquetFilesIn(dir),
+                  statsColsOf(entries), bloomColsOf(entries)))
+              }
+            Publish(phase("commit")(cowLines(spark, tableDir, base, units,
+              dvs, touched, written, txn)), entries.size - rewritten,
+              written.size)
+          }
+        } finally releaseCheckpoint(resolved)
       }
-    } finally {
-      releaseCheckpoint(src)
-      delk.foreach(releaseCheckpoint)
     }
+    if (declined) None else Some(committed)
   }
 
   /** Small-file compaction POLICY — q196/commitCompact generalized to

@@ -700,8 +700,7 @@ object StreamingOps {
         SnapshotOps.stageAppend(spark, table, branch, batch.toDF(),
           statsCols = Seq("doc_id"))
         val dirty = graft.operators.ConstraintOps.rowChecks(
-          spark.read.parquet(SnapshotOps.stagedEntries(table, branch)
-            .map(_.path): _*),
+          SnapshotOps.readStaged(spark, table, branch),
           Seq("chars_nonneg" -> (col("n_chars") >= 0)))
           .agg(sum(col("violations"))).head().getLong(0)
         if (dirty == 0) {

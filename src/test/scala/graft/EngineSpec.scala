@@ -1439,6 +1439,49 @@ class EngineSpec extends SparkSpecBase {
     e.close()
   }
 
+  test("MERGE resolves its clauses against the base it commits over: " +
+      "a commit landing after the table was bound is not lost") {
+    import spark.implicits._
+    val e = engine
+    e.executeDuck("CREATE TABLE ms (id int, qty int)")
+    e.executeDuck("INSERT INTO ms VALUES (1, 10), (2, 20)")
+    // another writer moves the base past the engine's bound frame
+    val dir = e.snapshotDir("ms").get
+    graft.operators.SnapshotOps.commitMerge(spark, dir,
+      Seq((1, 100)).toDF("id", "qty"), Seq("id"))
+    e.executeDuck("CREATE TABLE msd (id int, dq int)")
+    e.executeDuck("INSERT INTO msd VALUES (1, 5), (3, 7)")
+    e.executeDuck(
+      """MERGE INTO ms USING msd ON ms.id = msd.id
+        |WHEN MATCHED THEN UPDATE SET qty = ms.qty + msd.dq
+        |WHEN NOT MATCHED THEN INSERT (id, qty) VALUES (msd.id, msd.dq)"""
+        .stripMargin)
+    assert(e.executeDuck("SELECT id, qty FROM ms ORDER BY id").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+      Seq(1 -> 105, 2 -> 20, 3 -> 7))
+    assert(graft.operators.SnapshotOps.currentVersion(dir) == 3)
+    e.close()
+  }
+
+  test("MERGE: an INSERT whose key value another target row already " +
+      "holds appends beside it, as the full rewrite does") {
+    val e = engine
+    e.executeDuck("CREATE TABLE mk (id int, qty int)")
+    e.executeDuck("INSERT INTO mk VALUES (1, 10), (2, 20), (1001, 7)")
+    e.executeDuck("CREATE TABLE mks (k int, q int)")
+    e.executeDuck("INSERT INTO mks VALUES (1, 5), (3, 9)")
+    // key 3 inserts as id 1001: an INSERT, not an update of row 1001
+    e.executeDuck(
+      """MERGE INTO mk USING mks ON mk.id = mks.k
+        |WHEN MATCHED THEN UPDATE SET qty = mks.q
+        |WHEN NOT MATCHED THEN INSERT (id, qty) VALUES (mks.k + 998, mks.q)"""
+        .stripMargin)
+    assert(e.executeDuck("SELECT id, qty FROM mk ORDER BY id, qty").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+      Seq(1 -> 5, 2 -> 20, 1001 -> 7, 1001 -> 9))
+    e.close()
+  }
+
   test("named refs (r16): tags and branch forks share one ref " +
       "namespace — same-named pairs are rejected in both directions") {
     val e = engine

@@ -1,0 +1,182 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+
+import graft.operators.SnapshotOps
+
+/** The key-routed MERGE's cost, pinned by counters rather than seconds:
+  * the Spark jobs one statement launches, the records its tasks read,
+  * and the label every one of those jobs carries. Next to the budget,
+  * the clause shapes the route serves keep their results. */
+class MergeBudgetSpec extends SparkSpecBase {
+
+  /** One job a statement launched: its description and the input
+    * records its tasks read (parquet scans and cached blocks alike). */
+  private final case class Job(id: Int, desc: String, records: Long)
+
+  /** Every job `body` starts, in start order. */
+  private def jobsOf(body: => Unit): Seq[Job] = {
+    val descs = mutable.LinkedHashMap.empty[Int, String]
+    val stageJob = mutable.Map.empty[Int, Int]
+    val records = mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    // a marker job started last shows the (asynchronous) listener bus
+    // has delivered every event before it
+    val marker = s"merge-budget-marker-${System.nanoTime()}"
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+        val desc = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (desc == marker) markerSeen = true
+        else {
+          descs(j.jobId) = desc
+          j.stageIds.foreach(s => stageJob(s) = j.jobId)
+        }
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+        for (job <- stageJob.get(t.stageId); m <- Option(t.taskMetrics))
+          records(job) += m.inputMetrics.recordsRead
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(listener)
+    listener.synchronized(
+      descs.toSeq.map { case (id, d) => Job(id, d, records(id)) })
+  }
+
+  private def rowsOf(e: Engine, sql: String): Seq[(Int, Int)] =
+    e.executeDuck(sql).collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+
+  private val Upsert =
+    """MERGE INTO mb USING mb_stg ON mb.id = mb_stg.sid
+      |WHEN MATCHED THEN UPDATE SET qty = mb_stg.sqty
+      |WHEN NOT MATCHED THEN INSERT (id, k, qty)
+      |  VALUES (mb_stg.sid, 0, mb_stg.sqty)"""
+      .stripMargin
+
+  test("a key-routed upsert MERGE on a multi-file table launches at " +
+      "most 12 labelled jobs and reads each target file at most twice") {
+    val e = new Engine(spark)
+    e.executeDuck("CREATE TABLE mb (id int, k int, qty int)")
+    // four commits, one file each: ids 1-100, 101-200, 201-300, 301-400
+    (0 until 4).foreach { f =>
+      e.executeDuck("INSERT INTO mb VALUES " + (1 to 100)
+        .map(i => s"(${f * 100 + i}, ${i % 7}, ${f * 100 + i})").mkString(", "))
+    }
+    val dir = e.snapshotDir("mb").get
+    assert(SnapshotOps.snapshotFileCount(dir, 4) == 4)
+    val tableRows = 400L
+    // matched keys in the first two files only, plus three inserts
+    e.executeDuck("CREATE OR REPLACE TABLE mb_stg AS SELECT * FROM (VALUES " +
+      "(5, 1005), (50, 1050), (150, 1150), (199, 1199), (901, 901), " +
+      "(902, 902), (903, 903)) AS v(sid, sqty)")
+    val jobs = jobsOf(e.executeDuck(Upsert))
+    val table = jobs.map(j => f"job ${j.id}%4d ${j.records}%6d  ${j.desc}")
+      .mkString("\n")
+    info(s"${jobs.size} jobs (id, input records, label):\n$table")
+    assert(jobs.size <= 12, s"${jobs.size} MERGE jobs:\n$table")
+    assert(jobs.map(_.records).sum <= 2 * tableRows,
+      s"${jobs.map(_.records).sum} input records for $tableRows table " +
+        s"rows:\n$table")
+    val phase = """MERGE mb: (probe|resolve|rewrite|stats|commit)""".r
+    val unlabelled = jobs.filterNot(j => phase.matches(j.desc))
+    assert(unlabelled.isEmpty, s"jobs without a MERGE label:\n$table")
+    // the caller's own description is restored after the statement
+    assert(spark.sparkContext.getLocalProperty("spark.job.description")
+      == null)
+    val c = e.lastCommit("mb")
+    assert(c.written >= 1 && c.reused == 2, c.toString)
+    val got = rowsOf(e, "SELECT id, qty FROM mb WHERE id IN " +
+      "(5, 6, 50, 150, 199, 250, 901, 902, 903) ORDER BY id")
+    assert(got == Seq(5 -> 1005, 6 -> 6, 50 -> 1050, 150 -> 1150,
+      199 -> 1199, 250 -> 250, 901 -> 901, 902 -> 902, 903 -> 903), got)
+    assert(e.executeDuck("SELECT count(*) FROM mb").collect()(0)
+      .getLong(0) == 403L)
+    e.close()
+  }
+
+  test("the key-routed MERGE keeps its results: duplicate touched " +
+      "target key, conditional clause, matched DELETE, a renamed " +
+      "column and an equality-deleted key") {
+    val e = new Engine(spark)
+    def table(name: String, rows: String): String = {
+      e.executeDuck(s"CREATE TABLE $name (id int, qty int)")
+      e.executeDuck(s"INSERT INTO $name VALUES $rows")
+      e.snapshotDir(name).get
+    }
+    // a duplicate touched target key declines the key route: the full
+    // rewrite (one more commit, every file rewritten) lands the result
+    val dd = table("mb_dup", "(1, 5), (1, 50), (2, 7)")
+    e.executeDuck("INSERT INTO mb_dup VALUES (3, 30)")
+    e.executeDuck("CREATE TABLE mb_dups (k int)")
+    e.executeDuck("INSERT INTO mb_dups VALUES (1)")
+    e.executeDuck("""MERGE INTO mb_dup USING mb_dups ON mb_dup.id = mb_dups.k
+      |WHEN MATCHED AND mb_dup.qty >= 10 THEN UPDATE SET qty = 0"""
+      .stripMargin)
+    assert(rowsOf(e, "SELECT id, qty FROM mb_dup ORDER BY id, qty") ==
+      Seq(1 -> 0, 1 -> 5, 2 -> 7, 3 -> 30))
+    assert(SnapshotOps.currentVersion(dd) == 3)
+    assert(e.lastCommit("mb_dup").reused == 0, e.lastCommit("mb_dup"))
+
+    // a conditional clause and a matched DELETE in one statement: the
+    // first true clause wins per row, a row winning none carries
+    table("mb_cd", "(1, 5), (2, 50), (3, 500), (4, 1)")
+    e.executeDuck("INSERT INTO mb_cd VALUES (10, 10)")
+    e.executeDuck("CREATE TABLE mb_cds (k int, dq int)")
+    e.executeDuck("INSERT INTO mb_cds VALUES (1, 10), (2, 10), (3, 10), " +
+      "(9, 9)")
+    e.executeDuck("""MERGE INTO mb_cd USING mb_cds ON mb_cd.id = mb_cds.k
+      |WHEN MATCHED AND mb_cd.qty >= 100 THEN DELETE
+      |WHEN MATCHED AND mb_cd.qty >= 10 THEN
+      |  UPDATE SET qty = mb_cd.qty + mb_cds.dq
+      |WHEN NOT MATCHED AND mb_cds.dq > 5 THEN
+      |  INSERT (id, qty) VALUES (k, dq)"""
+      .stripMargin)
+    assert(rowsOf(e, "SELECT id, qty FROM mb_cd ORDER BY id") ==
+      Seq(1 -> 5, 2 -> 60, 4 -> 1, 9 -> 9, 10 -> 10))
+    assert(e.lastCommit("mb_cd").reused == 1, e.lastCommit("mb_cd"))
+
+    // a renamed (column-mapped) table merges under its logical names
+    val rd = table("mb_ren", "(1, 10), (2, 20)")
+    e.executeDuck("ALTER TABLE mb_ren RENAME COLUMN qty TO amount")
+    assert(SnapshotOps.columnMapping(rd, SnapshotOps.currentVersion(rd))
+      .nonEmpty)
+    e.executeDuck("CREATE TABLE mb_rens (k int, a int)")
+    e.executeDuck("INSERT INTO mb_rens VALUES (2, 22), (3, 33)")
+    e.executeDuck("""MERGE INTO mb_ren USING mb_rens ON mb_ren.id = mb_rens.k
+      |WHEN MATCHED THEN UPDATE SET amount = mb_rens.a
+      |WHEN NOT MATCHED THEN INSERT (id, amount) VALUES (k, a)"""
+      .stripMargin)
+    assert(rowsOf(e, "SELECT id, amount FROM mb_ren ORDER BY id") ==
+      Seq(1 -> 10, 2 -> 22, 3 -> 33))
+
+    // an equality-deleted key is absent: the merge inserts it, it does
+    // not resurrect the deleted row (nor update it)
+    table("mb_eq", "(1, 10), (2, 20), (3, 30)")
+    e.executeDuck("SET delete_mode = 'eq'")
+    try e.executeDuck("DELETE FROM mb_eq WHERE id = 2")
+    finally e.executeDuck("SET delete_mode = 'cow'")
+    e.executeDuck("CREATE TABLE mb_eqs (k int, q int)")
+    e.executeDuck("INSERT INTO mb_eqs VALUES (2, 222), (3, 333)")
+    e.executeDuck("""MERGE INTO mb_eq USING mb_eqs ON mb_eq.id = mb_eqs.k
+      |WHEN MATCHED THEN UPDATE SET qty = mb_eq.qty + mb_eqs.q
+      |WHEN NOT MATCHED THEN INSERT (id, qty) VALUES (k, q)"""
+      .stripMargin)
+    assert(rowsOf(e, "SELECT id, qty FROM mb_eq ORDER BY id") ==
+      Seq(1 -> 10, 2 -> 222, 3 -> 363))
+    e.close()
+  }
+}

@@ -57,6 +57,47 @@ class SnapshotOpsSpec extends SparkSpecBase {
     assert(SnapshotOps.currentVersion(t) == head)
   }
 
+  test("commitMergeWith re-resolves a lost attempt on the new base: " +
+      "the retry's rows reflect the competitor's commit") {
+    import spark.implicits._
+    import SnapshotOps.{MergeCarry, MergeKind, MergeWrite}
+    val t = freshTable()
+    SnapshotOps.commitAppend(spark, t,
+      Seq((1L, 10L), (2L, 20L)).toDF("id", "qty"))                  // v1
+    val delta = Seq((1L, 5L), (3L, 7L)).toDF("sid", "dq")
+    // UPDATE SET qty = qty + dq for matched ids, INSERT the rest; the
+    // first attempt lets a competitor set qty = 100 for id 1 first
+    val bases = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val c = SnapshotOps.commitMergeWith(spark, t, Seq("id"),
+        delta.select(col("sid").as("id")), "MERGE spec") { base =>
+      if (bases.isEmpty)
+        SnapshotOps.commitMerge(spark, t,
+          Seq((1L, 100L)).toDF("id", "qty"), Seq("id"))             // v2
+      bases += base.count()
+      val j = delta.join(base, col("sid") === col("id"), "left_outer")
+      val matched = col("__file").isNotNull
+      j.select(coalesce(col("id"), col("sid")).as("id"),
+        when(matched, col("qty") + col("dq")).otherwise(col("dq")).as("qty"),
+        col("__file"),
+        lit(MergeWrite).as(MergeKind))
+    }.get
+    assert(bases == Seq(2L, 2L), "the lost attempt resolved once, the " +
+      s"retry once more: $bases")
+    assert(c.version == 3 && c.conflicts == 1, c.toString)
+    assert(SnapshotOps.readLatest(spark, t).as[(Long, Long)].collect()
+      .sorted.toSeq == Seq((1L, 105L), (2L, 20L), (3L, 7L)))
+    // a carried row on a key the resolver changes declines the merge:
+    // nothing is written or published
+    val declined = SnapshotOps.commitMergeWith(spark, t, Seq("id"),
+        Seq(1L).toDF("id"), "MERGE spec") { base =>
+      val one = base.where(col("id") === 1L)
+      one.withColumn(MergeKind, lit(MergeWrite))
+        .unionByName(one.withColumn(MergeKind, lit(MergeCarry)))
+    }
+    assert(declined.isEmpty)
+    assert(SnapshotOps.currentVersion(t) == 3)
+  }
+
   test("two concurrent appends: both land, versions are consecutive, no " +
       "rows lost or duplicated") {
     import spark.implicits._

@@ -136,5 +136,17 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+    // nor does any other caller read a table's files by listing them
+    // out of SnapshotOps (a staged branch, a snapshot's file list)
+    val listed = ("""\.read\s*\.""" + "parquet" +
+      """\(\s*(?:graft\.operators\.)?SnapshotOps\.""").r
+    val outside = scalaSources("src/main/scala").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      listed.findAllMatchIn(text).map { m =>
+        val i = text.substring(0, m.start).count(_ == '\n')
+        s"$p:${i + 1}: ${text.linesIterator.drop(i).next().trim}"
+      }
+    }
+    assert(outside.isEmpty, outside.mkString("\n"))
   }
 }
