@@ -541,12 +541,9 @@ object SnapshotOps {
   private val dvLiteralCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[Long]]]()
 
-  private def dvKey(dvs: Seq[FileEntry]): String =
-    dvs.map(_.path).sorted.mkString("\n")
-
   private def dvPositions(spark: SparkSession,
       dvs: Seq[FileEntry]): Map[String, Seq[Long]] = {
-    val key = dvKey(dvs)
+    val key = dvs.map(_.path).sorted.mkString("\n")
     val cached = dvLiteralCache.get(key)
     if (cached != null) return cached
     val m = readParquet(spark, dvs.map(_.path))
@@ -1191,28 +1188,15 @@ object SnapshotOps {
     if (dvs.isEmpty) return Nil
     val dv = readParquet(spark, dvs.map(_.path))
     // DV distinct-file list is bounded by the live-file count — a
-    // manifest-sized driver collect, same scale as `touched`. A small
-    // DV's comes from the positions the rewrite's own DV-filtered read
-    // collected (cached per DV list), with no job of its own.
-    val rows = dvs.flatMap(_.bounds.get(RowsKey)).map(_._1.toLong).sum
-    val positions =
-      if (rows > 0 && rows <= DvLiteralRows) Some(dvPositions(spark, dvs))
-      else None
-    val dvFiles = positions.fold(dv.select(col(DvFileCol)).distinct()
-      .collect().map(_.getString(0)).toSeq)(_.keys.toSeq)
+    // manifest-sized driver collect, same scale as `touched`
+    val dvFiles = dv.select(col(DvFileCol)).distinct()
+      .collect().map(_.getString(0))
     val drop = dvFiles.filter(v => rewritten.contains(localPath(v)))
     if (drop.isEmpty) return dvs.map("!" + _.line)
     val keep = dv.where(!col(DvFileCol).isin(drop.toSeq: _*))
     val dir = newDataDir(tableDir)
     keep.coalesce(4).write.parquet(dir)
-    val written = dvEntries(spark, dir)
-    // the survivors' positions are the old ones minus the dropped
-    // files: the next read of the new DV needs no collect job
-    positions.filter(_ => written.nonEmpty).foreach { p =>
-      if (dvLiteralCache.size > 256) dvLiteralCache.clear()
-      dvLiteralCache.put(dvKey(written), p -- drop)
-    }
-    written.map("!" + _.line)
+    dvEntries(spark, dir).map("!" + _.line)
   }
 
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
@@ -1293,6 +1277,10 @@ object SnapshotOps {
   /** Nothing to publish against this base (an idempotent replay, an
     * empty match): `committed` is returned as is and no version burns. */
   private[graft] final case class Skip(committed: Committed) extends Outcome
+  /** The verb refuses this base: nothing is published and
+    * [[casCommitOrDecline]] returns None (a MERGE whose resolved rows
+    * break its eligibility rule). */
+  private[graft] case object Decline extends Outcome
 
   private val RelistBudget = 20
   private val RescanBudget = 5
@@ -1316,19 +1304,27 @@ object SnapshotOps {
     * re-write data, so under contention they give up sooner, after
     * [[RescanBudget]] (5) retries. */
   private[graft] def casCommit(verb: String, tableDir: String, budget: Int)(
-      attempt: (Int, Int) => Outcome): Committed = {
+      attempt: (Int, Int) => Outcome): Committed =
+    casCommitOrDecline(verb, tableDir, budget)(attempt).getOrElse(
+      throw new IllegalStateException(s"$verb declined on $tableDir"))
+
+  /** [[casCommit]] for a verb whose attempt may return [[Decline]]:
+    * None when it does, with nothing published. */
+  private[graft] def casCommitOrDecline(verb: String, tableDir: String,
+      budget: Int)(attempt: (Int, Int) => Outcome): Option[Committed] = {
     @scala.annotation.tailrec
-    def run(conflicts: Int): Committed =
+    def run(conflicts: Int): Option[Committed] =
       if (conflicts > budget)
         throw new java.util.ConcurrentModificationException(
           s"$verb lost $conflicts version races on $tableDir")
       else {
         val base = currentVersion(tableDir)
         attempt(base, conflicts) match {
-          case Skip(committed) => committed
+          case Skip(committed) => Some(committed)
+          case Decline => None
           case Publish(lines, reused, written) =>
             if (tryPublishLines(tableDir, base + 1, lines))
-              Committed(base + 1, reused, written, conflicts)
+              Some(Committed(base + 1, reused, written, conflicts))
             else run(conflicts + 1)
         }
       }
@@ -3590,17 +3586,15 @@ object SnapshotOps {
 
   /** Transactional MERGE (upsert): source rows REPLACE the target rows
     * sharing their key (every copy, across files); source rows with no
-    * match APPEND; target rows holding a `deleteKeys` tuple drop with
-    * no replacement. The degenerate resolver of [[commitMergeWith]]:
-    * every target row holding a source or delete key resolves to a
-    * delete, every source row to a write. The source must be key-unique
+    * match APPEND. The degenerate resolver of [[commitMergeWith]]:
+    * every target row holding a source key resolves to a delete, every
+    * source row to a write. The source must be key-unique
     * (enforced — a duplicate would make the merge order-dependent). It
     * is checkpointed once per call, so the key-range probe, the resolve
     * and every retry read one copy of it (a streaming batch included). */
   def commitMerge(spark: SparkSession, tableDir: String,
       source: DataFrame, keyCols: Seq[String],
-      txn: Option[(String, Long)] = None,
-      deleteKeys: DataFrame = null): Committed = {
+      txn: Option[(String, Long)] = None): Committed = {
     require(keyCols.nonEmpty, "commitMerge needs key columns")
     // same per-stream watermark as commitAppend: a replayed upsert
     // batch (the streaming CDC-apply sink's at-least-once retry) must
@@ -3610,8 +3604,7 @@ object SnapshotOps {
       return Committed(pre, 0, 0, 0, skipped = true)
     val keys = keyCols.map(col)
     val src = source.localCheckpoint()
-    val probe = Option(deleteKeys).foldLeft(src.select(keys: _*))(
-      (p, d) => p.unionByName(d.select(keys: _*)))
+    val probe = src.select(keys: _*)
     try commitMergeWith(spark, tableDir, keyCols, probe, s"MERGE $tableDir",
         txn) { base =>
       base.join(broadcast(probe), keyCols, "left_semi")
@@ -3629,7 +3622,8 @@ object SnapshotOps {
     *  1. reads the visible base once, file-tagged and pruned to the
     *     files whose recorded key bounds (or bucket values) intersect
     *     `probe`'s — the source's key tuples under the target's key
-    *     names; no recorded bounds, no pruning;
+    *     names, cast to the target's key types; no recorded bounds, no
+    *     pruning;
     *  2. hands that frame (the logical columns plus `__file`) to
     *     `resolve` and checkpoints what it returns: the same columns
     *     with `__file` null on source-only rows, plus [[MergeKind]];
@@ -3658,8 +3652,7 @@ object SnapshotOps {
     val keys = keyCols.map(col)
     def phase[T](p: String)(body: => T): T =
       withJobLabel(spark, s"$label: $p")(body)
-    var declined = false
-    val committed = casCommit("commitMerge", tableDir, RescanBudget) {
+    casCommitOrDecline("commitMerge", tableDir, RescanBudget) {
         (base, conflicts) =>
       if (alreadyIn(txn, snapshotMeta(tableDir, base))) // twin won the race
         Skip(Committed(base, 0, 0, conflicts, skipped = true))
@@ -3684,65 +3677,90 @@ object SnapshotOps {
         val physSchema = org.apache.spark.sql.types.StructType(
           snapPhys.schema.filterNot(f =>
             f.name == "__file" || f.name == "__pos"))
+        // the probe's keys in the target's own types, so the bounds and
+        // bucket hashes below compare like with like: a bigint 5 hashes
+        // unlike an int 5, and a string key encodes as bytes, not as the
+        // number or date it names. A value the target type cannot hold
+        // matches no target row and drops out (try_cast). A string
+        // target key compared with a non-string source compares in the
+        // source's type ('05' and '5' both match 5), which no cast of
+        // the source reproduces: that merge does not prune.
+        val keyProbe: Option[DataFrame] = {
+          import org.apache.spark.sql.types.StringType
+          val tgt = logicalView(snapPhys, mapping, extra = Seq("__file"))
+            .schema
+          val pairs = keyCols.map(c =>
+            (c, probe.schema.find(_.name.equalsIgnoreCase(c)),
+              tgt.find(_.name.equalsIgnoreCase(c))))
+          pairs.foldLeft(Option(Seq.empty[Column])) {
+            case (Some(acc), (c, Some(p), Some(t)))
+                if !t.dataType.isInstanceOf[StringType] ||
+                  p.dataType.isInstanceOf[StringType] =>
+              Some(acc :+ col(c).try_cast(t.dataType).as(c))
+            case _ => None
+          }.map(cs => probe.select(cs: _*))
+        }
         // manifest-pruned base (r14): when the target records bounds on
         // the merge keys, the probe's key range (one small agg) prunes
         // the base to the bound-intersecting files — a row matching a
         // source key must carry that key's value, so it can only live
         // in a file whose bounds intersect the source range.
         // Unsupported key types or an empty probe decline (full scan).
-        val candSet: Option[Set[String]] = phase("probe") {
-          val boundsPreds: Seq[(String,
-              Seq[(Option[BigDecimal], Option[BigDecimal])])] = {
-            val physKeys = keyCols.map(physName(tableDir, base, _))
-              .filter(c => entries.exists(_.bounds.contains(c)))
-            if (physKeys.isEmpty) Seq.empty
-            else scala.util.Try {
-              val aggs = keyCols.flatMap(c =>
-                Seq(min(col(c)).as(s"_lo_$c"), max(col(c)).as(s"_hi_$c")))
-              val r = probe.agg(aggs.head, aggs.tail: _*).head()
-              val preds = keyCols.zip(keyCols.map(physName(tableDir, base, _)))
-                .flatMap { case (c, phys) =>
-                  (Option(r.getAs[Any](s"_lo_$c")),
-                    Option(r.getAs[Any](s"_hi_$c"))) match {
-                    case (Some(lo), Some(hi)) => Some((phys,
-                      Seq((Option(encodeBound(lo)), Option(encodeBound(hi))))))
-                    case _ => None // all-null or empty source: no pruning
+        val candSet: Option[Set[String]] = keyProbe.flatMap { kp =>
+          phase("probe") {
+            val boundsPreds: Seq[(String,
+                Seq[(Option[BigDecimal], Option[BigDecimal])])] = {
+              val physKeys = keyCols.map(physName(tableDir, base, _))
+                .filter(c => entries.exists(_.bounds.contains(c)))
+              if (physKeys.isEmpty) Seq.empty
+              else scala.util.Try {
+                val aggs = keyCols.flatMap(c =>
+                  Seq(min(col(c)).as(s"_lo_$c"), max(col(c)).as(s"_hi_$c")))
+                val r = kp.agg(aggs.head, aggs.tail: _*).head()
+                val preds = keyCols.zip(keyCols.map(physName(tableDir, base, _)))
+                  .flatMap { case (c, phys) =>
+                    (Option(r.getAs[Any](s"_lo_$c")),
+                      Option(r.getAs[Any](s"_hi_$c"))) match {
+                      case (Some(lo), Some(hi)) => Some((phys,
+                        Seq((Option(encodeBound(lo)), Option(encodeBound(hi))))))
+                      case _ => None // all-null or empty source: no pruning
+                    }
                   }
+                if (preds.size != keyCols.size) Seq.empty else preds
+              }.getOrElse(Seq.empty)
+            }
+            // bucket-spec probes (r16): a bucket transform on a merge key
+            // serves the same pruning STRUCTURALLY, with auto_stats off —
+            // files written under the spec record their derived `_p.`
+            // bucket value, and the probe's distinct bucket set (≤ n
+            // values by construction, one small agg through the SAME
+            // xxhash64 the write expression used) becomes exact point
+            // alternatives on that key. Pre-spec files carry no `_p.`
+            // bound and are never skipped.
+            val bucketPreds: Seq[(String,
+                Seq[(Option[BigDecimal], Option[BigDecimal])])] =
+              partitionSpecAll(tableDir, base)
+                .filter(pf => pf.transform == "bucket" &&
+                  keyCols.exists(_.equalsIgnoreCase(pf.col)))
+                .flatMap { pf =>
+                  scala.util.Try {
+                    partitionExprs(Seq(pf), kp).headOption.flatMap {
+                      case (key, e) =>
+                        val vals = kp.select(e.as("b"))
+                          .where(col("b").isNotNull).distinct()
+                          .collect().map(_.getLong(0)).sorted
+                        // all n buckets present ⇒ nothing skippable
+                        if (vals.isEmpty || vals.length >= pf.arg) None
+                        else Some((key, vals.toSeq.map(v =>
+                          (Option(BigDecimal(v)), Option(BigDecimal(v))))))
+                    }
+                  }.toOption.flatten
                 }
-              if (preds.size != keyCols.size) Seq.empty else preds
-            }.getOrElse(Seq.empty)
+            val cnf = boundsPreds ++ bucketPreds
+            if (cnf.isEmpty) None
+            else scala.util.Try(predFilesCnf(tableDir, base, cnf)
+              .map(localPath).toSet).toOption
           }
-          // bucket-spec probes (r16): a bucket transform on a merge key
-          // serves the same pruning STRUCTURALLY, with auto_stats off —
-          // files written under the spec record their derived `_p.`
-          // bucket value, and the probe's distinct bucket set (≤ n
-          // values by construction, one small agg through the SAME
-          // xxhash64 the write expression used) becomes exact point
-          // alternatives on that key. Pre-spec files carry no `_p.`
-          // bound and are never skipped.
-          val bucketPreds: Seq[(String,
-              Seq[(Option[BigDecimal], Option[BigDecimal])])] =
-            partitionSpecAll(tableDir, base)
-              .filter(pf => pf.transform == "bucket" &&
-                keyCols.exists(_.equalsIgnoreCase(pf.col)))
-              .flatMap { pf =>
-                scala.util.Try {
-                  partitionExprs(Seq(pf), probe).headOption.flatMap {
-                    case (key, e) =>
-                      val vals = probe.select(e.as("b"))
-                        .where(col("b").isNotNull).distinct()
-                        .collect().map(_.getLong(0)).sorted
-                      // all n buckets present ⇒ nothing skippable
-                      if (vals.isEmpty || vals.length >= pf.arg) None
-                      else Some((key, vals.toSeq.map(v =>
-                        (Option(BigDecimal(v)), Option(BigDecimal(v))))))
-                  }
-                }.toOption.flatten
-              }
-          val cnf = boundsPreds ++ bucketPreds
-          if (cnf.isEmpty) None
-          else scala.util.Try(predFilesCnf(tableDir, base, cnf)
-            .map(localPath).toSet).toOption
         }
         val snap = candSet match {
           case Some(cs) if cs.isEmpty => // no file can match: all inserts
@@ -3777,10 +3795,8 @@ object SnapshotOps {
               explode_outer(col("fs")).as("f"))
             .agg(max(col("bad")), max(col("wr")), collect_set(col("f")))
             .head())
-          if (!verdict.isNullAt(0) && verdict.getInt(0) == 1) {
-            declined = true
-            Skip(Committed(base, 0, 0, conflicts, skipped = true))
-          } else {
+          if (!verdict.isNullAt(0) && verdict.getInt(0) == 1) Decline
+          else {
             val anyWrite = !verdict.isNullAt(1) && verdict.getInt(1) == 1
             val touched = verdict.getSeq[String](2).map(localPath).toSet
             // group-granular COW, as in commitRewrite (see cowLines)
@@ -3816,7 +3832,6 @@ object SnapshotOps {
         } finally releaseCheckpoint(resolved)
       }
     }
-    if (declined) None else Some(committed)
   }
 
   /** Small-file compaction POLICY — q196/commitCompact generalized to

@@ -1463,6 +1463,86 @@ class EngineSpec extends SparkSpecBase {
     e.close()
   }
 
+  test("MERGE into a bucket(8, id) int table from a bigint source " +
+      "updates the matched row: the probe hashes the target's type") {
+    val e = engine
+    e.executeDuck("CREATE TABLE mbk (id int, v int) " +
+      "PARTITIONED BY (bucket(8, id))")
+    e.executeDuck("INSERT INTO mbk SELECT CAST(id AS INT), CAST(id AS INT) " +
+      "FROM range(0, 200)")
+    e.executeDuck("CREATE TABLE mbks (id bigint, v int)")
+    e.executeDuck("INSERT INTO mbks VALUES (5, 999), (1000, 1)")
+    e.executeDuck(
+      """MERGE INTO mbk USING mbks ON mbk.id = mbks.id
+        |WHEN MATCHED THEN UPDATE SET v = mbks.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (mbks.id, mbks.v)"""
+        .stripMargin)
+    assert(e.executeDuck("SELECT id, v FROM mbk WHERE id IN (5, 1000) " +
+      "ORDER BY id, v").collect().map(r => (r.getInt(0), r.getInt(1)))
+      .toSeq == Seq(5 -> 999, 1000 -> 1))
+    assert(e.executeDuck("SELECT count(*) FROM mbk").collect()(0)
+      .getLong(0) == 201L)
+    e.close()
+  }
+
+  test("MERGE from string keys into int and date keys with recorded " +
+      "bounds updates the matched rows: the probe ranges in the " +
+      "target's types") {
+    val e = engine
+    e.executeDuck("SET auto_stats = true")
+    e.executeDuck("CREATE TABLE mik (id int, d date, v int)")
+    // four one-file commits with disjoint id and date bounds
+    Seq(0, 50, 100, 150).foreach { b =>
+      e.executeDuck(s"INSERT INTO mik SELECT CAST(id + $b AS INT), " +
+        s"date_add(DATE '2024-01-01', CAST(id + $b AS INT)), 0 " +
+        "FROM range(0, 50)")
+    }
+    e.executeDuck("CREATE TABLE miks (k varchar, ds varchar, v int)")
+    // id 120; 2024-06-01 is the date of id 152
+    e.executeDuck("INSERT INTO miks VALUES ('120', '2024-06-01', 7)")
+    e.executeDuck(
+      """MERGE INTO mik USING miks ON mik.id = miks.k
+        |WHEN MATCHED THEN UPDATE SET v = miks.v
+        |WHEN NOT MATCHED THEN INSERT (id, d, v)
+        |  VALUES (miks.k, miks.ds, miks.v)""".stripMargin)
+    e.executeDuck(
+      """MERGE INTO mik USING miks ON mik.d = miks.ds
+        |WHEN MATCHED THEN UPDATE SET v = miks.v + 1
+        |WHEN NOT MATCHED THEN INSERT (id, d, v)
+        |  VALUES (miks.k, miks.ds, miks.v)""".stripMargin)
+    assert(e.executeDuck("SELECT id, v FROM mik WHERE v <> 0 ORDER BY id")
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq ==
+      Seq(120 -> 7, 152 -> 8))
+    assert(e.executeDuck("SELECT count(*) FROM mik").collect()(0)
+      .getLong(0) == 200L)
+    e.close()
+  }
+
+  test("MERGE into a string key from an int source matches the rows " +
+      "Spark's join matches, whatever their recorded bounds") {
+    val e = engine
+    e.executeDuck("SET auto_stats = true")
+    e.executeDuck("CREATE TABLE msk (k varchar, v int)")
+    e.executeDuck("INSERT INTO msk VALUES ('05', 0), ('07', 0)")
+    e.executeDuck("INSERT INTO msk VALUES ('50', 0), ('70', 0)")
+    e.executeDuck("CREATE TABLE msks (id int, v int)")
+    e.executeDuck("INSERT INTO msks VALUES (5, 9)")
+    // the join compares as numbers: '05' matches 5, which no string
+    // cast of the source key (to '5') reproduces
+    assert(e.executeDuck("SELECT msk.k FROM msk JOIN msks " +
+      "ON msk.k = msks.id").collect().map(_.getString(0)).toSeq ==
+      Seq("05"))
+    e.executeDuck(
+      """MERGE INTO msk USING msks ON msk.k = msks.id
+        |WHEN MATCHED THEN UPDATE SET v = msks.v
+        |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (msks.id, msks.v)"""
+        .stripMargin)
+    val got = e.executeDuck("SELECT k, v FROM msk ORDER BY k").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(got == Seq("05" -> 9, "07" -> 0, "50" -> 0, "70" -> 0))
+    e.close()
+  }
+
   test("MERGE: an INSERT whose key value another target row already " +
       "holds appends beside it, as the full rewrite does") {
     val e = engine

@@ -480,12 +480,13 @@ class SnapshotOpsSpec extends SparkSpecBase {
       .as[(Long, Long)].collect().toMap
     assert(got.size == 400 && got(7L) == 7777L && got(250L) == 8888L
       && got(8L) == 80L)
-    // deletes ride the same probe: the delete keys' buckets must stay
-    // in the candidate set
-    val c2 = SnapshotOps.commitMerge(spark, t,
-      spark.emptyDataFrame.select(lit(0L).as("id"), lit(0L).as("v"))
-        .limit(0),
-      Seq("id"), deleteKeys = Seq(250L).toDF("id"))
+    // deletes ride the same probe: a delete-only merge keeps the
+    // delete key's bucket in the candidate set
+    val c2 = SnapshotOps.commitMergeWith(spark, t, Seq("id"),
+        Seq(250L).toDF("id"), "MERGE spec") { base =>
+      base.where(col("id") === 250L)
+        .withColumn(SnapshotOps.MergeKind, lit(SnapshotOps.MergeDelete))
+    }.get
     assert(SnapshotOps.readLatest(spark, t).count() == 399)
     assert(c2.reused >= total - 2, s"delete-only merge over-rewrote: $c2")
   }

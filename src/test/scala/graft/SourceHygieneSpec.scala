@@ -86,8 +86,8 @@ class SourceHygieneSpec extends AnyFunSuite {
           !snap(i).contains("def " + publish) => enclosingMember(snap, i)
     }
     assert(callers.nonEmpty)
-    val allowed = Set("casCommit", "tryPublish", "createBranchFork",
-      "fastForward")
+    val allowed = Set("casCommit", "casCommitOrDecline", "tryPublish",
+      "createBranchFork", "fastForward")
     assert(callers.toSet.subsetOf(allowed),
       s"${publish.init} called outside the commit loop from: " +
         callers.filterNot(allowed).mkString(", "))
