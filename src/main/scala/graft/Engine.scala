@@ -338,37 +338,6 @@ class Engine(val spark: SparkSession) {
       else df.repartitionByRange(n, cs: _*).sortWithinPartitions(cs: _*)
     }.getOrElse(df)
 
-  /** Size-gated write coalescing for DML appends (r16-opt, guide §6
-    * small-files): a 32-partition plan whose data is a few hundred KB
-    * writes 32 near-empty parquet files — 32 write tasks (closure
-    * deserialization + parquet writer init each), 32 footer stat
-    * reads at commit, 32 manifest entries, and 32 file opens on every
-    * subsequent read. When the optimizer's size estimate says the
-    * commit is small, write it as ONE file instead. The estimate is
-    * conservative the right way round: filters/joins never SHRINK
-    * sizeInBytes without CBO, and an unknown size is Long.MaxValue —
-    * both leave big appends alone, so a 100 TB append keeps its
-    * parallelism and only provably-small commits serialize. Declared
-    * write layouts are exempt ([[applyWriteOrder]] banding — `INTO n
-    * FILES` is an explicit file-count request), as are partitioned
-    * tables (writeUnderSpec re-distributes by transform anyway).
-    * Generate-bearing plans are exempt too (r17-opt, the r16 ADVICE
-    * item): explode has no stats override — the default visitor
-    * scales by row width only, not multiplicity — so sizeInBytes can
-    * UNDERestimate a fan-out plan, and coalesce(1) would additionally
-    * collapse the upstream narrow stages (the expensive per-row
-    * compute feeding the explode) to one task, losing compute
-    * parallelism along with write parallelism. */
-  private def coalesceSmallWrite(name: String, df: DataFrame): DataFrame =
-    if (writeOrder.contains(norm(name))) df
-    else {
-      val plan = df.queryExecution.optimizedPlan
-      val fanOut = plan.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate])
-      if (!fanOut && plan.stats.sizeInBytes <= (16L << 20)) df.coalesce(1)
-      else df
-    }
-
   private def sortStatsCols(name: String, df: DataFrame): Seq[String] =
     writeOrder.get(norm(name)).map(_._1.flatMap(c =>
       df.schema.fields.find(f => f.name.equalsIgnoreCase(c) &&
@@ -443,7 +412,7 @@ class Engine(val spark: SparkSession) {
      else None) match {
       case Some(dir) =>
         flushPendingSpec(name, dir)
-        val laid = coalesceSmallWrite(name, applyWriteOrder(name, rows))
+        val laid = applyWriteOrder(name, rows)
         lastCommit(norm(name)) =
           graft.operators.SnapshotOps.commitAppend(spark, dir, laid,
             statsCols =
@@ -482,7 +451,7 @@ class Engine(val spark: SparkSession) {
           // own commit lands (appendRows calls registerSnapshot)
           if (!empty) {
             flushPendingSpec(n, dir)
-            val laid = coalesceSmallWrite(n, applyWriteOrder(n, df))
+            val laid = applyWriteOrder(n, df)
             lastCommit(n) =
               graft.operators.SnapshotOps.commitAppend(spark, dir, laid,
                 statsCols =
@@ -1213,7 +1182,7 @@ class Engine(val spark: SparkSession) {
       ensureSnapshot(name) match {
         case Some(dir) =>
           lastCommit(norm(name)) = graft.operators.SnapshotOps
-            .commitOverwrite(spark, dir, target.limit(0).coalesce(1))
+            .commitOverwrite(spark, dir, target.limit(0))
           registerSnapshot(name, dir)
         case None => // schema parquet can't carry, or empty: rebind
           register(name, target.limit(0))

@@ -56,19 +56,21 @@ object LayoutOps {
     * dimensions — is what the spec measures against a linear sort. */
   def zorderWrite(df: DataFrame, colA: String, colB: String,
       outDir: String, nFiles: Int, bits: Int = 21): Unit =
-    zorderWriteN(df, Seq(colA, colB), outDir, nFiles, bits)
+    zorderFrame(df, Seq(colA, colB), nFiles, bits)
+      .write.mode("overwrite").parquet(outDir)
 
-  /** n-dimensional OPTIMIZE ZORDER: sort-rewrite by [[zOrderN]].
-    * `bits ≤ 0` auto-sizes the per-dimension budget to min(21, 63/k)
-    * so the interleave fits one long at any dimension count. */
-  def zorderWriteN(df: DataFrame, sortCols: Seq[String],
-      outDir: String, nFiles: Int, bits: Int = -1): Unit =
+  /** n-dimensional OPTIMIZE ZORDER layout: `df` range-partitioned into
+    * `nFiles` partitions and sorted by [[zOrderN]] of `sortCols`, ready
+    * for a writer to lay down as one file per partition. `bits ≤ 0`
+    * auto-sizes the per-dimension budget to min(21, 63/k) so the
+    * interleave fits one long at any dimension count. */
+  def zorderFrame(df: DataFrame, sortCols: Seq[String], nFiles: Int,
+      bits: Int = -1): DataFrame =
     df.withColumn("__z", zOrderN(sortCols.map(col),
         if (bits <= 0) math.min(21, 63 / sortCols.size) else bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode("overwrite").parquet(outDir)
 
   /** Fraction of `dir`'s files whose per-file [min,max] box on
     * (`colA`, `colB`) intersects the query box — the file-skipping

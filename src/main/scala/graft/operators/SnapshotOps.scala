@@ -977,19 +977,18 @@ object SnapshotOps {
       if (candSet.exists(_.isEmpty)) noMatch // proof of no matches at `base`
       else {
         val dvs = deleteEntries(tableDir, base)
-        val dir = newDataDir(tableDir)
         val mapping = columnMapping(tableDir, base)
         lazy val fullSchema = org.apache.spark.sql.types.StructType(
           readUnitsVisible(spark, tableDir, units, dvs,
             eqDeleteUnits(tableDir, base),
             mergeSchema = mapping.nonEmpty).schema)
-        // DV size tracks matched rows — a few output files is plenty of
-        // write parallelism, and keeps the manifest line count bounded.
         // The match scans VISIBLE rows only (eq-deletes applied), so a
         // DV never re-names a row an equality delete already removed.
         // `cond` references LOGICAL names — evaluate on the mapped view
-        // (identity for never-evolved tables).
-        logicalView(readUnitsVisible(spark, tableDir, units, dvs,
+        // (identity for never-evolved tables). The `~_file` bloom scopes
+        // future reads' anti-join to the files the DV names — see
+        // readFilesDv.
+        val matched = logicalView(readUnitsVisible(spark, tableDir, units, dvs,
             eqDeleteUnits(tableDir, base), tagged = true,
             mergeSchema = mapping.nonEmpty,
             anchor = if (candSet.isDefined && mapping.nonEmpty)
@@ -1000,23 +999,14 @@ object SnapshotOps {
             mapping, extra = Seq("__file", "__pos"))
           .where(cond)
           .select(col("__file").as(DvFileCol), col("__pos").as(DvPosCol))
-          .coalesce(4)
-          .write.parquet(dir)
-        val written = dvEntries(spark, dir)
+        val written = writeFiles(spark, tableDir, matched, DeleteFiles,
+          Seq(DvPosCol), Seq(DvFileCol))
         if (written.isEmpty) noMatch // nothing matched: no version burned
         else Publish(metaLines(snapshotMeta(tableDir, base)) ++
           snapshotUnits(tableDir, base).map(_.raw) ++
           written.map("!" + _.line), entries.size, 0)
       }
     }
-
-  /** Entries of the DV files written into `dir`, empty ones dropped;
-    * the `~_file` bloom scopes future reads' anti-join to the files
-    * each DV actually names — see readFilesDv. */
-  private def dvEntries(spark: SparkSession, dir: String): Seq[FileEntry] =
-    entriesFor(spark, parquetFilesIn(dir), Seq(DvPosCol),
-      bloomCols = Seq(DvFileCol))
-      .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
 
   /** Survivor re-wrap for partial rewrites: untouched entries of
     * BROKEN units re-group PER ORIGINAL UNIT, each new group line
@@ -1088,20 +1078,15 @@ object SnapshotOps {
       s"commitDeleteByKey on $tableDir: base snapshot carries data " +
         "units without a stamped _seq (pre-stamping manifest) — " +
         "compact or rewrite the table once first")
-    val dir = newDataDir(tableDir)
     // key columns arrive LOGICAL; the key file (whose schema IS the
     // equality key) must carry the frozen physical names the data
     // files' anti-join resolves against
     val physKeys = toPhysical(keys, columnMapping(tableDir, pre))
-    // one small file: the key list is bounded by contract (a delete
-    // list, not a corpus) and readers broadcast it per scan group
-    physKeys.distinct().coalesce(1).write.parquet(dir)
     val numericKeys = physKeys.schema.fields.filter(f =>
       f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       .map(_.name).toSeq
-    val written = entriesFor(spark, parquetFilesIn(dir), numericKeys,
-      bloomCols = physKeys.columns.toSeq)
-      .filter(_.bounds.get(RowsKey).exists(_._1 > 0))
+    val written = writeFiles(spark, tableDir, physKeys.distinct(),
+      DeleteFiles, numericKeys, physKeys.columns.toSeq)
     if (written.isEmpty) Committed(pre, 0, 0, 0, skipped = true)
     else casCommit("commitDeleteByKey", tableDir, RescanBudget) { (base, _) =>
       Publish(metaLines(snapshotMeta(tableDir, base)) ++
@@ -1155,19 +1140,13 @@ object SnapshotOps {
             mapping, extra = Seq("__file", "__pos"))
           .where(cond).localCheckpoint()
         val (dvWritten, written) = try {
-          val dvDir = newDataDir(tableDir)
-          hits.select(col("__file").as(DvFileCol),
-            col("__pos").as(DvPosCol))
-            .coalesce(4).write.parquet(dvDir)
-          val dvW = dvEntries(spark, dvDir)
+          val dvW = writeFiles(spark, tableDir, hits.select(
+            col("__file").as(DvFileCol), col("__pos").as(DvPosCol)),
+            DeleteFiles, Seq(DvPosCol), Seq(DvFileCol))
           if (dvW.isEmpty) (dvW, Seq.empty[FileEntry])
-          else {
-            val dataDir = newDataDir(tableDir)
-            toPhysical(update(hits.drop("__file", "__pos")), mapping)
-              .write.parquet(dataDir)
-            (dvW, entriesFor(spark, parquetFilesIn(dataDir),
-              statsColsOf(entries), bloomColsOf(entries)))
-          }
+          else (dvW, writeFiles(spark, tableDir,
+            toPhysical(update(hits.drop("__file", "__pos")), mapping),
+            DataFiles(base), statsColsOf(entries), bloomColsOf(entries)))
         } finally releaseCheckpoint(hits)
         if (dvWritten.isEmpty) noMatch // nothing matched: no version burned
         else Publish(metaLines(snapshotMeta(tableDir, base)) ++
@@ -1193,10 +1172,8 @@ object SnapshotOps {
       .collect().map(_.getString(0))
     val drop = dvFiles.filter(v => rewritten.contains(localPath(v)))
     if (drop.isEmpty) return dvs.map("!" + _.line)
-    val keep = dv.where(!col(DvFileCol).isin(drop.toSeq: _*))
-    val dir = newDataDir(tableDir)
-    keep.coalesce(4).write.parquet(dir)
-    dvEntries(spark, dir).map("!" + _.line)
+    writeFiles(spark, tableDir, dv.where(!col(DvFileCol).isin(drop.toSeq: _*)),
+      DeleteFiles, Seq(DvPosCol), Seq(DvFileCol)).map("!" + _.line)
   }
 
   def readLatest(spark: SparkSession, tableDir: String): DataFrame =
@@ -1352,12 +1329,14 @@ object SnapshotOps {
   /** Release a localCheckpoint's blocks (the LogicalRDD's cache) —
     * commit verbs checkpoint their matched/source rows per call, and a
     * long-lived session (a streaming upsert sink committing every
-    * micro-batch) must not accumulate them. */
+    * micro-batch) must not accumulate them. Released without
+    * `RDD.unpersist`'s WARN ([[org.apache.spark.sql.graft.RddBridge]]). */
   private[graft] def releaseCheckpoint(
       df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(r => scala.util.Try(r.unpersist(false)))
+    }.foreach(r => scala.util.Try(
+      org.apache.spark.sql.graft.RddBridge.release(r)))
 
   /** Run `body` with every Spark job it starts described as `desc` (what
     * a listener or the UI shows for the job), then restore the caller's
@@ -1836,9 +1815,7 @@ object SnapshotOps {
     * compactions recompute these for the files they produce, so bounds
     * survive maintenance without the caller restating them. Derived
     * partition-transform bounds (`_p.` keys) are NOT stats columns:
-    * they are recomputed from the partition spec at append time, and a
-    * maintenance writer that doesn't restate them simply leaves its
-    * files un-prunable by transform (absence never skips). */
+    * [[writeFiles]] derives them from the spec in force at each write. */
   private def statsColsOf(entries: Seq[FileEntry]): Seq[String] =
     entries.flatMap(_.bounds.keys)
       .filterNot(k => k == RowsKey || k == SeqKey || k == FilesKey ||
@@ -2054,8 +2031,7 @@ object SnapshotOps {
     * `partitions` metadata table: (transform, value, files, rows) per
     * distinct derived value, read from the manifest's `_p.` bounds
     * only (zero data files opened). A file spanning several values
-    * (written before the spec, or by a non-spec writer) reports its
-    * range as "lo..hi". */
+    * (written before the spec) reports its range as "lo..hi". */
   def partitionValues(tableDir: String,
       version: Int): Seq[(String, String, Long, Long)] =
     snapshotEntries(tableDir, version).flatMap { e =>
@@ -2081,26 +2057,72 @@ object SnapshotOps {
         n => byLogical.getOrElse(n.toLowerCase, n)
     }
 
-  /** Write `df` (physical names) into `dir` under the spec in force
-    * at `base`: hive-split by the derived transform values over
-    * TEMPORARY columns (auto-excluded from the data files — one file
-    * per partition tuple) — or plain when unpartitioned, shaped by
-    * `plainShape` (compaction's coalesce). Partitioned writes cluster
-    * by the derived tuple instead: one file per live partition value
-    * IS the compacted layout. Returns (written files, derived exprs)
-    * for the caller's entriesFor, so maintenance writers re-record
-    * derived bounds and partitioned tables stay prunable across
-    * compaction and COW rewrites. */
-  private def writeUnderSpec(spark: SparkSession, tableDir: String,
-      base: Int, df: DataFrame, dir: String,
-      resolve: String => String = null,
-      plainShape: DataFrame => DataFrame = identity)
-      : (Seq[String], Seq[(String, org.apache.spark.sql.Column)]) = {
-    val res = Option(resolve).getOrElse(physResolve(tableDir, base))
-    val derived = partitionExprs(partitionSpec(tableDir, base), df, res)
+  /** What [[writeFiles]] writes. */
+  private sealed trait FileKind
+  /** Data files, under the partition spec in force at `base`; `resolve`
+    * maps the spec's logical column names to the frame's (null: the
+    * physical names at `base`, [[physResolve]]). */
+  private final case class DataFiles(base: Int,
+      resolve: String => String = null) extends FileKind
+  /** Deletion-vector and equality-key files: never split by the spec,
+    * and a file holding no row is dropped, so a delete that matches
+    * nothing yields no entry. */
+  private case object DeleteFiles extends FileKind
+
+  /** The one writer of table-owned parquet files — data, DV and
+    * equality-key files alike. It writes `df` into a fresh
+    * [[newDataDir]] and returns the [[entriesFor]] of what it wrote,
+    * `statsCols`/`bloomCols` recorded per file.
+    *
+    * Data files follow the partition spec in force at their base:
+    * they hive-split by the derived transform values over TEMPORARY
+    * columns (auto-excluded from the files), range-clustered so each
+    * file holds one partition tuple, and record the derived `_p.`
+    * bounds, so every verb's output stays prunable by transform. The
+    * split wins over any layout the caller declared.
+    *
+    * Otherwise one layout rule:
+    *  - a frame whose optimized plan ends in a repartition or coalesce
+    *    (looking through projections and a local sort) keeps the layout
+    *    its caller declared: compaction's `coalesce(n)`, a bin's
+    *    `coalesce(1)`, `WRITE ORDERED BY … INTO n FILES`, z-order;
+    *  - else a frame the optimizer estimates at ≤ 16 MB writes ONE
+    *    file. Without the rule a 32-partition plan holding a few
+    *    hundred KB writes 32 near-empty files: 32 write tasks, 32
+    *    footer reads at commit, 32 manifest entries and 32 file opens
+    *    on every later read;
+    *  - else the frame keeps its own partitioning.
+    * The rule is safe at scale because the estimate errs the right
+    * way: filters and joins never SHRINK sizeInBytes without CBO, and
+    * an unknown size is Long.MaxValue, so a 100 TB write keeps its
+    * parallelism and only provably small writes serialize. A plan with
+    * a Generate is exempt: explode has no stats override (the default
+    * visitor scales by row width, not multiplicity), so its estimate
+    * can UNDERstate a fan-out, and coalesce(1) would also collapse the
+    * per-row compute feeding the explode to one task. */
+  private def writeFiles(spark: SparkSession, tableDir: String,
+      df: DataFrame, kind: FileKind, statsCols: Seq[String],
+      bloomCols: Seq[String] = Nil): Seq[FileEntry] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate,
+      LogicalPlan, Project, Repartition, RepartitionByExpression, Sort}
+    val dir = newDataDir(tableDir)
+    val derived = kind match {
+      case DataFiles(base, resolve) => partitionExprs(
+        partitionSpec(tableDir, base), df,
+        Option(resolve).getOrElse(physResolve(tableDir, base)))
+      case DeleteFiles => Nil
+    }
     if (derived.isEmpty) {
-      plainShape(df).write.parquet(dir)
-      (parquetFilesIn(dir), Nil)
+      val plan = df.queryExecution.optimizedPlan
+      def declared(p: LogicalPlan): Boolean = p match {
+        case Project(_, c) => declared(c)
+        case s: Sort if !s.global => declared(s.child)
+        case _: Repartition | _: RepartitionByExpression => true
+        case _ => false
+      }
+      val small = !declared(plan) && !plan.exists(_.isInstanceOf[Generate]) &&
+        plan.stats.sizeInBytes <= (16L << 20)
+      (if (small) df.coalesce(1) else df).write.parquet(dir)
     } else {
       val names = derived.indices.map(i => s"_pk$i")
       names.foreach(n => require(!df.columns.contains(n),
@@ -2109,8 +2131,12 @@ object SnapshotOps {
         case (d, ((_, e), n)) => d.withColumn(n, e) }
       keyed.repartitionByRange(names.map(col): _*)
         .write.partitionBy(names: _*).parquet(dir)
-      (parquetFilesUnder(dir), derived)
     }
+    val written = entriesFor(spark, parquetFilesUnder(dir), statsCols,
+      bloomCols, derived)
+    if (kind == DeleteFiles)
+      written.filter(_.bounds.get(RowsKey).exists(_._1 > 0))
+    else written
   }
 
   /** Metadata-only count(*): the snapshot's row count summed from the
@@ -2150,15 +2176,11 @@ object SnapshotOps {
 
   /** One writer's immutable data-file directory for this table. Full
     * UUID: a truncated name colliding with an older commit's dir would
-    * fold that commit's files into this one via [[parquetFilesIn]]. */
+    * fold that commit's files into this one via [[parquetFilesUnder]]. */
   private def newDataDir(tableDir: String): String =
     s"$tableDir/data/${java.util.UUID.randomUUID()}"
 
-  private def parquetFilesIn(dir: String): Seq[String] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
-
-  /** Recursive variant for partitioned writes: files land under
+  /** The parquet files under `dir`, including a partitioned write's
     * `_pk<i>=<value>` value directories. */
   private def parquetFilesUnder(dir: String): Seq[String] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -2219,17 +2241,12 @@ object SnapshotOps {
             .map(c => c.logical -> c.physical).toMap
           n => byLogical.getOrElse(n, n)
       }
-      // hidden partitioning (r15): a spec in force splits the write by
-      // its derived transform values — range-cluster, then a hive-style
-      // partitionBy over TEMPORARY derived columns (auto-excluded from
-      // the data files), so each file holds exactly ONE partition tuple
-      // — and records per-file derived bounds alongside the column
-      // stats. The user never sees the derived columns: hidden
-      // partitioning's whole point.
-      val (written, derived) = writeUnderSpec(spark, tableDir, pre, physDf,
-        newDataDir(tableDir), toPhysName)
-      val mine = entriesFor(spark, written,
-        statsCols.map(toPhysName), bloomCols.map(toPhysName), derived)
+      // hidden partitioning (r15): the spec's split and derived bounds
+      // resolve through the extended mapping; the user never sees the
+      // derived columns
+      val mine = writeFiles(spark, tableDir, physDf,
+        DataFiles(pre, toPhysName), statsCols.map(toPhysName),
+        bloomCols.map(toPhysName))
       val mineLines = groupLines(tableDir, mine)
       casCommit(verb, tableDir, RelistBudget) { (base, conflicts) =>
         val meta = snapshotMeta(tableDir, base)
@@ -2573,7 +2590,6 @@ object SnapshotOps {
         // read is anchored to the FULL snapshot schema so files
         // predating an evolved append rewrite with the newer columns
         // present (as null) — the backfill path.
-        val dir = newDataDir(tableDir)
         val dataSchema = org.apache.spark.sql.types.StructType(
           snap.schema.filterNot(f =>
             f.name == "__file" || f.name == "__pos"))
@@ -2588,12 +2604,8 @@ object SnapshotOps {
         val phys = toPhysical(
           update(in.where(cond)).unionByName(in.where(!coalesce(cond,
             lit(false)))), mapping)
-        // rewritten files re-split under the spec and re-record
-        // derived bounds — a COW update never un-partitions its band
-        val (files, derived) =
-          writeUnderSpec(spark, tableDir, base, phys, dir)
-        entriesFor(spark, files, statsColsOf(entries),
-          bloomColsOf(entries), derived)
+        writeFiles(spark, tableDir, phys, DataFiles(base),
+          statsColsOf(entries), bloomColsOf(entries))
       }
       Publish(cowLines(spark, tableDir, base, units, dvs, touched, written),
         entries.size - rewritten, written.size)
@@ -2611,21 +2623,16 @@ object SnapshotOps {
       val entries = snapshotEntries(tableDir, base)
       val files = entries.map(_.path)
       require(files.nonEmpty, s"commitCompact on empty table $tableDir")
-      val dir = newDataDir(tableDir)
       // VISIBLE-row input: compaction PAYS the merge-on-read debt —
       // DV positions and eq-delete matches bake into the rewrite and
       // neither `!` nor `=` lines carry into the new manifest; under a
       // column mapping, maintenanceRead also surfaces evolved columns
-      // (mergeSchema) and drops tombstoned ones
-      // under a partition spec, the compacted layout IS one file per
-      // live partition tuple (nFiles shapes only the unpartitioned
-      // case) and derived bounds re-record, so partitioned tables
-      // stay prunable across maintenance
-      val (outFiles, derived) = writeUnderSpec(spark, tableDir, base,
-        maintenanceRead(spark, tableDir, base), dir,
-        plainShape = _.coalesce(nFiles))
-      val written = entriesFor(spark, outFiles,
-        statsColsOf(entries), bloomColsOf(entries), derived)
+      // (mergeSchema) and drops tombstoned ones. Under a partition
+      // spec, the compacted layout is one file per live partition
+      // tuple, whatever `nFiles` asks
+      val written = writeFiles(spark, tableDir,
+        maintenanceRead(spark, tableDir, base).coalesce(nFiles),
+        DataFiles(base), statsColsOf(entries), bloomColsOf(entries))
       Publish(metaLines(snapshotMeta(tableDir, base)) ++
         groupLines(tableDir, written), 0, written.size)
     }
@@ -3087,21 +3094,23 @@ object SnapshotOps {
     * The per-dimension bit budget is 63/k — clustering many columns
     * dilutes all of them, so keep k small (the Delta/Iceberg guidance).
     * `bits ≤ 0` (the default) auto-sizes to min(21, 63/k) so the
-    * interleave always fits one long at any dimension count. */
+    * interleave always fits one long at any dimension count. On a
+    * partitioned table the spec's split wins over the z-order layout:
+    * the files are one per live partition tuple (see [[writeFiles]]),
+    * and the bounds on the clustered dimensions are recorded still. */
   def commitClusterN(spark: SparkSession, tableDir: String,
       sortCols: Seq[String], nFiles: Int, bits: Int = -1): Committed =
     casCommit("commitCluster", tableDir, RescanBudget) { (base, _) =>
       val entries = snapshotEntries(tableDir, base)
       require(entries.nonEmpty, s"commitCluster on empty table $tableDir")
-      val dir = newDataDir(tableDir)
       // full rewrite ⇒ DV, eq-delete AND evolution debt paid, like
       // commitCompact; sortCols arrive LOGICAL — the physical frame
       // sorts/records stats under the frozen physical names
       val physSort = sortCols.map(physName(tableDir, base, _))
-      LayoutOps.zorderWriteN(maintenanceRead(spark, tableDir, base),
-        physSort, dir, nFiles, bits)
-      val written = entriesFor(spark, parquetFilesIn(dir),
-        (statsColsOf(entries) ++ physSort).distinct.sorted,
+      val written = writeFiles(spark, tableDir,
+        LayoutOps.zorderFrame(maintenanceRead(spark, tableDir, base),
+          physSort, nFiles, bits),
+        DataFiles(base), (statsColsOf(entries) ++ physSort).distinct.sorted,
         bloomColsOf(entries))
       Publish(metaLines(snapshotMeta(tableDir, base)) ++
         groupLines(tableDir, written), 0, written.size)
@@ -3207,9 +3216,9 @@ object SnapshotOps {
   def stageAppend(spark: SparkSession, tableDir: String, branch: String,
       df: DataFrame, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Int = {
-    val dir = newDataDir(tableDir)
-    df.write.parquet(dir)
-    val mine = entriesFor(spark, parquetFilesIn(dir), statsCols, bloomCols)
+    // the staged frame keeps its own (logical) names
+    val mine = writeFiles(spark, tableDir, df,
+      DataFiles(currentVersion(tableDir), identity), statsCols, bloomCols)
     Files.createDirectories(manifestDir(tableDir))
     val bp = branchPath(tableDir, branch)
     val lines = (stagedEntries(tableDir, branch) ++ mine).map(_.line)
@@ -3644,7 +3653,8 @@ object SnapshotOps {
     * rows are never replaced by values computed from an older one.
     * `probe` is read for the pruning bounds and `resolve` reads the
     * source again, so both must be deterministic. Every job is labelled
-    * `"<label>: probe|resolve|rewrite|stats|commit"`. */
+    * `"<label>: probe|resolve|rewrite|commit"`; the rewrite's stats
+    * belong to its write ([[writeFiles]]). */
   private[graft] def commitMergeWith(spark: SparkSession, tableDir: String,
       keyCols: Seq[String], probe: DataFrame, label: String,
       txn: Option[(String, Long)] = None)(
@@ -3807,22 +3817,19 @@ object SnapshotOps {
             val written =
               if (rewritten == 0 && !anyWrite) Seq.empty[FileEntry]
               else {
-                val dir = newDataDir(tableDir)
-                phase("rewrite") {
-                  val out =
-                    if (rewritten == 0) writes
-                    else logicalView(readUnitsVisible(spark, tableDir,
-                      units, dvs, eqs,
-                      anchor = if (mapping.nonEmpty) physSchema else null,
-                      keep = e => touched.contains(localPath(e.path))),
-                      mapping)
-                      .join(broadcast(resolved
-                        .where(col("__file").isNotNull && changes)
-                        .select(keys: _*)), keyCols, "left_anti")
-                      .unionByName(writes)
-                  toPhysical(out, mapping).write.parquet(dir)
-                }
-                phase("stats")(entriesFor(spark, parquetFilesIn(dir),
+                val out =
+                  if (rewritten == 0) writes
+                  else logicalView(readUnitsVisible(spark, tableDir,
+                    units, dvs, eqs,
+                    anchor = if (mapping.nonEmpty) physSchema else null,
+                    keep = e => touched.contains(localPath(e.path))),
+                    mapping)
+                    .join(broadcast(resolved
+                      .where(col("__file").isNotNull && changes)
+                      .select(keys: _*)), keyCols, "left_anti")
+                    .unionByName(writes)
+                phase("rewrite")(writeFiles(spark, tableDir,
+                  toPhysical(out, mapping), DataFiles(base),
                   statsColsOf(entries), bloomColsOf(entries)))
               }
             Publish(phase("commit")(cowLines(spark, tableDir, base, units,
@@ -3837,14 +3844,16 @@ object SnapshotOps {
   /** Small-file compaction POLICY — q196/commitCompact generalized to
     * the maintenance verb a warehouse actually schedules: files under
     * `targetBytes / 2` are first-fit-decreasing bin-packed into
-    * ~`targetBytes` bins and each bin rewrites into one file; files
+    * ~`targetBytes` bins and each bin rewrites into one file (one per
+    * live partition tuple under a partition spec); files
     * already at target size are REUSED byte-for-byte (their stats
     * lines carry forward untouched). Sizing reads the manifest's
     * recorded `_bytes` — a metadata operation. Each bin's rewrite is an
     * independent job over only that bin's files, so maintenance cost
     * tracks the small-file mass, never the table; returns skipped=true
     * when fewer than two small files exist (nothing to do — no commit
-    * burned). */
+    * burned). Under a partition spec, a small file alone in its
+    * partition tuple does not count. */
   def commitCompactSmall(spark: SparkSession, tableDir: String,
       targetBytes: Long): Committed =
     casCommit("commitCompactSmall", tableDir, RescanBudget) {
@@ -3853,11 +3862,18 @@ object SnapshotOps {
         val dvs = deleteEntries(tableDir, base)
         val entries = units.flatMap(_.entries)
         require(entries.nonEmpty, s"commitCompactSmall on empty $tableDir")
+        // a small file alone in its partition tuple is as compact as the
+        // spec lets it be: rewriting it would write it again, every call
+        def tuple(e: FileEntry) = e.bounds.toSeq.collect {
+          case (k, (lo, hi)) if k.startsWith(PartBoundPrefix) && lo == hi =>
+            k -> lo }.sorted
         // sizes come from the manifest's recorded `_bytes`; only lines
         // written before the stat existed ask the filesystem
         val small = entries.map(e => e -> e.bounds.get(BytesKey)
           .fold(new java.io.File(e.path).length())(_._1.toLong))
           .filter(_._2 < targetBytes / 2)
+          .groupBy(s => tuple(s._1)).toSeq.flatMap { case (t, g) =>
+            if (t.nonEmpty && g.size == 1) Nil else g }
         if (small.size <= 1)
           Skip(Committed(base, entries.size, 0, conflicts, skipped = true))
         else {
@@ -3876,15 +3892,13 @@ object SnapshotOps {
           val statsCols = statsColsOf(entries)
           val bloomCols = bloomColsOf(entries)
           val written = bins.toSeq.flatMap { case (_, binEntries) =>
-            val dir = newDataDir(tableDir)
             // a bin can mix files of different sequences: the visible read
             // applies each member's applicable eq-deletes before baking
             // (the rewritten bin gets THIS commit's sequence)
             val binSet = binEntries.map(e => localPath(e.path)).toSet
-            maintenanceRead(spark, tableDir, base,
-              keep = e => binSet.contains(localPath(e.path)))
-              .coalesce(1).write.parquet(dir)
-            entriesFor(spark, parquetFilesIn(dir), statsCols, bloomCols)
+            writeFiles(spark, tableDir, maintenanceRead(spark, tableDir, base,
+              keep = e => binSet.contains(localPath(e.path))).coalesce(1),
+              DataFiles(base), statsCols, bloomCols)
           }
           // group-granular COW: all-large groups carry forward unparsed;
           // large files stranded in broken groups re-wrap (see cowLines)

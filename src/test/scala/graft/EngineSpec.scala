@@ -1485,6 +1485,58 @@ class EngineSpec extends SparkSpecBase {
     e.close()
   }
 
+  test("a bucket(8, id) table stays partitioned through a key-routed " +
+      "MERGE, a merge-on-read UPDATE and small-file compaction") {
+    import graft.operators.SnapshotOps
+    val e = engine
+    // the same statements on a partitioned and an unpartitioned table
+    Seq("pb" -> " PARTITIONED BY (bucket(8, id))", "pu" -> "").foreach {
+      case (t, spec) =>
+        e.executeDuck(s"CREATE TABLE $t (id int, v int)$spec")
+        e.executeDuck(s"INSERT INTO $t SELECT CAST(id AS INT), " +
+          "CAST(id AS INT) FROM range(0, 200)")
+    }
+    e.executeDuck("CREATE TABLE pbs (id int, v int)")
+    e.executeDuck("INSERT INTO pbs VALUES (5, 999), (77, 7), (1000, 1)")
+    val dir = e.snapshotDir("pb").get
+    def rows(t: String, where: String = "true"): Seq[(Int, Int)] =
+      e.executeDuck(s"SELECT id, v FROM $t WHERE $where ORDER BY id")
+        .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    def check(step: String): Unit = {
+      val v = SnapshotOps.currentVersion(dir)
+      val dvs = SnapshotOps.deleteEntries(dir, v).map(_.path).toSet
+      val data = SnapshotOps.snapshotEntries(dir, v)
+        .filterNot(en => dvs(en.path))
+      val unbound = data.filterNot(_.bounds.get("_p.bucket(8,id)")
+        .exists { case (lo, hi) => lo == hi })
+      assert(unbound.isEmpty, s"after $step, ${unbound.size} of " +
+        s"${data.size} live files lack a point bucket bound")
+      Seq(5, 15, 1000).foreach { k =>
+        e.lastPrune.clear()
+        assert(rows("pb", s"id = $k") == rows("pu", s"id = $k"), step)
+        assert(e.lastPrune("pb")._1 < e.lastPrune("pb")._2,
+          s"after $step, id = $k must prune: ${e.lastPrune("pb")}")
+      }
+      assert(rows("pb") == rows("pu"), step)
+    }
+    Seq("pb", "pu").foreach(t => e.executeDuck(
+      s"""MERGE INTO $t USING pbs ON $t.id = pbs.id
+        |WHEN MATCHED THEN UPDATE SET v = pbs.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (pbs.id, pbs.v)"""
+        .stripMargin))
+    check("MERGE")
+    e.executeDuck("SET update_mode = 'mor'")
+    try Seq("pb", "pu").foreach(t => e.executeDuck(
+      s"UPDATE $t SET v = v + 1 WHERE id BETWEEN 10 AND 20"))
+    finally e.executeDuck("SET update_mode = 'cow'")
+    check("UPDATE (mor)")
+    assert(!SnapshotOps.commitCompactSmall(spark, dir, 1L << 30).skipped)
+    check("commitCompactSmall")
+    // one file per bucket is as compact as the spec allows
+    assert(SnapshotOps.commitCompactSmall(spark, dir, 1L << 30).skipped)
+    e.close()
+  }
+
   test("MERGE from string keys into int and date keys with recorded " +
       "bounds updates the matched rows: the probe ranges in the " +
       "target's types") {

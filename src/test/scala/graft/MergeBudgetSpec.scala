@@ -57,33 +57,66 @@ class MergeBudgetSpec extends SparkSpecBase {
       descs.toSeq.map { case (id, d) => Job(id, d, records(id)) })
   }
 
+  /** The WARN (and worse) events `body` logs, as "logger: message". */
+  private def warningsOf(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = mutable.ArrayBuffer.empty[String]
+    val appender = new AbstractAppender("merge-budget-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(ev: LogEvent): Unit = seen.synchronized {
+        seen += s"${ev.getLoggerName}: ${ev.getMessage.getFormattedMessage}"
+      }
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    appender.start()
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.synchronized(seen.toSeq)
+  }
+
+  /** A table of four one-file commits: ids 1-100, 101-200, 201-300 and
+    * 301-400, each with qty = id. */
+  private def fourFileTable(e: Engine, name: String): String = {
+    e.executeDuck(s"CREATE TABLE $name (id int, k int, qty int)")
+    (0 until 4).foreach { f =>
+      e.executeDuck(s"INSERT INTO $name VALUES " + (1 to 100)
+        .map(i => s"(${f * 100 + i}, ${i % 7}, ${f * 100 + i})").mkString(", "))
+    }
+    val dir = e.snapshotDir(name).get
+    assert(SnapshotOps.snapshotFileCount(dir, 4) == 4)
+    dir
+  }
+
   private def rowsOf(e: Engine, sql: String): Seq[(Int, Int)] =
     e.executeDuck(sql).collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
 
-  private val Upsert =
-    """MERGE INTO mb USING mb_stg ON mb.id = mb_stg.sid
-      |WHEN MATCHED THEN UPDATE SET qty = mb_stg.sqty
+  /** The upsert MERGE of table `t` from `<t>_stg (sid, sqty)`. */
+  private def upsert(t: String): String =
+    s"""MERGE INTO $t USING ${t}_stg ON $t.id = ${t}_stg.sid
+      |WHEN MATCHED THEN UPDATE SET qty = ${t}_stg.sqty
       |WHEN NOT MATCHED THEN INSERT (id, k, qty)
-      |  VALUES (mb_stg.sid, 0, mb_stg.sqty)"""
-      .stripMargin
+      |  VALUES (${t}_stg.sid, 0, ${t}_stg.sqty)""".stripMargin
 
   test("a key-routed upsert MERGE on a multi-file table launches at " +
       "most 12 labelled jobs and reads each target file at most twice") {
     val e = new Engine(spark)
-    e.executeDuck("CREATE TABLE mb (id int, k int, qty int)")
-    // four commits, one file each: ids 1-100, 101-200, 201-300, 301-400
-    (0 until 4).foreach { f =>
-      e.executeDuck("INSERT INTO mb VALUES " + (1 to 100)
-        .map(i => s"(${f * 100 + i}, ${i % 7}, ${f * 100 + i})").mkString(", "))
-    }
-    val dir = e.snapshotDir("mb").get
-    assert(SnapshotOps.snapshotFileCount(dir, 4) == 4)
+    fourFileTable(e, "mb")
     val tableRows = 400L
     // matched keys in the first two files only, plus three inserts
     e.executeDuck("CREATE OR REPLACE TABLE mb_stg AS SELECT * FROM (VALUES " +
       "(5, 1005), (50, 1050), (150, 1150), (199, 1199), (901, 901), " +
       "(902, 902), (903, 903)) AS v(sid, sqty)")
-    val jobs = jobsOf(e.executeDuck(Upsert))
+    val jobs = jobsOf(e.executeDuck(upsert("mb")))
     val table = jobs.map(j => f"job ${j.id}%4d ${j.records}%6d  ${j.desc}")
       .mkString("\n")
     info(s"${jobs.size} jobs (id, input records, label):\n$table")
@@ -98,7 +131,7 @@ class MergeBudgetSpec extends SparkSpecBase {
     assert(spark.sparkContext.getLocalProperty("spark.job.description")
       == null)
     val c = e.lastCommit("mb")
-    assert(c.written >= 1 && c.reused == 2, c.toString)
+    assert(c.written == 1 && c.reused == 2, c.toString)
     val got = rowsOf(e, "SELECT id, qty FROM mb WHERE id IN " +
       "(5, 6, 50, 150, 199, 250, 901, 902, 903) ORDER BY id")
     assert(got == Seq(5 -> 1005, 6 -> 6, 50 -> 1050, 150 -> 1150,
@@ -177,6 +210,58 @@ class MergeBudgetSpec extends SparkSpecBase {
       .stripMargin)
     assert(rowsOf(e, "SELECT id, qty FROM mb_eq ORDER BY id") ==
       Seq(1 -> 10, 2 -> 222, 3 -> 363))
+    e.close()
+  }
+
+  test("a copy-on-write UPDATE over three touched files writes one file") {
+    val e = new Engine(spark)
+    fourFileTable(e, "mbu")
+    e.executeDuck("UPDATE mbu SET qty = 0 WHERE id IN (5, 150, 250)")
+    val c = e.lastCommit("mbu")
+    assert(c.written == 1 && c.reused == 1, c.toString)
+    assert(rowsOf(e, "SELECT id, qty FROM mbu WHERE qty = 0 ORDER BY id") ==
+      Seq(5 -> 0, 150 -> 0, 250 -> 0))
+    e.close()
+  }
+
+  test("three rounds of the upsert MERGE grow the table by at most two " +
+      "files each") {
+    val e = new Engine(spark)
+    val dir = fourFileTable(e, "mbr")
+    (0 until 3).foreach { r =>
+      val before = SnapshotOps.snapshotFileCount(dir,
+        SnapshotOps.currentVersion(dir))
+      // two matched keys in different files, and three new ids
+      val src = Seq(10 + r, 310 - r, 1000 + 3 * r, 1001 + 3 * r, 1002 + 3 * r)
+      e.executeDuck("CREATE OR REPLACE TABLE mbr_stg AS SELECT * FROM " +
+        "(VALUES " + src.map(i => s"($i, ${-i})").mkString(", ") +
+        ") AS v(sid, sqty)")
+      e.executeDuck(upsert("mbr"))
+      val after = SnapshotOps.snapshotFileCount(dir,
+        SnapshotOps.currentVersion(dir))
+      assert(after <= before + 2, s"round $r: $before -> $after files")
+    }
+    assert(e.executeDuck("SELECT count(*) FROM mbr").collect()(0)
+      .getLong(0) == 409L)
+    assert(rowsOf(e, "SELECT id, qty FROM mbr WHERE qty < 0 ORDER BY id")
+      .size == 15)
+    e.close()
+  }
+
+  test("a key-routed MERGE and a merge-on-read UPDATE log no WARN") {
+    val e = new Engine(spark)
+    fourFileTable(e, "mbw")
+    e.executeDuck("CREATE OR REPLACE TABLE mbw_stg AS SELECT * FROM " +
+      "(VALUES (5, 1005), (150, 1150), (901, 901)) AS v(sid, sqty)")
+    val warned = warningsOf {
+      e.executeDuck(upsert("mbw"))
+      e.executeDuck("SET update_mode = 'mor'")
+      try e.executeDuck("UPDATE mbw SET qty = 0 WHERE id BETWEEN 20 AND 30")
+      finally e.executeDuck("SET update_mode = 'cow'")
+    }
+    assert(warned.isEmpty, warned.mkString("\n"))
+    assert(rowsOf(e, "SELECT id, qty FROM mbw WHERE id IN (5, 25, 150, " +
+      "901) ORDER BY id") == Seq(5 -> 1005, 25 -> 0, 150 -> 1150, 901 -> 901))
     e.close()
   }
 }

@@ -27,7 +27,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * One parquet reader: the metadata plane and the snapshot sources read
   * table-owned parquet files only through `SnapshotOps.readParquet`,
   * which always supplies a schema, so no read plans a schema-inference
-  * job. */
+  * job.
+  *
+  * One parquet writer: every table-owned parquet file (data, deletion
+  * vector, equality-key) is written by `SnapshotOps.writeFiles`, so the
+  * data directory, the layout rule and the partition spec are decided
+  * in one place, and the Engine lays out no frame it commits. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val invisibleWhitespace: Set[Int] =
@@ -148,5 +153,44 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     }
     assert(outside.isEmpty, outside.mkString("\n"))
+  }
+
+  test("table-owned parquet files are written only through " +
+      "SnapshotOps.writeFiles") {
+    // spelled in pieces so this file does not match itself: `.write`,
+    // any chained calls, then `.parquet(` or `.partitionBy(`
+    val write = ("""\.write\s*(?:\.\w+\([^()]*\)\s*)*\.""" +
+      "(?:parquet|partitionBy)" + """\(""").r
+    val dir = ("newData" + """Dir\(""").r
+    val scope = (scalaSources("src/main/scala/graft/sources") ++
+      Seq("graft/operators/SnapshotOps.scala",
+        "graft/operators/LayoutOps.scala",
+        "graft/streaming/SnapshotStream.scala",
+        "org/apache/spark/sql/graft/SnapshotStreamSink.scala")
+        .map(f => Paths.get("src/main/scala", f))).distinct
+    // zorderWrite lays out a user's directory, not a table's
+    val allowed = Set("SnapshotOps.scala" -> "writeFiles",
+      "LayoutOps.scala" -> "zorderWrite")
+    val offenders = scope.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      val lines = text.linesIterator.toSeq
+      (write.findAllMatchIn(text) ++ dir.findAllMatchIn(text)).flatMap { m =>
+        val i = text.substring(0, m.start).count(_ == '\n')
+        val owner = enclosingMember(lines, i)
+        if (allowed((p.getFileName.toString, owner)) ||
+            lines(i).contains("def " + m.matched)) None
+        else Some(s"$p:${i + 1} (in $owner): ${lines(i).trim}")
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the Engine hands every frame it commits to the writer as built:
+    // no coalesce of its own
+    val engine = Paths.get("src/main/scala/graft/Engine.scala")
+    val coalesced = new String(Files.readAllBytes(engine),
+      StandardCharsets.UTF_8).linesIterator.zipWithIndex.collect {
+      case (l, i) if l.contains("." + "coalesce(") =>
+        s"$engine:${i + 1}: ${l.trim}"
+    }.toSeq
+    assert(coalesced.isEmpty, coalesced.mkString("\n"))
   }
 }
