@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructField
 import graft.dialect.DuckRewriter
-import graft.functions.GraftFunctions
 import graft.operators.Summarize
 
 /** Session façade: the full DuckDB-style command surface over Spark
@@ -23,7 +22,7 @@ import graft.operators.Summarize
   * scans with pushdown — is the 100 TB path, and is unaffected).
   */
 class Engine(val spark: SparkSession) {
-  GraftFunctions.register(spark)
+  GraftSession.prepare(spark)
 
   /** Base directory for relative file paths in COPY/read_csv_auto/
     * file-as-table (DuckDB resolves them against its cwd). */

@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place graft builds a SparkSession. Every main and the test
-  * fixture go through [[local]], so a session conf is added or changed
-  * here once. Functions and planner rules are installed into the built
-  * session by `GraftFunctions.register` and `BinnedRangeJoinRule.install`.
+import graft.functions.GraftFunctions
+import graft.plans.ParamLiterals
+
+/** The one place graft builds and prepares a SparkSession. Every main
+  * and the test fixture go through [[local]], so a session conf is
+  * added or changed here once; [[prepare]] readies any session graft
+  * runs on, including one a caller built itself.
   */
 object GraftSession {
 
@@ -17,8 +20,8 @@ object GraftSession {
   /** A `local[cpus]` session (or the live one, if already built) with
     * one shuffle partition per core, UTC session time, no UI, and the
     * chmod-fork-free local filesystem on both Hadoop FS APIs (see
-    * [[graft.fs.FastLocalFileSystem]]). Log level is WARN; a caller
-    * that wants another sets it after the call. */
+    * [[graft.fs.FastLocalFileSystem]]), [[prepare]]d. Log level is
+    * WARN; a caller that wants another sets it after the call. */
   def local(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -30,6 +33,33 @@ object GraftSession {
         "graft.fs.FastLocalFs")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s
+    prepare(s)
+  }
+
+  /** Readies a built session for graft; idempotent, and cheap enough to
+    * run per statement batch. `Engine`'s constructor and `Queries.prep`
+    * call it, so a session graft did not build gets it too.
+    *
+    *  - registers graft's SQL functions (`GraftFunctions.register`);
+    *  - installs [[graft.plans.ParamLiterals]] as a user-provided
+    *    optimizer rule, which runs after Spark's own batches (constant
+    *    folding, pushdown, partition pruning) and turns every non-null
+    *    int, long, short, byte, float, double, date and timestamp
+    *    literal into a [[graft.plans.ParamLiteral]], whose generated
+    *    code reads the value instead of inlining it;
+    *  - names whole-stage classes without their stage id
+    *    (`spark.sql.codegen.useIdInClassName=false`), so identical
+    *    stages share one class within and across plans.
+    *
+    * With both, the generated source depends on the plan's shape alone,
+    * and a statement shape seen before hits Spark's codegen cache
+    * whatever its values. */
+  def prepare(spark: SparkSession): SparkSession = synchronized {
+    GraftFunctions.register(spark)
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(ParamLiterals))
+      spark.experimental.extraOptimizations = rules :+ ParamLiterals
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    spark
   }
 }

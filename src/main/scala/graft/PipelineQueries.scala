@@ -621,7 +621,9 @@ object PipelineQueries {
     val prev =
       if (rdd == null) perSession.remove(name)
       else perSession.put(name, rdd)
-    if (prev != null && (prev ne rdd)) scala.util.Try(prev.unpersist(false))
+    // RDD.unpersist would WARN that a local checkpoint's lineage is gone
+    if (prev != null && (prev ne rdd))
+      scala.util.Try(org.apache.spark.sql.graft.RddBridge.release(prev))
     ck.createOrReplaceTempView(name)
     ck
   }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.dialect.DuckRewriter
-import graft.functions.GraftFunctions
 
 /** Shared plumbing for the SparkEntry query catalog. */
 object Queries {
@@ -16,7 +15,7 @@ object Queries {
 
   def prep(spark: SparkSession, sfDir: String): Unit = {
     Tables.registerAll(spark, sfDir)
-    GraftFunctions.register(spark)
+    GraftSession.prepare(spark)
   }
 
   /** Spark SQL text + DuckDB oracle text (they differ only where the

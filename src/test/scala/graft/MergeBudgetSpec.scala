@@ -57,33 +57,6 @@ class MergeBudgetSpec extends SparkSpecBase {
       descs.toSeq.map { case (id, d) => Job(id, d, records(id)) })
   }
 
-  /** The WARN (and worse) events `body` logs, as "logger: message". */
-  private def warningsOf(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = mutable.ArrayBuffer.empty[String]
-    val appender = new AbstractAppender("merge-budget-warnings", null, null,
-        true, Property.EMPTY_ARRAY) {
-      override def append(ev: LogEvent): Unit = seen.synchronized {
-        seen += s"${ev.getLoggerName}: ${ev.getMessage.getFormattedMessage}"
-      }
-    }
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    appender.start()
-    root.addAppender(appender, Level.WARN, null)
-    ctx.updateLoggers()
-    try body
-    finally {
-      root.removeAppender(appender.getName)
-      ctx.updateLoggers()
-      appender.stop()
-    }
-    seen.synchronized(seen.toSeq)
-  }
-
   /** A table of four one-file commits: ids 1-100, 101-200, 201-300 and
     * 301-400, each with qty = id. */
   private def fourFileTable(e: Engine, name: String): String = {

@@ -426,4 +426,21 @@ class QueriesSpec extends SparkSpecBase {
       }
     }
   }
+
+  test("rebinding a checkpoint view releases the previous checkpoint " +
+      "without a WARN") {
+    val name = "graft_rebind_ckpt"
+    val first = spark.range(10).toDF().localCheckpoint()
+    PipelineQueries.bindCheckpointView(spark, name, first)
+    val firstId = first.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.get
+    assert(spark.sparkContext.getPersistentRDDs.contains(firstId))
+    val warned = warningsOf(PipelineQueries.bindCheckpointView(spark, name,
+      spark.range(20).toDF().localCheckpoint()))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(firstId))
+    assert(spark.table(name).count() == 20)
+    spark.catalog.dropTempView(name)
+  }
 }

@@ -24,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SnapshotOps.casCommit`, so the CAS protocol, its retry budgets and
   * its conflict count live in one place.
   *
+  * One session preparation: graft's functions, its optimizer rules and
+  * its codegen naming are put into a session by `GraftSession.prepare`
+  * alone (`BinnedRangeJoinRule.install` adds its opt-in rule), so a
+  * session graft did not build gets the same setup as one it did.
+  *
   * One parquet reader: the metadata plane and the snapshot sources read
   * table-owned parquet files only through `SnapshotOps.readParquet`,
   * which always supplies a schema, so no read plans a schema-inference
@@ -111,6 +116,34 @@ class SourceHygieneSpec extends AnyFunSuite {
           (line.contains(builder) ||
             (line.contains(fsKey) && !docOfFs(p, line))) =>
         s"$p:$n: ${line.trim}"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("sessions are prepared only in GraftSession.prepare") {
+    // spelled in pieces so this file does not match itself
+    val register = "GraftFunctions" + ".register("
+    val naming = "useIdIn" + "ClassName"
+    val assign = ("""extraOptimizations\s*""" + "=(?!=)").r
+    val prepare = "GraftSession.scala" -> "prepare"
+    // (what a line does, the members allowed to do it)
+    val checks = Seq[(String => Boolean, Set[(String, String)])](
+      (_.contains(register), Set(prepare)),
+      (_.contains(naming), Set(prepare)),
+      // BinnedRangeJoinRule.install arms its opt-in rule on demand
+      (assign.findFirstIn(_).isDefined,
+        Set(prepare, "BinnedRangeJoinRule.scala" -> "install")))
+    val offenders = scalaSources("src/main/scala").flatMap { p =>
+      val lines = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        .linesIterator.toSeq
+      lines.indices.filterNot(i => lines(i).trim.startsWith("*")).flatMap {
+        i =>
+          val at = (p.getFileName.toString, enclosingMember(lines, i))
+          checks.collectFirst {
+            case (hit, ok) if hit(lines(i)) && !ok(at) =>
+              s"$p:${i + 1} (in ${at._2}): ${lines(i).trim}"
+          }
+      }
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
