@@ -3689,10 +3689,11 @@ object PipelineQueries {
     // block per step, mechanically generated below), so every per-step
     // decision — counts, tie-breaks, the greedy left-to-right merge
     // application, the surviving symbol count — is re-derived
-    // end-to-end by the second engine. Merge application is exact by
-    // construction: the canonical double-space word form makes plain
-    // `replace` (both engines: left-to-right, non-overlapping) equal
-    // greedy BPE (TextOps.bpeCanonical scaladoc).
+    // end-to-end by the second engine. Merge application agrees by
+    // construction: the canonical double-space word form makes the
+    // oracle's plain `replace` (left-to-right, non-overlapping) equal
+    // the greedy symbol-array merge bpeTrain runs (TextOps.bpeCanonical
+    // scaladoc).
     "q235_bpe_train" -> api((spark, _) =>
       TextOps.bpeTrain(spark.table("documents"), "text", 8)
         .orderBy("step"),

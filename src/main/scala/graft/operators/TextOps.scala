@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RddBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-pipeline operators for LLM training-data curation: tokenization,
   * shingling, MinHash+LSH near-dup detection, SimHash, normalization
@@ -11,9 +14,12 @@ import org.apache.spark.sql.functions._
   * retrieval flow in eval/doc_retriever.py:28-94 — to the corpus scale the
   * north-star demands. Everything here is declarative Column algebra
   * (higher-order functions over arrays, codegen'd hash calls via
-  * [[graft.functions.GraftHash]]) — no UDFs, no driver-side loops — so
-  * Catalyst keeps pushdown/pruning and the operators parallelize over
-  * whatever partitioning the input already has.
+  * [[graft.functions.GraftHash]]) — no UDFs — so Catalyst keeps
+  * pushdown/pruning and the operators parallelize over whatever
+  * partitioning the input already has. The one driver-side loop is
+  * [[bpeTrain]]'s merge rounds, whose every decision is global: after
+  * one SQL shuffle to the vocabulary-sized word table, each round is a
+  * single RDD job, so no round pays Catalyst planning again.
   *
   * Scale design (100 TB):
   *   - per-document transforms (tokens/shingles/signatures) are map-only:
@@ -970,87 +976,114 @@ object TextOps {
     * pair count (q165): repeat `numMerges` times {count adjacent
     * symbol pairs frequency-weighted over the distinct-WORD table,
     * merge the best pair everywhere}. Returns the merge list with
-    * per-step stats: (step, lt, rt, merged, cnt, n_symbols).
+    * per-step stats: (step, lt, rt, merged, cnt, n_symbols), where
+    * n_symbols counts the distinct symbols after merge `step`.
+    * Training stops early when no word has two symbols left.
     *
     * Scale design: the corpus collapses to the word-frequency table
-    * before the loop (ONE corpus-sized shuffle; everything after is
-    * vocabulary-sized — the standard trick that makes BPE training
-    * tractable at any corpus size). Each round is two small jobs on
-    * that table (pair count + merge apply), the chosen pair is the
-    * only driver-side value (one 1-row collect — the merge decision is
-    * global by definition), and state re-anchors through
-    * [[org.apache.spark.sql.graft.PlanBridge.freshStats]] so neither
-    * plan lineage nor stats estimates compound across rounds.
-    * Tie-break: (cnt DESC, lt ASC, rt ASC) — binary string order,
-    * identical in Spark and DuckDB. */
+    * before the loop (ONE corpus-sized shuffle, in SQL; everything
+    * after is vocabulary-sized — the standard trick that makes BPE
+    * training tractable at any corpus size). The loop is iterative RDD
+    * code, like MLlib's ALS or GraphX's Pregel, so no round plans or
+    * generates code: each round is ONE job of two stages over the
+    * previous round's locally checkpointed state — the map stage
+    * applies the merge, caches the new state and combines its
+    * frequency-weighted symbol and pair counts map-side; the reduce
+    * stage sums them and keeps each partition's distinct-symbol count
+    * and best pair, at most one row per partition for the driver (the
+    * merge decision is global by definition). The superseded state is
+    * released once the new one is checkpointed.
+    * Tie-break: (cnt DESC, lt ASC, rt ASC) in UTF-8 byte order, the
+    * binary string order of Spark and DuckDB. */
   def bpeTrain(docs: DataFrame, textCol: String,
       numMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val wc = docs
-      .select(explode(tokens(lower(col(textCol)))).as("w"))
-      .where(length(col("w")) >= 1)
-      .groupBy("w").agg(count(lit(1)).as("f"))
-    var state = org.apache.spark.sql.graft.PlanBridge.freshStats(
-      wc.select(bpeCanonical(col("w")).as("seq"), col("f"))
-        .localCheckpoint(true))
-    // fused per-round scan (r17-opt, guide §2.3 "aggregate before you
-    // shuffle" / §1.2 fewer passes): ONE job over the state computes
-    // both results a round needs — the distinct-symbol count of the
-    // CURRENT state and the argmax pair for the NEXT merge — instead
-    // of two separate vocabulary-sized actions. Symbols and adjacent
-    // pairs explode into one tagged stream, collapse by (kind, a, b),
-    // then a global aggregate takes n_sym = count of symbol groups and
-    // best = min_by over (−cnt, lt, rt) — EXACTLY the previous
-    // (cnt DESC, lt ASC, rt ASC) tie-break in binary string order, so
-    // the merge SEQUENCE is bit-identical (the oracle pins it).
-    val pairTy = "array<struct<kind:string,a:string,b:string>>"
-    def scan(st: DataFrame): (Option[(String, String, Long)], Long) = {
-      val l = split(trim(col("seq")), "  ")
-      val syms = transform(l, s =>
-        struct(lit("s").as("kind"), s.as("a"),
-          lit(null).cast("string").as("b")))
-      val pairs = when(size(l) >= 2,
-        transform(sequence(lit(1), size(l) - 1),
-          i => struct(lit("p").as("kind"), element_at(l, i).as("a"),
-            element_at(l, i + 1).as("b"))))
-        .otherwise(array().cast(pairTy))
-      val row = st
-        .select(col("f"), explode(concat(syms, pairs)).as("e"))
-        .groupBy(col("e.kind").as("kind"), col("e.a").as("a"),
-          col("e.b").as("b"))
-        .agg(sum("f").as("cnt"))
-        .agg(
-          count(when(col("kind") === "s", 1)).as("n_sym"),
-          min_by(
-            when(col("kind") === "p",
-              struct(col("a"), col("b"), col("cnt"))),
-            when(col("kind") === "p",
-              struct((-col("cnt")).as("nc"), col("a"), col("b"))))
-            .as("best"))
-        .head()
-      val best = Option(row.getStruct(1))
-        .map(s => (s.getString(0), s.getString(1), s.getLong(2)))
-      (best, row.getLong(0))
-    }
     val merges =
       scala.collection.mutable.ArrayBuffer
         .empty[(Int, String, String, String, Long, Long)]
-    var k = 1
-    var best = scan(state)._1 // round 1's argmax (n_sym of state 0 unused)
-    while (k <= numMerges && best.isDefined) {
-      val (lt, rt, cnt) = best.get
-      state = org.apache.spark.sql.graft.PlanBridge.freshStats(
-        state.select(
-          replace(col("seq"), lit(s" $lt  $rt "), lit(s" $lt$rt "))
-            .as("seq"), col("f"))
-          .localCheckpoint(true))
-      // one fused job: this round's n_symbols + next round's argmax
-      val (nextBest, nSym) = scan(state)
-      merges += ((k, lt, rt, lt + rt, cnt, nSym))
-      best = nextBest
-      k += 1
+    if (numMerges >= 1) {
+      // initial symbols from the tokenizer's own Column expressions, so
+      // the character split is BpeTokenizer's (and the oracle's)
+      var state: RDD[(Array[String], Long)] = docs
+        .select(explode(tokens(lower(col(textCol)))).as("w"))
+        .where(length(col("w")) >= 1)
+        .groupBy("w").agg(count(lit(1)).as("f"))
+        .select(split(trim(bpeCanonical(col("w"))), "  ").as("syms"),
+          col("f"))
+        .rdd.map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
+      try {
+        var best = bpeRound(state)._2 // n_symbols of state 0 unused
+        var k = 1
+        while (k <= numMerges && best.isDefined) {
+          val (lt, rt, cnt) = best.get
+          val next = state.map { case (syms, f) =>
+            (bpeMerge(syms, lt, rt), f) }
+          val (nSym, nextBest) = bpeRound(next)
+          RddBridge.release(state)
+          state = next
+          merges += ((k, lt, rt, lt + rt, cnt, nSym))
+          best = nextBest
+          k += 1
+        }
+      } finally RddBridge.release(state)
     }
     merges.toSeq.toDF("step", "lt", "rt", "merged", "cnt", "n_symbols")
+  }
+
+  /** One BPE round's job over `state`, which it marks for local
+    * checkpointing so the job caches it and truncates its lineage:
+    * (distinct symbols, best adjacent pair with its weighted count). */
+  private def bpeRound(state: RDD[(Array[String], Long)])
+      : (Long, Option[(String, String, Long)]) = {
+    state.localCheckpoint()
+    val parts = state
+      .flatMap { case (syms, f) =>
+        // a symbol keys as (s, null), an adjacent pair as (lt, rt)
+        syms.iterator.map(s => ((s, null: String), f)) ++
+          syms.iterator.zip(syms.iterator.drop(1)).map(p => (p, f))
+      }
+      .reduceByKey(_ + _)
+      .mapPartitions { it =>
+        var nSym = 0L
+        var best: (String, String, Long) = null
+        it.foreach { case ((a, b), cnt) =>
+          if (b == null) nSym += 1
+          else if (best == null || bpeBefore((a, b, cnt), best))
+            best = (a, b, cnt)
+        }
+        Iterator.single((nSym, Option(best)))
+      }
+      .collect()
+    (parts.map(_._1).sum,
+      parts.flatMap(_._2).reduceOption((x, y) => if (bpeBefore(y, x)) y else x))
+  }
+
+  /** (cnt DESC, lt ASC, rt ASC), strings in UTF-8 byte order — which
+    * `String.compareTo`'s UTF-16 order is not above U+FFFF. */
+  private def bpeBefore(x: (String, String, Long),
+      y: (String, String, Long)): Boolean = {
+    def utf8(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    if (x._3 != y._3) x._3 > y._3
+    else {
+      val c = utf8(x._1, y._1)
+      if (c != 0) c < 0 else utf8(x._2, y._2) < 0
+    }
+  }
+
+  /** Greedy left-to-right, non-overlapping merge of the pair (lt, rt) —
+    * what `replace(" lt  rt ", " ltrt ")` does to the canonical form. */
+  private def bpeMerge(syms: Array[String], lt: String,
+      rt: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    var merged = false
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == lt && syms(i + 1) == rt) {
+        out += lt + rt; i += 2; merged = true
+      } else { out += syms(i); i += 1 }
+    }
+    if (merged) out.result() else syms
   }
 }

@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
-
 import graft.operators.SnapshotOps
 
 /** The key-routed MERGE's cost, pinned by counters rather than seconds:
@@ -12,50 +7,6 @@ import graft.operators.SnapshotOps
   * and the label every one of those jobs carries. Next to the budget,
   * the clause shapes the route serves keep their results. */
 class MergeBudgetSpec extends SparkSpecBase {
-
-  /** One job a statement launched: its description and the input
-    * records its tasks read (parquet scans and cached blocks alike). */
-  private final case class Job(id: Int, desc: String, records: Long)
-
-  /** Every job `body` starts, in start order. */
-  private def jobsOf(body: => Unit): Seq[Job] = {
-    val descs = mutable.LinkedHashMap.empty[Int, String]
-    val stageJob = mutable.Map.empty[Int, Int]
-    val records = mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    // a marker job started last shows the (asynchronous) listener bus
-    // has delivered every event before it
-    val marker = s"merge-budget-marker-${System.nanoTime()}"
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (desc == marker) markerSeen = true
-        else {
-          descs(j.jobId) = desc
-          j.stageIds.foreach(s => stageJob(s) = j.jobId)
-        }
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-        for (job <- stageJob.get(t.stageId); m <- Option(t.taskMetrics))
-          records(job) += m.inputMetrics.recordsRead
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus never delivered the marker job")
-    } finally sc.removeSparkListener(listener)
-    listener.synchronized(
-      descs.toSeq.map { case (id, d) => Job(id, d, records(id)) })
-  }
 
   /** A table of four one-file commits: ids 1-100, 101-200, 201-300 and
     * 301-400, each with qty = id. */

@@ -1,9 +1,5 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.operators.SnapshotOps
 import graft.streaming.SnapshotStream
 
@@ -25,35 +21,8 @@ class NoSchemaInferenceSpec extends SparkSpecBase {
 
   /** (job description, stage call stack) of every stage of every job
     * `body` starts. */
-  private def stagesOf(body: => Unit): Seq[(String, String)] = {
-    val stages = ArrayBuffer.empty[(String, String)]
-    // a marker job started last shows the (asynchronous) listener bus
-    // has delivered every job before it
-    val marker = s"inference-spec-marker-${System.nanoTime()}"
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (desc == marker) markerSeen = true
-        else stages.synchronized(
-          j.stageInfos.foreach(s => stages += ((desc, s.details))))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener bus never delivered the marker job")
-    } finally sc.removeSparkListener(listener)
-    stages.synchronized(stages.toList)
-  }
+  private def stagesOf(body: => Unit): Seq[(String, String)] =
+    jobsOf(body).flatMap(j => j.stages.map(s => (j.desc, s)))
 
   private def isInference(stage: (String, String)): Boolean =
     stage._2.linesIterator.nextOption()

@@ -541,6 +541,59 @@ class TextOpsSpec extends SparkSpecBase {
     assert(refTok("newest").length < 6)
   }
 
+  test("bpeTrain runs one Spark job per merge round, plus the word " +
+      "table's shuffle and the first round's pair count") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    var merges = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf {
+      merges = TextOps.bpeTrain(docs, "text", 6).collect().toSeq
+    }
+    assert(merges.size == 6, merges.mkString("\n"))
+    val table = jobs.map(j => f"job ${j.id}%4d ${j.stages.size}%2d stages " +
+      j.stages.headOption.map(_.linesIterator.next()).getOrElse(""))
+      .mkString("\n")
+    info(s"${jobs.size} jobs (id, stages, first stage's call site):\n$table")
+    assert(jobs.size <= 6 + 2, s"${jobs.size} jobs for 6 merges:\n$table")
+  }
+
+  test("bpeTrain breaks count ties in UTF-8 byte order, not UTF-16 order") {
+    import spark.implicits._
+    // U+FF41 (EF BD 81 in UTF-8) sorts before U+1F600 (F0 9F 98 80) in
+    // bytes, and after it in UTF-16 units (FF41 > D83D DE00)
+    val (bmp, sup) = ("\uff41", new String(Character.toChars(0x1f600)))
+    assert(bmp.compareTo(sup) > 0)
+    val docs = Seq((1L, s"${sup}b ${bmp}b")).toDF("doc_id", "text")
+    val got = TextOps.bpeTrain(docs, "text", 5).orderBy("step").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4), r.getLong(5))).toSeq
+    // both pairs count 1; after both merges no pair is left
+    assert(got == Seq((1, bmp, "b", bmp + "b", 1L, 3L),
+      (2, sup, "b", sup + "b", 1L, 2L)), got)
+  }
+
+  test("bpeTrain stops early when no pair is left") {
+    import spark.implicits._
+    val single = Seq((1L, "a b c a"), (2L, "b  c")).toDF("doc_id", "text")
+    assert(TextOps.bpeTrain(single, "text", 4).collect().isEmpty)
+    // "abc" and "abd": ab, then abc, then abd — then nothing is left
+    val short = Seq((1L, "abc abd abc")).toDF("doc_id", "text")
+    val got = TextOps.bpeTrain(short, "text", 10).orderBy("step").collect()
+      .map(r => (r.getString(3), r.getLong(4), r.getLong(5))).toSeq
+    assert(got == Seq(("ab", 3L, 3L), ("abc", 2L, 3L), ("abd", 1L, 2L)), got)
+  }
+
+  test("bpeTrain leaves no persisted RDD behind and logs no WARN") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val warned = warningsOf {
+      assert(TextOps.bpeTrain(docs, "text", 4).collect().length == 4)
+    }
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"${sc.getPersistentRDDs.keySet -- before} left persisted")
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
+
   test("exactSubstrDedup emits two spans when duplicated runs are " +
       "separated by unique tokens") {
     import spark.implicits._
