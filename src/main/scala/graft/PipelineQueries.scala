@@ -2979,8 +2979,8 @@ object PipelineQueries {
     // (see TextOps.exactSubstrDedup: union of duplicated 8-token
     // windows == the maximal duplicated spans). The oracle derives the
     // same spans INDEPENDENTLY: coverage via a correlated EXISTS range
-    // probe (dup start in [p-7, p]) instead of the engine's sliding-
-    // window max, so the two formulations cross-check each other.
+    // probe (dup start in [p-7, p]) instead of the engine's per-document
+    // coverage kernel, so the two formulations cross-check each other.
     "q199_exact_substr_dedup" -> api((spark, _) =>
       TextOps.exactSubstrDedup(spark.table("documents"),
         "doc_id", "text", n = 8).orderBy("doc_id"),
@@ -3154,11 +3154,12 @@ object PipelineQueries {
 
     // Lexical BM25 top-10 retrieval (r9) — the sparse complement to
     // the dense retrieval entries (q60/q61): Okapi BM25 with the
-    // Lucene idf, k1=1.2 b=0.75, natural log. The tf shuffle carries
-    // only query-term postings (isin filter below the aggregation);
-    // scores round to 6dp BEFORE ranking so cross-engine 1-ulp ln
-    // drift cannot flip the doc_id tie-break; the corpus-wide top-10
-    // runs as TakeOrderedAndProject, not a global window.
+    // Lucene idf, k1=1.2 b=0.75, natural log. Per-doc tf and length
+    // come from one map-only kernel pass, N/sum(dl)/df from one global
+    // aggregate of it, so the corpus never shuffles; scores round to
+    // 6dp BEFORE ranking so cross-engine 1-ulp ln drift cannot flip the
+    // doc_id tie-break; the corpus-wide top-10 runs as
+    // TakeOrderedAndProject, not a global window.
     "q204_bm25_topn" -> api((spark, _) =>
       operators.RetrievalOps.bm25TopN(spark.table("documents"),
         "doc_id", "text", Seq("hash", "join", "merge", "filter"),

@@ -118,6 +118,12 @@ object GraftFunctions {
     toCol(WordShinglesExpr(toExpr(text), toExpr(n)))
   def lshBandHashes(sig: Column, b: Column, r: Column): Column =
     toCol(LshBandsExpr(toExpr(sig), toExpr(b), toExpr(r)))
+  def shingleFps(words: Column, n: Column): Column =
+    toCol(ShingleFpsExpr(toExpr(words), toExpr(n)))
+  def spanRollup(words: Column, starts: Column, n: Column): Column =
+    toCol(SpanRollupExpr(toExpr(words), toExpr(starts), toExpr(n)))
+  def termCounts(words: Column, terms: Column): Column =
+    toCol(TermCountsExpr(toExpr(words), toExpr(terms)))
 
   def register(spark: SparkSession): Unit = {
     val registry =

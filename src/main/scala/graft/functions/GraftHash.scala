@@ -101,6 +101,48 @@ object GraftHash {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
   }
 
+  /** 48-bit fingerprint of every n-token window of `words`, in window
+    * order: the first 6 bytes (big-endian) of the md5 of the window's
+    * tokens joined by single spaces. Bit-identical to
+    * `CAST(conv(substring(md5(array_join(slice(words, i, n), ' ')), 1,
+    * 12), 16, 10) AS BIGINT)` for i = 1 .. size(words) - n + 1, null
+    * tokens skipped as `array_join` skips them — the fingerprint the
+    * DuckDB oracle computes with the same md5 prefix. Fewer than n
+    * tokens yield an empty array. Each token's bytes are read once; the
+    * digest is fed the window's tokens in place, with no joined string
+    * per window. */
+  def shingleFingerprints(words: ArrayData, n: Int): ArrayData = {
+    val len = words.numElements()
+    val m = math.max(len - n + 1, 0)
+    val out = new Array[Long](m)
+    if (m > 0) {
+      val toks = Array.tabulate(len)(i =>
+        if (words.isNullAt(i)) null else words.getUTF8String(i).getBytes)
+      val md = java.security.MessageDigest.getInstance("MD5")
+      var s = 0
+      while (s < m) {
+        var first = true
+        var j = s
+        while (j < s + n) {
+          if (toks(j) != null) {
+            if (!first) md.update(' '.toByte)
+            md.update(toks(j))
+            first = false
+          }
+          j += 1
+        }
+        val d = md.digest()
+        var v = 0L
+        var b = 0
+        while (b < 6) { v = (v << 8) | (d(b) & 0xFFL); b += 1 }
+        out(s) = v
+        s += 1
+      }
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(out)
+  }
+
   /** Portable 32-bit SimHash: bit j is the majority vote of the MSB of
     * hex nibble j of each token's md5. Unlike [[simhash64]] (xxHash64,
     * engine-internal), every SQL engine with `md5()` + `substr()` can

@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -289,6 +292,83 @@ object GraftVector {
       i += 1
     }
     UTF8String.fromBytes(java.util.Arrays.copyOf(out, k))
+  }
+
+  /** Exact-substring rollup of one document: `starts` holds the 0-based
+    * offsets of the doc's duplicated n-token windows (null or empty: no
+    * window is duplicated, any order). A token is removed iff some
+    * window covers it, that is, iff a start lies in [p - n + 1, p].
+    * Returns (n_tokens, n_removed, n_spans, kept_text): n_spans counts
+    * the maximal runs of removed tokens, and kept_text joins the kept
+    * tokens with single spaces (null tokens skipped, as `concat_ws`
+    * does). One pass over a coverage difference array, O(tokens +
+    * starts); the same answer as a sliding-window max over per-token
+    * start flags followed by a lag and a sorted collect. Null `words`
+    * give null. */
+  def spanRollup(words: ArrayData, starts: ArrayData, n: Int): InternalRow = {
+    if (words == null) return null
+    val len = words.numElements()
+    val delta = new Array[Int](len + 1)
+    if (starts != null) {
+      var i = 0
+      while (i < starts.numElements()) {
+        if (!starts.isNullAt(i)) {
+          val s = starts.getInt(i)
+          if (s >= 0 && s < len) {
+            delta(s) += 1
+            delta(math.min(s.toLong + n, len.toLong).toInt) -= 1
+          }
+        }
+        i += 1
+      }
+    }
+    val kept = new Array[UTF8String](len)
+    var nKept = 0
+    var removed, spans = 0L
+    var depth = 0
+    var prevCovered = false
+    var p = 0
+    while (p < len) {
+      depth += delta(p)
+      val covered = depth > 0
+      if (covered) {
+        removed += 1
+        if (!prevCovered) spans += 1
+      } else if (!words.isNullAt(p)) {
+        kept(nKept) = words.getUTF8String(p)
+        nKept += 1
+      }
+      prevCovered = covered
+      p += 1
+    }
+    new GenericInternalRow(Array[Any](len.toLong, removed, spans,
+      UTF8String.concatWs(UTF8String.fromString(" "),
+        java.util.Arrays.copyOf(kept, nKept): _*)))
+  }
+
+  /** Per-term occurrence counts of a token array: element i is how often
+    * `terms(i)` occurs in `words` (byte equality, as `=` and `isin`
+    * compare strings; a null term counts 0). One pass over the tokens,
+    * each compared against the query's few terms — the map side of
+    * BM25's tf without exploding a row per token. */
+  def termCounts(words: ArrayData, terms: ArrayData): ArrayData = {
+    val nt = terms.numElements()
+    val ts = Array.tabulate(nt)(j =>
+      if (terms.isNullAt(j)) null else terms.getUTF8String(j))
+    val counts = new Array[Long](nt)
+    var i = 0
+    while (i < words.numElements()) {
+      if (!words.isNullAt(i)) {
+        val w = words.getUTF8String(i)
+        var j = 0
+        while (j < nt) {
+          if (ts(j) != null && ts(j).equals(w)) counts(j) += 1
+          j += 1
+        }
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 
   def wordShingles(text: UTF8String, n: Int): ArrayData = {

@@ -503,6 +503,78 @@ case class WordShinglesAllExpr(text: Expression, n: Expression)
     copy(newChildren(0), newChildren(1))
 }
 
+/** `e` as an array of `elem`: unchanged when it already is one (whatever
+  * its element nullability, which a cast would copy the array to
+  * change); cast otherwise (`array()` literals arrive as array<void>). */
+private object ArrayArg {
+  def apply(e: Expression, elem: DataType): Expression = e.dataType match {
+    case ArrayType(t, _) if t == elem => e
+    case _ => Cast(e, ArrayType(elem))
+  }
+}
+
+/** 48-bit md5-prefix fingerprints of every n-token window of a token
+  * array ([[GraftHash.shingleFingerprints]]), in window order. */
+case class ShingleFpsExpr(words: Expression, n: Expression)
+    extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression =
+    objects.StaticInvoke(GraftHash.getClass,
+      ArrayType(LongType, containsNull = false), "shingleFingerprints",
+      Seq(ArrayArg(words, StringType), Cast(n, IntegerType)),
+      inputTypes = Seq(ArrayType(StringType), IntegerType),
+      returnNullable = false)
+  override def children: Seq[Expression] = Seq(words, n)
+  override def prettyName: String = "shingle_fps"
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(newChildren(0), newChildren(1))
+}
+
+/** One document's exact-substring rollup ([[GraftVector.spanRollup]]):
+  * its tokens and the 0-based starts of its duplicated n-token windows
+  * in, (n_tokens, n_removed, n_spans, kept_text) out. A null `starts`
+  * is a doc with no duplicated window; a null `words` gives null. */
+case class SpanRollupExpr(words: Expression, starts: Expression,
+    n: Expression) extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression =
+    objects.StaticInvoke(GraftVector.getClass, SpanRollupExpr.result,
+      "spanRollup", Seq(ArrayArg(words, StringType),
+        ArrayArg(starts, IntegerType), Cast(n, IntegerType)),
+      inputTypes = Seq(ArrayType(StringType), ArrayType(IntegerType),
+        IntegerType),
+      propagateNull = false)
+  override def children: Seq[Expression] = Seq(words, starts, n)
+  override def prettyName: String = "span_rollup"
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(newChildren(0), newChildren(1), newChildren(2))
+}
+
+object SpanRollupExpr {
+  val result: StructType = StructType(Seq(
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("n_removed", LongType, nullable = false),
+    StructField("n_spans", LongType, nullable = false),
+    StructField("kept_text", StringType, nullable = false)))
+}
+
+/** Per-term occurrence counts of a token array
+  * ([[GraftVector.termCounts]]): element i counts `terms[i]`. */
+case class TermCountsExpr(words: Expression, terms: Expression)
+    extends Expression with RuntimeReplaceable {
+  override lazy val replacement: Expression =
+    objects.StaticInvoke(GraftVector.getClass,
+      ArrayType(LongType, containsNull = false), "termCounts",
+      Seq(ArrayArg(words, StringType), ArrayArg(terms, StringType)),
+      inputTypes = Seq(ArrayType(StringType), ArrayType(StringType)),
+      returnNullable = false)
+  override def children: Seq[Expression] = Seq(words, terms)
+  override def prettyName: String = "term_counts"
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(newChildren(0), newChildren(1))
+}
+
 /** Fused LSH band hashes ([[GraftVector.lshBandHashes]]): all b band
   * hashes of a minhash signature in one pass. `b`/`r` must be foldable. */
 case class LshBandsExpr(sig: Expression, b: Expression, r: Expression)

@@ -230,11 +230,13 @@ object EmbeddingOps {
     * Plan shape: quantized corpus scan × broadcast quantized queries →
     * per-query top-m window → candidate-sized join back to the float
     * corpus → exact [[rankTopK]]. The corpus is never shuffled; the only
-    * exchanges carry ≤ m·|queries| candidate rows. */
+    * exchanges carry ≤ m·|queries| candidate rows. Nothing else runs:
+    * the margin of [[knnQuantizedRerankMargin]] is not computed. */
   def knnQuantizedRerank(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, m: Int): DataFrame =
-    knnQuantizedRerankMargin(corpus, queries, idCol, vecCol, k, m)
-      .drop("worst_rank")
+      idCol: String, vecCol: String, k: Int, m: Int): DataFrame = {
+    val (_, exact) = quantizedCandidates(corpus, queries, idCol, vecCol, k, m)
+    rankTopK(exact, k)
+  }
 
   /** [[knnQuantizedRerank]] plus the measured safety margin as a
     * column: `worst_rank` is the worst (largest) approximate rank any
@@ -249,6 +251,26 @@ object EmbeddingOps {
     * broadcast-ready scalar join), nothing touching the corpus scan. */
   def knnQuantizedRerankMargin(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, m: Int): DataFrame = {
+    val (cand, exact) =
+      quantizedCandidates(corpus, queries, idCol, vecCol, k, m)
+    // the global max runs as an empty-key window over the |queries|·k
+    // output rows (tiny: one single-partition exchange of the final
+    // result), NOT as a self-join — a crossJoin against topk.agg would
+    // re-execute the whole candidate pipeline a second time
+    rankTopK(exact, k)
+      .join(cand, Seq("qid", "id"))
+      .withColumn("worst_rank",
+        max(col("arn")).over(Window.partitionBy()).cast("int"))
+      .drop("arn")
+  }
+
+  /** The int8 prefilter both rerank forms share: `cand` is each query's
+    * approximate top-m (qid, id, arn), and `exact` those candidates
+    * joined back to the float vectors (qid, id, vec, qvec), ready for
+    * [[rankTopK]]. */
+  private def quantizedCandidates(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int,
+      m: Int): (DataFrame, DataFrame) = {
     require(m >= k, s"prefilter width m=$m must be >= k=$k")
     val q8 = GraftFunctions.vecQuantize8 _
     val cq = corpus.select(col(idCol).as("id"), q8(col(vecCol)).as("qv"))
@@ -261,20 +283,12 @@ object EmbeddingOps {
         Window.partitionBy("qid").orderBy(col("acos").desc, col("id"))))
       .where(col("arn") <= m)
       .select(col("qid"), col("id"), col("arn"))
-    val exact = cand
+    val exact = cand.select(col("qid"), col("id"))
       .join(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
         Seq("id"))
       .join(broadcast(queries.select(col(idCol).as("qid"),
         col(vecCol).as("qvec"))), Seq("qid"))
-    // the global max runs as an empty-key window over the |queries|·k
-    // output rows (tiny: one single-partition exchange of the final
-    // result), NOT as a self-join — a crossJoin against topk.agg would
-    // re-execute the whole candidate pipeline a second time
-    rankTopK(exact.drop("arn"), k)
-      .join(cand, Seq("qid", "id"))
-      .withColumn("worst_rank",
-        max(col("arn")).over(Window.partitionBy()).cast("int"))
-      .drop("arn")
+    (cand, exact)
   }
 
   /** Exact top-k through a PRODUCT-QUANTIZATION prefilter — the

@@ -215,59 +215,67 @@ object RetrievalOps {
     * variant ln(1 + (N - df + 0.5)/(df + 0.5))) — the standard sparse
     * complement to [[retrieveTopN]]'s dense scoring.
     *
-    * Plan shape for a corpus-scale index: one explode+groupBy builds
-    * per-(doc, term) tf restricted to the query's terms (the filter is
-    * pushed INTO the aggregation input, so the shuffle carries only
-    * query-term postings — the inverted-list slice, not the corpus);
-    * df/idf derive from that same slice; doc lengths ride in a
-    * broadcast-sized per-doc table only for matching docs. All float
-    * steps are IEEE-deterministic given identical inputs; the final
-    * score is rounded (duck_round) BEFORE ranking so cross-engine
-    * 1-ulp log/division drift cannot flip the doc_id tie-break.
+    * Plan shape: one map-only pass gives each doc its length `dl` and
+    * its tf for each distinct query term (one kernel,
+    * [[graft.functions.GraftVector.termCounts]]; a term given twice
+    * counts once). One global aggregate over that pass gives N, the
+    * sum of `dl` and each term's df — a one-row result, broadcast. A
+    * second map-only pass scores only the docs holding at least one
+    * query term, and TakeOrderedAndProject keeps the top n
+    * (per-partition top-n, then one n-row merge), which rank inside one
+    * sorted array rather than a window. The corpus is never shuffled
+    * and nothing is checkpointed. All float steps are
+    * IEEE-deterministic given identical inputs; the final score is
+    * rounded (duck_round) BEFORE ranking so cross-engine 1-ulp
+    * log/division drift cannot flip the doc_id tie-break.
     *
     * k1 = 1.2, b = 0.75 (the standard defaults). Scores use natural
-    * log; avgdl is the exact integer-sum ratio. */
+    * log; avgdl is the exact integer-sum ratio.
+    *
+    * Output: (doc_id, score, n_terms_hit, rn), at most n rows; a doc
+    * without any query term never appears. */
   def bm25TopN(docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], n: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("words"))
-    // lens and tf are each consumed twice (lens by stats + the scoring
-    // join, tf by df + scoring); materializing them caps the corpus at
-    // TWO text scans instead of four — the plan-audited shape
-    val lens = toks.select(col("doc_id"), size(col("words")).cast("long")
-      .as("dl")).localCheckpoint()
-    // N and avgdl as exact scalars broadcast from the tiny aggregate —
-    // no driver collect
-    val stats = lens.agg(count(lit(1)).as("n_docs"),
-      sum("dl").as("sum_dl"))
-    val tf = toks
-      .select(col("doc_id"), explode(col("words")).as("term"))
-      .where(col("term").isin(queryTerms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = tf
-      .join(broadcast(df), "term")
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))))
-      .withColumn("norm", col("tf").cast("double") * (k1 + 1.0) /
-        (col("tf").cast("double") + lit(k1) * (lit(1.0 - b) + lit(b) *
+    val terms = queryTerms.distinct
+    val perDoc = docs
+      .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("words"))
+      .select(col("doc_id"), size(col("words")).cast("long").as("dl"),
+        GraftFunctions.termCounts(col("words"), typedLit(terms)).as("tf"))
+    val hit = terms.indices.map(i => col("tf")(i) > 0)
+    // N and the sum of dl as exact scalars, df per term — no driver
+    // collect
+    val stats = perDoc.agg(count(lit(1)).as("n_docs"),
+      sum("dl").as("sum_dl") +: terms.indices.map(i =>
+        count(when(hit(i), true)).as(s"df$i")): _*)
+    val score = terms.indices.map { i =>
+      val tf = col("tf")(i).cast("double")
+      val df = col(s"df$i")
+      val idf = log(lit(1.0) +
+        (col("n_docs").cast("double") - df + lit(0.5)) /
+          (df.cast("double") + lit(0.5)))
+      val norm = tf * (k1 + 1.0) /
+        (tf + lit(k1) * (lit(1.0 - b) + lit(b) *
           col("dl").cast("double") * col("n_docs").cast("double") /
-          col("sum_dl").cast("double"))))
-      .groupBy("doc_id")
-      .agg(GraftFunctions.duckRound(sum(col("idf") * col("norm")), 6)
-          .as("score"),
-        count(lit(1)).as("n_terms_hit"))
-    // top-n FIRST (TakeOrderedAndProject — distributed per-partition
-    // top-n, no global sort), then rank the n survivors; the global
-    // window runs over n rows, not the corpus
-    scored.orderBy(col("score").desc, col("doc_id")).limit(n)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))))
+          col("sum_dl").cast("double")))
+      when(hit(i), idf * norm).otherwise(lit(0.0))
+    }.reduce(_ + _)
+    perDoc
+      .withColumn("n_terms_hit",
+        hit.map(h => when(h, 1L).otherwise(0L)).reduce(_ + _))
+      .where(col("n_terms_hit") > 0)
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"), GraftFunctions.duckRound(score, 6).as("score"),
+        col("n_terms_hit"))
+      .orderBy(col("score").desc, col("doc_id")).limit(n)
+      // rank the n survivors as one sorted array (score descending via
+      // its exact negation, then doc_id): no window, and the rank does
+      // not depend on the order the limit hands the rows over in
+      .agg(sort_array(collect_list(struct((-col("score")).as("neg"),
+        col("doc_id"), col("score"), col("n_terms_hit")))).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("t.doc_id"), col("t.score"), col("t.n_terms_hit"),
+        (col("pos") + 1).as("rn"))
   }
 }

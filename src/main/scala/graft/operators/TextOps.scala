@@ -665,22 +665,24 @@ object TextOps {
     * of ≥ n tokens contains a duplicated n-token window, and the UNION
     * of duplicated windows is exactly the maximal duplicated spans —
     * so counting n-gram fingerprints replaces the (inherently
-    * sequential) suffix array with three shuffles, all of them
-    * key-partitioned and skew-free:
+    * sequential) suffix array. The fingerprint count is the one global
+    * step; everything else is per document:
     *
-    *   1. explode n-token shingle starts, fingerprint each (48-bit
-    *      md5-prefix here — the hash both engines compute identically;
-    *      at 100 TB widen to 128-bit), groupBy fp → starts whose
-    *      fingerprint occurs ≥ 2 times anywhere (including a repeat
-    *      inside the same document — Lee et al. remove self-repeats
-    *      too);
-    *   2. mark covered tokens WITHOUT exploding n rows per window: a
-    *      token p is inside some duplicated window iff a duplicated
-    *      start exists in [p-n+1, p] — a sliding-window MAX over the
-    *      per-position dup flag (`ROWS n-1 PRECEDING`), one window
-    *      pass per doc, O(1) state;
-    *   3. per-doc rollup: removed-token count, maximal-span count
-    *      (covered-run starts via lag), and the surviving text.
+    *   1. one kernel pass emits each doc's n-token window fingerprints
+    *      (48-bit md5 prefix, [[graft.functions.GraftHash
+    *      .shingleFingerprints]] — the hash both engines compute
+    *      identically; at 100 TB widen to 128-bit), exploded to
+    *      (doc_id, start, fp) rows;
+    *   2. groupBy fp, key-partitioned and skew-free, keeps the
+    *      fingerprints that occur ≥ 2 times anywhere (including a
+    *      repeat inside the same document — Lee et al. remove
+    *      self-repeats too), and the starts semi-join to them;
+    *   3. the duplicated starts group per doc (at most one per token of
+    *      the doc) and join once to the doc's token array, where one
+    *      kernel ([[graft.functions.GraftVector.spanRollup]]) marks the
+    *      covered tokens — token p is removed iff a duplicated start
+    *      lies in [p-n+1, p] — and returns the removed-token count, the
+    *      maximal-span count and the surviving text.
     *
     * vs q171's disjoint 10-token-segment dedup: this removes
     * duplicated spans at ANY offset (q171 only aligned equal
@@ -690,18 +692,16 @@ object TextOps {
     * similar token mass from different places — see the BASELINE.md
     * r9 note for the numbers.
     *
-    * Output: (doc_id, n_tokens, n_removed, n_spans, kept_text). */
+    * Output: (doc_id, n_tokens, n_removed, n_spans, kept_text); a doc
+    * with null text has no row. */
   def exactSubstrDedup(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
     require(n >= 2, s"span granularity n=$n must be >= 2")
-    val w = docs.select(col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("words"))
+    val w = substrWords(docs, idCol, textCol)
     val starts = shingleStarts(w, n)
     val dupFp = starts.groupBy("fp")
       .agg(count(lit(1)).as("cnt")).where(col("cnt") >= 2).select("fp")
-    val dupStarts = starts.join(dupFp, "fp")
-      .select(col("doc_id"), col("p"), lit(1).as("isdup"))
-    spanRollup(w, dupStarts, n)
+    spanRollup(w, starts.join(dupFp, Seq("fp"), "left_semi"), n)
   }
 
   /** Incremental [[exactSubstrDedup]]: remove from `batch` every
@@ -719,54 +719,38 @@ object TextOps {
   def exactSubstrDedupAgainst(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, n: Int = 8): DataFrame = {
     require(n >= 2, s"span granularity n=$n must be >= 2")
-    def toWords(df: DataFrame) = df.select(col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("words"))
-    val indexFp = shingleStarts(toWords(corpus), n)
+    val indexFp = shingleStarts(substrWords(corpus, idCol, textCol), n)
       .select("fp").distinct()
-    val bw = toWords(batch)
-    val dupStarts = shingleStarts(bw, n)
-      .join(indexFp, "fp")
-      .select(col("doc_id"), col("p"), lit(1).as("isdup"))
-    spanRollup(bw, dupStarts, n)
+    val bw = substrWords(batch, idCol, textCol)
+    spanRollup(bw, shingleStarts(bw, n).join(indexFp, Seq("fp"),
+      "left_semi"), n)
   }
 
-  /** Shingle starts (1-based) with the portable 48-bit fingerprint;
-    * docs shorter than n emit none. */
-  private def shingleStarts(w: DataFrame, n: Int): DataFrame =
-    w.where(size(col("words")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(1, size(words) - ${n - 1}),
-           |  i -> struct(i AS s, CAST(conv(substring(
-           |    md5(array_join(slice(words, i, $n), ' ')),
-           |    1, 12), 16, 10) AS BIGINT) AS fp))""".stripMargin))
-        .as("st"))
-      .select(col("doc_id"), col("st.s").as("p"), col("st.fp").as("fp"))
+  /** (doc_id, words): the single-space token split both dedup forms and
+    * the oracle share; null texts are dropped. */
+  private def substrWords(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("words"))
+      .where(col("words").isNotNull)
 
-  /** Sliding-window coverage + per-doc span/survivor rollup shared by
-    * the batch and incremental forms (see [[exactSubstrDedup]]). */
+  /** (doc_id, p, fp): every n-token window's 0-based start and its
+    * 48-bit fingerprint; docs shorter than n emit none. */
+  private def shingleStarts(w: DataFrame, n: Int): DataFrame =
+    w.select(col("doc_id"), posexplode(
+        graft.functions.GraftFunctions.shingleFps(col("words"), lit(n)))
+      .as(Seq("p", "fp")))
+
+  /** Per-doc span/survivor rollup shared by the batch and incremental
+    * forms (see [[exactSubstrDedup]]): the duplicated starts, grouped
+    * per doc, join the doc's tokens once. */
   private def spanRollup(w: DataFrame, dupStarts: DataFrame, n: Int)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = w.select(col("doc_id"),
-        posexplode(col("words")).as(Seq("p0", "word")))
-      .select(col("doc_id"), (col("p0") + 1).as("p"), col("word"))
-    val slide = Window.partitionBy("doc_id").orderBy("p")
-      .rowsBetween(-(n - 1), Window.currentRow)
-    val seq0 = Window.partitionBy("doc_id").orderBy("p")
-    toks.join(dupStarts, Seq("doc_id", "p"), "left")
-      .na.fill(0, Seq("isdup"))
-      .withColumn("cov", max("isdup").over(slide))
-      .withColumn("span_start", (col("cov") === 1 &&
-        coalesce(lag("cov", 1).over(seq0), lit(0)) === 0).cast("int"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum("cov").cast("long").as("n_removed"),
-        sum("span_start").cast("long").as("n_spans"),
-        concat_ws(" ", expr(
-          """transform(filter(
-            |  sort_array(collect_list(struct(p, cov, word))),
-            |  x -> x.cov = 0), x -> x.word)""".stripMargin))
-          .as("kept_text"))
+    val perDoc = dupStarts.groupBy("doc_id")
+      .agg(collect_list("p").as("starts"))
+    w.join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"), graft.functions.GraftFunctions.spanRollup(
+        col("words"), col("starts"), lit(n)).as("r"))
+      .select("doc_id", "r.*")
   }
 
   /** T5-style span-corruption training-example construction (Raffel et

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ClassicConversions
@@ -12,19 +11,8 @@ import graft.plans.ParamLiteral
 /** Generated code depends on a plan's shape, not on its literal values
   * or its stage ids (`GraftSession.prepare`): a statement shape run
   * again with new values hits Spark's codegen cache. Counted with
-  * Spark's own Janino compilation counter, which the forked test JVM
-  * runs one suite at a time. */
+  * [[SparkSpecBase.compilationsOf]]. */
 class CodegenReuseSpec extends SparkSpecBase {
-
-  private def compilations: Long =
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  /** Janino compilations `body` runs. */
-  private def compiled(body: => Unit): Long = {
-    val before = compilations
-    body
-    compilations - before
-  }
 
   /** A table of four one-file commits: ids 1-100, ..., 301-400, with
     * k = id % 7 and qty = id. */
@@ -53,7 +41,7 @@ class CodegenReuseSpec extends SparkSpecBase {
         s"WHERE id BETWEEN $lo AND ${lo + 4}")
     }
     update(0)
-    val later = compiled((1 until 20).foreach(update))
+    val later = compilationsOf((1 until 20).foreach(update))
     assert(later <= 1, s"$later compilations over 19 UPDATEs after the first")
     assert(e.executeDuck("SELECT sum(qty) FROM cgu").collect().head
       .getLong(0) == (1 to 400).sum + (0 until 20).map(i => 5 * (i + 1)).sum)
@@ -69,7 +57,7 @@ class CodegenReuseSpec extends SparkSpecBase {
       bounds.head._2)))
     assert(first.nonEmpty)
     var results = Seq.empty[Seq[String]]
-    val later = compiled {
+    val later = compilationsOf {
       results = bounds.tail.map { case (lo, hi) =>
         rows(e.executeDuck(between("cgs", lo, hi)))
       }
@@ -93,8 +81,8 @@ class CodegenReuseSpec extends SparkSpecBase {
       }.reduce(_ unionByName _))
     val bare = spark.newSession()
     var plain, shaped = Seq.empty[String]
-    val unprepared = compiled { plain = union(bare) }
-    val prepared = compiled { shaped = union(spark) }
+    val unprepared = compilationsOf { plain = union(bare) }
+    val prepared = compilationsOf { shaped = union(spark) }
     // one body, compiled at most once per class loader (driver, tasks)
     assert(prepared <= 2, s"prepared: $prepared, unprepared: $unprepared")
     assert(prepared * 2 < unprepared,

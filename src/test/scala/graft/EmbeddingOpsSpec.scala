@@ -180,6 +180,25 @@ class EmbeddingOpsSpec extends SparkSpecBase {
     assert(quant == exact)
   }
 
+  test("knnQuantizedRerank equals knnQuantizedRerankMargin without its " +
+      "worst_rank column, in at most 5 Spark jobs") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    for ((corpus, qs, m) <- Seq(
+        (clustered, clustered.where(col("vec_id") % 100 === 0), 20),
+        (emb, emb.where(col("vec_id") < 10), 64))) {
+      val margin = EmbeddingOps.knnQuantizedRerankMargin(corpus, qs,
+          "vec_id", "embedding", k = 5, m = m).drop("worst_rank")
+        .collect().map(_.toString).toSeq.sorted
+      var rows = Seq.empty[String]
+      val jobs = jobsOf {
+        rows = EmbeddingOps.knnQuantizedRerank(corpus, qs, "vec_id",
+          "embedding", k = 5, m = m).collect().map(_.toString).toSeq.sorted
+      }
+      assert(rows.nonEmpty && rows == margin)
+      assert(jobs.size <= 5, s"${jobs.size} jobs")
+    }
+  }
+
   test("knnPqRerank equals the exact answer on clustered data and at " +
       "a thin prefilter width") {
     // re-key so consecutive ids CYCLE through clusters: the

@@ -204,4 +204,152 @@ class KernelPropertySpec extends SparkSpecBase {
     assert(base.nonEmpty)
     assert(run("3") == base)
   }
+
+  /** Short seeded token docs over a small pool, so n-token windows
+    * repeat often: multi-byte tokens, empty tokens (double, leading and
+    * trailing spaces) and docs shorter than n. */
+  private def tokenDocs(count: Int, seed: Long): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val pool = Seq("a", "b", "c", "ß", "中文", "テスト", "ñé", "x1",
+      new String(Character.toChars(0x1f600)))
+    (0 until count).map { i =>
+      val toks = (0 until rnd.nextInt(14)).map(_ =>
+        if (rnd.nextInt(8) == 0) "" else pool(rnd.nextInt(pool.size)))
+      (i.toLong, toks.mkString(" "))
+    }
+  }
+
+  private def words(docs: Seq[(Long, String)]) = {
+    import spark.implicits._
+    docs.toDF("doc_id", "text")
+      .select(col("doc_id"), split(col("text"), " ").as("words"))
+  }
+
+  /** The md5-prefix shingle fingerprint as SQL: the formulation the
+    * kernel replaced and the DuckDB oracle computes. */
+  private def sqlFingerprints(n: Int) = expr(
+    s"""CASE WHEN size(words) >= $n THEN transform(
+       |  sequence(1, size(words) - ${n - 1}),
+       |  i -> CAST(conv(substring(md5(array_join(slice(words, i, $n),
+       |    ' ')), 1, 12), 16, 10) AS BIGINT))
+       |ELSE array() END""".stripMargin)
+
+  /** Exact-substring rollup as the window formulation the span kernel
+    * replaced: every token exploded and left-joined to its doc's
+    * duplicated starts (1-based `p`), a sliding-window max for coverage,
+    * a lag for span starts, a sorted collect for the kept text. */
+  private def windowRollup(w: org.apache.spark.sql.DataFrame,
+      dupStarts: org.apache.spark.sql.DataFrame, n: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    val toks = w.select(col("doc_id"),
+        posexplode(col("words")).as(Seq("p0", "word")))
+      .select(col("doc_id"), (col("p0") + 1).as("p"), col("word"))
+    val slide = Window.partitionBy("doc_id").orderBy("p")
+      .rowsBetween(-(n - 1), Window.currentRow)
+    val seq0 = Window.partitionBy("doc_id").orderBy("p")
+    toks.join(dupStarts.select(col("doc_id"), col("p"), lit(1).as("isdup")),
+        Seq("doc_id", "p"), "left")
+      .na.fill(0, Seq("isdup"))
+      .withColumn("cov", max("isdup").over(slide))
+      .withColumn("span_start", (col("cov") === 1 &&
+        coalesce(lag("cov", 1).over(seq0), lit(0)) === 0).cast("int"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"),
+        sum("cov").cast("long").as("n_removed"),
+        sum("span_start").cast("long").as("n_spans"),
+        concat_ws(" ", expr(
+          """transform(filter(
+            |  sort_array(collect_list(struct(p, cov, word))),
+            |  x -> x.cov = 0), x -> x.word)""".stripMargin))
+          .as("kept_text"))
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("shingle_fps is bit-identical to the SQL md5-prefix fingerprint " +
+      "on seeded docs: multi-byte and empty tokens, docs shorter than n") {
+    val docs = tokenDocs(400, 0xF1D0) ++
+      randomStrings(200, 0xF1D1).zipWithIndex.map { case (t, i) =>
+        (1000L + i, t) }
+    val w = words(docs)
+    for (n <- Seq(2, 3, 8)) {
+      val got = w.select(col("doc_id"),
+        GraftFunctions.shingleFps(col("words"), lit(n)).as("k"),
+        sqlFingerprints(n).as("r"))
+      assert(got.where(size(col("k")) > 0).count() > 100, s"n=$n")
+      val bad = got.where(!(col("k") === col("r"))).collect()
+      assert(bad.isEmpty, s"n=$n: ${bad.take(3).mkString("; ")}")
+    }
+  }
+
+  test("span_rollup equals the window formulation on seeded docs with " +
+      "random duplicated starts: overlapping and adjacent windows, " +
+      "n = 2, 3, 5") {
+    import spark.implicits._
+    val fixed = Seq(
+      (9001L, "a b c d e f g h"),   // adjacent windows at 0 and n
+      (9002L, "a b c d e f g h"),   // overlapping windows at 0 and 1
+      (9003L, "a"),                 // shorter than every n
+      (9004L, "a  b   c d"))        // empty tokens inside a window
+    val docs = tokenDocs(300, 0x5BA2) ++ fixed
+    val multiSpan = Seq(2, 3, 5).map { n =>
+      val rnd = new scala.util.Random(n)
+      val starts = docs.flatMap { case (id, text) =>
+        val len = text.split(" ", -1).length
+        id match {
+          case 9001L => Seq(id -> 0, id -> n).filter(_._2 <= len - n)
+          case 9002L => Seq(id -> 0, id -> 1)
+          case 9004L => Seq(id -> 1)
+          case _ => (0 to len - n).filter(_ => rnd.nextInt(10) < 3)
+            .map(id -> _)
+        }
+      }.toDF("doc_id", "p")
+      val w = words(docs)
+      val kernel = w.join(starts.groupBy("doc_id")
+          .agg(collect_list("p").as("starts")), Seq("doc_id"), "left")
+        .select(col("doc_id"), GraftFunctions.spanRollup(col("words"),
+          col("starts"), lit(n)).as("r"))
+        .select("doc_id", "r.*")
+      val reference = windowRollup(w,
+        starts.select(col("doc_id"), (col("p") + 1).as("p")), n)
+      assert(sortedRows(kernel) == sortedRows(reference), s"n=$n")
+      kernel.where(col("n_spans") > 1).count()
+    }
+    assert(multiSpan.sum > 10, s"docs with two or more spans: $multiSpan")
+  }
+
+  test("exactSubstrDedup and exactSubstrDedupAgainst equal the string-SQL " +
+      "and window plan they replaced on seeded corpora") {
+    import spark.implicits._
+    def sqlStarts(w: org.apache.spark.sql.DataFrame, n: Int) =
+      w.select(col("doc_id"), posexplode(sqlFingerprints(n))
+        .as(Seq("p0", "fp")))
+        .select(col("doc_id"), (col("p0") + 1).as("p"), col("fp"))
+    def reference(docs: Seq[(Long, String)], n: Int) = {
+      val w = words(docs)
+      val starts = sqlStarts(w, n)
+      val dupFp = starts.groupBy("fp").count().where(col("count") >= 2)
+      windowRollup(w, starts.join(dupFp, "fp"), n)
+    }
+    def referenceAgainst(corpus: Seq[(Long, String)],
+        batch: Seq[(Long, String)], n: Int) = {
+      val bw = words(batch)
+      windowRollup(bw, sqlStarts(bw, n).join(
+        sqlStarts(words(corpus), n).select("fp").distinct(), "fp"), n)
+    }
+    val cases = Seq(tokenDocs(300, 0xE5A1) -> 2, tokenDocs(300, 0xE5A2) -> 3,
+      dupCorpus(200, 0xE5A3) -> 8)
+    for ((docs, n) <- cases) {
+      val got = TextOps.exactSubstrDedup(docs.toDF("doc_id", "text"),
+        "doc_id", "text", n)
+      assert(sortedRows(got) == sortedRows(reference(docs, n)), s"n=$n")
+      val (corpus, batch) = docs.partition(_._1 % 3 != 0)
+      val against = TextOps.exactSubstrDedupAgainst(
+        corpus.toDF("doc_id", "text"), batch.toDF("doc_id", "text"),
+        "doc_id", "text", n)
+      assert(sortedRows(against) ==
+        sortedRows(referenceAgainst(corpus, batch, n)), s"against, n=$n")
+    }
+  }
 }

@@ -145,4 +145,86 @@ class RetrievalOpsSpec extends SparkSpecBase {
     assert(c == b)
     assert(c(1) == Seq.fill(8)(0.0)) // null ⇒ empty-string embedding
   }
+
+  /** Five docs for BM25: docs 2 and 5 hold the same terms at the same
+    * length, so they tie on every score; doc 3 holds no query term. */
+  private def bm25Docs = Seq(
+    (1L, "hash join hash"), (2L, "merge join"), (3L, "nothing here at all"),
+    (4L, "join"), (5L, "join merge")).toDF("doc_id", "text")
+
+  /** Okapi BM25 by hand over `docs` (k1 = 1.2, b = 0.75, Lucene idf,
+    * terms summed in query order), rounded to 6 dp: (doc_id, score,
+    * n_terms_hit) for every doc holding a term, best first. */
+  private def handBm25(docs: Seq[(Long, String)],
+      terms: Seq[String]): Seq[(Long, Double, Long)] = {
+    val toks = docs.map { case (id, t) => id -> t.split(" ", -1).toSeq }
+    val nDocs = toks.size.toDouble
+    val sumDl = toks.map(_._2.size).sum.toDouble
+    val df = terms.map(t => t -> toks.count(_._2.contains(t))).toMap
+    toks.flatMap { case (id, ws) =>
+      val hit = terms.filter(ws.contains)
+      if (hit.isEmpty) None
+      else {
+        val s = hit.map { t =>
+          val tf = ws.count(_ == t).toDouble
+          val idf = math.log(1.0 + (nDocs - df(t) + 0.5) / (df(t) + 0.5))
+          idf * (tf * (1.2 + 1.0) /
+            (tf + 1.2 * (0.25 + 0.75 * ws.size * nDocs / sumDl)))
+        }.reduce(_ + _)
+        Some((id, graft.functions.GraftVector.duckRound(s, 6),
+          hit.size.toLong))
+      }
+    }.sortBy { case (id, s, _) => (-s, id) }
+  }
+
+  private def bm25Rows(terms: Seq[String], n: Int) =
+    RetrievalOps.bm25TopN(bm25Docs, "doc_id", "text", terms, n)
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
+        r.getInt(3))).sortBy(_._4).toSeq
+
+  test("bm25TopN scores equal hand-computed Okapi scores; a doc without " +
+      "any query term never appears, and fewer matches give fewer rows") {
+    val docs = bm25Docs.as[(Long, String)].collect().toSeq
+    val want = handBm25(docs, Seq("hash", "join", "merge"))
+      .zipWithIndex.map { case ((id, s, h), i) => (id, s, h, i + 1) }
+    val got = bm25Rows(Seq("hash", "join", "merge"), n = 10)
+    assert(got == want)
+    assert(got.size == 4 && !got.exists(_._1 == 3L), got)
+    assert(bm25Rows(Seq("hash", "join", "merge"), n = 2) == want.take(2))
+  }
+
+  test("bm25TopN counts a query term given twice once, and breaks a " +
+      "tie on the rounded score by doc_id") {
+    val once = bm25Rows(Seq("join", "merge"), n = 10)
+    assert(bm25Rows(Seq("join", "merge", "join"), n = 10) == once)
+    // docs 2 and 5 tie; 2 ranks first, and a top-3 cut keeps only it
+    val tied = once.filter(r => r._1 == 2L || r._1 == 5L)
+    assert(tied.map(_._2).distinct.size == 1, once)
+    assert(tied.map(_._1) == Seq(2L, 5L) && tied(1)._4 == tied(0)._4 + 1,
+      once)
+    val top = bm25Rows(Seq("join", "merge"), n = tied(0)._4)
+    assert(top.map(_._1).contains(2L) && !top.map(_._1).contains(5L), top)
+  }
+
+  test("bm25TopN runs at most 4 Spark jobs, logs no WARN, and plans no " +
+      "window") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val terms = Seq("hash", "join", "merge", "filter")
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    var jobs = Seq.empty[SpecJob]
+    val warned = warningsOf {
+      jobs = jobsOf {
+        rows = RetrievalOps.bm25TopN(docs, "doc_id", "text", terms, 10)
+          .collect().toSeq
+      }
+    }
+    assert(rows.size == 10 && rows.map(_.getInt(3)).sorted == (1 to 10))
+    assert(jobs.size <= 4, jobs.map(j => s"job ${j.id}: " +
+      j.stages.headOption.map(_.linesIterator.next()).getOrElse(""))
+      .mkString("\n"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    val plan = RetrievalOps.bm25TopN(docs, "doc_id", "text", terms, 10)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), plan)
+  }
 }

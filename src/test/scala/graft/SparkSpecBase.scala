@@ -6,6 +6,7 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -49,6 +50,14 @@ abstract class SparkSpecBase extends AnyFunSuite {
       appender.stop()
     }
     seen.synchronized(seen.toSeq)
+  }
+
+  /** Janino compilations `body` runs: Spark's own counter, which the
+    * forked test JVM runs one suite at a time. */
+  protected def compilationsOf(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
   /** Every job `body` starts, in start order. */

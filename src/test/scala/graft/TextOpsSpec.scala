@@ -608,4 +608,20 @@ class TextOpsSpec extends SparkSpecBase {
     assert(out(0).getString(4) == "gapone gaptwo gapthree")
     assert(out(1).getString(4) == "pre1 pre2 post post2")
   }
+
+  test("exactSubstrDedup runs at most 5 Spark jobs and plans no window") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf {
+      rows = TextOps.exactSubstrDedup(docs, "doc_id", "text", n = 8)
+        .collect().toSeq
+    }
+    assert(rows.size == docs.where(col("text").isNotNull).count())
+    assert(jobs.size <= 5, jobs.map(j => s"job ${j.id}: " +
+      j.stages.headOption.map(_.linesIterator.next()).getOrElse(""))
+      .mkString("\n"))
+    val plan = TextOps.exactSubstrDedup(docs, "doc_id", "text", n = 8)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), plan)
+  }
 }
