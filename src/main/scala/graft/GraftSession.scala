@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.GraftFunctions
-import graft.plans.ParamLiterals
+import graft.plans.{ParamLiterals, SmallInputPlanning}
 
 /** The one place graft builds and prepares a SparkSession. Every main
   * and the test fixture go through [[local]], so a session conf is
@@ -49,17 +49,27 @@ object GraftSession {
     *    code reads the value instead of inlining it;
     *  - names whole-stage classes without their stage id
     *    (`spark.sql.codegen.useIdInClassName=false`), so identical
-    *    stages share one class within and across plans.
+    *    stages share one class within and across plans;
+    *  - installs [[graft.plans.SmallInputPlanning]] as a planner
+    *    strategy, ahead of Spark's own: a global sort over a measured
+    *    input, or an aggregate over a listed file scan, of at most AQE's
+    *    coalescing floor (`coalescePartitions.minPartitionSize`) runs in
+    *    one partition without its exchange. A SELECT's
+    *    `GROUP BY k ORDER BY k` over a small table is then one job, not
+    *    four; inputs above the floor plan as before.
     *
-    * With both, the generated source depends on the plan's shape alone,
-    * and a statement shape seen before hits Spark's codegen cache
-    * whatever its values. */
+    * With the optimizer rule and the class naming, the generated source
+    * depends on the plan's shape alone, and a statement shape seen before
+    * hits Spark's codegen cache whatever its values. */
   def prepare(spark: SparkSession): SparkSession = synchronized {
     GraftFunctions.register(spark)
     val rules = spark.experimental.extraOptimizations
     if (!rules.contains(ParamLiterals))
       spark.experimental.extraOptimizations = rules :+ ParamLiterals
     spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(SmallInputPlanning))
+      spark.experimental.extraStrategies = SmallInputPlanning +: strategies
     spark
   }
 }

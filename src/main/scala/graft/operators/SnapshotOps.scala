@@ -1129,16 +1129,16 @@ object SnapshotOps {
         // never resurrect an equality-deleted row as new data), read
         // once; the checkpoint's blocks release before every exit.
         // cond and `update` see the LOGICAL view (identity un-evolved).
-        val hits = logicalView(readUnitsVisible(spark, tableDir, units,
-            dvs, eqDeleteUnits(tableDir, base), tagged = true,
-            mergeSchema = mapping.nonEmpty,
+        val hits = checkpoint(logicalView(readUnitsVisible(spark,
+            tableDir, units, dvs, eqDeleteUnits(tableDir, base),
+            tagged = true, mergeSchema = mapping.nonEmpty,
             anchor = if (candSet.isDefined && mapping.nonEmpty)
               fullSchema else null,
             keep = candSet.map(cs => (e: FileEntry) =>
               cs.contains(localPath(e.path)))
               .getOrElse((_: FileEntry) => true)),
             mapping, extra = Seq("__file", "__pos"))
-          .where(cond).localCheckpoint()
+          .where(cond))
         val (dvWritten, written) = try {
           val dvW = writeFiles(spark, tableDir, hits.select(
             col("__file").as(DvFileCol), col("__pos").as(DvPosCol)),
@@ -1325,6 +1325,14 @@ object SnapshotOps {
     * (the carried-forward base value is replaced) — what
     * [[versionAsOf]] time travel resolves against. */
   private val TsKey = "_ts"
+
+  /** An eager local checkpoint of `df`, sized by the bytes its blocks
+    * hold ([[org.apache.spark.sql.graft.PlanBridge.storedStats]]) rather
+    * than by the estimate of the plan it came from: a MERGE's resolve
+    * carries a join's estimate, and [[writeFiles]]' one-file rule reads
+    * the size of what it writes. */
+  private def checkpoint(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.PlanBridge.storedStats(df.localCheckpoint())
 
   /** Release a localCheckpoint's blocks (the LogicalRDD's cache) —
     * commit verbs checkpoint their matched/source rows per call, and a
@@ -3612,7 +3620,7 @@ object SnapshotOps {
     if (alreadyIn(txn, snapshotMeta(tableDir, pre)))
       return Committed(pre, 0, 0, 0, skipped = true)
     val keys = keyCols.map(col)
-    val src = source.localCheckpoint()
+    val src = checkpoint(source)
     val probe = src.select(keys: _*)
     try commitMergeWith(spark, tableDir, keyCols, probe, s"MERGE $tableDir",
         txn) { base =>
@@ -3785,8 +3793,8 @@ object SnapshotOps {
         }
         val cols = snap.columns.filterNot(c => c == "__file" || c == "__pos")
         val resolved = phase("resolve")(
-          resolve(snap.select((cols :+ "__file").map(col).toIndexedSeq: _*))
-            .localCheckpoint())
+          checkpoint(resolve(snap.select(
+            (cols :+ "__file").map(col).toIndexedSeq: _*))))
         try {
           val kind = col(MergeKind)
           val changes = kind =!= MergeCarry

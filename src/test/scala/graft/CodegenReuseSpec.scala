@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.ClassicConversions
 import org.apache.spark.sql.execution.{ExtendedMode, QueryExecution}
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.plans.ParamLiteral
+import graft.plans.{ParamLiteral, SmallInputPlanning}
 
 /** Generated code depends on a plan's shape, not on its literal values
   * or its stage ids (`GraftSession.prepare`): a statement shape run
@@ -99,7 +99,11 @@ class CodegenReuseSpec extends SparkSpecBase {
     def qe(s: org.apache.spark.sql.SparkSession) =
       new QueryExecution(ClassicConversions.castToImpl(s), analyzed)
     val withRule = qe(spark)
-    val without = qe(spark.newSession())
+    // a new session has none of graft's preparation; it gets the planner
+    // strategy, so the two plans differ by the optimizer rule alone
+    val bare = spark.newSession()
+    bare.experimental.extraStrategies = Seq(SmallInputPlanning)
+    val without = qe(bare)
     def params(p: LogicalPlan) = p.collect {
       case n => n.expressions.flatMap(_.collect { case l: ParamLiteral => l })
     }.flatten

@@ -148,6 +148,27 @@ class MergeBudgetSpec extends SparkSpecBase {
     e.close()
   }
 
+  test("a 100-row MERGE into a 5,000-row table writes one file") {
+    val e = new Engine(spark)
+    e.register("mbf", spark.range(5000).selectExpr("CAST(id AS int) AS id",
+      "CAST(id % 7 AS int) AS k", "CAST(id AS int) AS qty"))
+    // the first INSERT makes the registered frame a snapshot table
+    e.executeDuck("INSERT INTO mbf VALUES (5000, 0, 5000)")
+    // 60 matched ids across the table and 40 fresh ones
+    val src = (0 until 60).map(i => 83 * i) ++ (6000 until 6040)
+    e.executeDuck("CREATE OR REPLACE TABLE mbf_stg AS SELECT * FROM " +
+      "(VALUES " + src.map(i => s"($i, ${-i - 1})").mkString(", ") +
+      ") AS v(sid, sqty)")
+    e.executeDuck(upsert("mbf"))
+    val c = e.lastCommit("mbf")
+    assert(c.written == 1, c.toString)
+    assert(e.executeDuck("SELECT count(*) FROM mbf").collect()(0)
+      .getLong(0) == 5041L)
+    assert(rowsOf(e, "SELECT id, qty FROM mbf WHERE qty < 0 ORDER BY id") ==
+      src.sorted.map(i => i -> (-i - 1)))
+    e.close()
+  }
+
   test("three rounds of the upsert MERGE grow the table by at most two " +
       "files each") {
     val e = new Engine(spark)

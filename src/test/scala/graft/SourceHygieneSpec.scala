@@ -24,10 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SnapshotOps.casCommit`, so the CAS protocol, its retry budgets and
   * its conflict count live in one place.
   *
-  * One session preparation: graft's functions, its optimizer rules and
-  * its codegen naming are put into a session by `GraftSession.prepare`
-  * alone (`BinnedRangeJoinRule.install` adds its opt-in rule), so a
-  * session graft did not build gets the same setup as one it did.
+  * One session preparation: graft's functions, its optimizer rules, its
+  * planner strategies and its codegen naming are put into a session by
+  * `GraftSession.prepare` alone (`BinnedRangeJoinRule.install` adds its
+  * opt-in rule), so a session graft did not build gets the same setup
+  * as one it did.
   *
   * One parquet reader: the metadata plane and the snapshot sources read
   * table-owned parquet files only through `SnapshotOps.readParquet`,
@@ -124,7 +125,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     // spelled in pieces so this file does not match itself
     val register = "GraftFunctions" + ".register("
     val naming = "useIdIn" + "ClassName"
-    val assign = ("""extraOptimizations\s*""" + "=(?!=)").r
+    // an optimizer rule or a planner strategy put into the session, by
+    // `=`, `++=`, `:+=` or `+:=`
+    val assign = ("""extra(Optimizations|Strategies)\s*[+:]*""" + "=(?!=)").r
     val prepare = "GraftSession.scala" -> "prepare"
     // (what a line does, the members allowed to do it)
     val checks = Seq[(String => Boolean, Set[(String, String)])](
